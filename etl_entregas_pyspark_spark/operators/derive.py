@@ -4,8 +4,12 @@
 
 All expressions are built-in Catalyst functions (zero Python UDFs), so the
 whole enrichment stage stays inside whole-stage codegen. The stage applies
-them in a single ``select`` (one projection node) rather than 20+ chained
-``withColumn`` calls — identical semantics, far less analyzer overhead.
+them in four projection layers rather than 20+ chained ``withColumn``
+calls: the shared intermediates are computed once in the first three, and
+the final ``select`` reads them by name. A single ``select`` that inlines
+them is evaluated per use once Catalyst merges it into the deduplicating
+aggregate below it; the layers keep ``CollapseProject`` from merging them
+(SCALE.md, "Layered derive projection").
 
 Parity traps honored (SURVEY §7):
 - doubles, not decimals, for 18-decimal inputs incl. ``0E-18`` (F1);
@@ -125,11 +129,16 @@ def region_code(route_col: str) -> Column:
 
 
 def derive_all(df: DataFrame, config: Mapping[str, Any]) -> DataFrame:
-    """The full enrichment stage: F1–F19 in one projection.
+    """The full enrichment stage: F1–F19 as layered projections.
 
     Matches the reference's ``transform()`` output column set
     (``src/etl_entregas.py:213-391``), including dropping the transient
-    ``fecha_date``.
+    ``fecha_date``. Each shared intermediate (typed ``precio``/``cantidad``,
+    ``fecha_date``, ``cantidad_unidades``, ``dia_semana``, ``dia_proceso``,
+    ``precio_total``) is computed in an earlier projection layer and read
+    by name downstream, so it is evaluated once per row even when Catalyst fuses
+    the stage into a ``dropDuplicates`` aggregate (SCALE.md, "Layered
+    derive projection").
     """
     rules = config.get("business_rules", {})
     factors = rules.get("units_conversion", {"CS": 20, "ST": 1})
@@ -137,31 +146,39 @@ def derive_all(df: DataFrame, config: Mapping[str, Any]) -> DataFrame:
     bonus = rules.get("delivery_types", {}).get("bonus", [])
     countries = config.get("country_names", {})
 
-    precio = cast_double("precio")
-    cantidad = cast_double("cantidad")
-    qty_units = unit_conversion(cantidad, "unidad", factors)
-    p_total = total_price(precio, qty_units)
-    fecha_date = F.to_date(F.col("fecha_proceso"), "yyyyMMdd")
-    dow = F.dayofweek(fecha_date)
-    dia = date_part_from_string("fecha_proceso", "day")
+    layered = (
+        df.withColumns({
+            "precio": cast_double("precio"),
+            "cantidad": cast_double("cantidad"),
+            "fecha_date": F.to_date(F.col("fecha_proceso"), "yyyyMMdd"),
+        })
+        .withColumns({
+            "cantidad_unidades": unit_conversion(F.col("cantidad"), "unidad", factors),
+            "dia_semana": F.dayofweek(F.col("fecha_date")),
+            "dia_proceso": date_part_from_string("fecha_proceso", "day"),
+        })
+        .withColumn("precio_total", total_price(F.col("precio"), F.col("cantidad_unidades")))
+    )
+    precio, qty_units, p_total = F.col("precio"), F.col("cantidad_unidades"), F.col("precio_total")
+    fecha_date, dow, dia = F.col("fecha_date"), F.col("dia_semana"), F.col("dia_proceso")
 
-    return df.select(
+    return layered.select(
         *[F.col(c) for c in df.columns if c not in ("precio", "cantidad")],
-        precio.alias("precio"),
-        cantidad.alias("cantidad"),
-        qty_units.alias("cantidad_unidades"),
+        precio,
+        F.col("cantidad"),
+        qty_units,
         delivery_category("tipo_entrega", routine, bonus).alias("categoria_entrega"),
         bool_flag(F.col("tipo_entrega").isin(list(routine))).alias("es_entrega_rutina"),
         bool_flag(F.col("tipo_entrega").isin(list(bonus))).alias("es_entrega_bonificacion"),
-        p_total.alias("precio_total"),
+        p_total,
         map_lookup(F.upper(F.col("pais")), countries).alias("nombre_pais"),
         F.current_timestamp().alias("fecha_procesamiento_etl"),
         guarded_ratio(precio, qty_units, 4).alias("precio_por_unidad"),
         bool_flag(precio == 0).alias("es_bonificacion_gratuita"),
         date_part_from_string("fecha_proceso", "year").alias("anio_proceso"),
         date_part_from_string("fecha_proceso", "month").alias("mes_proceso"),
-        dia.alias("dia_proceso"),
-        dow.alias("dia_semana"),
+        dia,
+        dow,
         day_name_es(dow).alias("nombre_dia_semana"),
         F.weekofyear(fecha_date).alias("semana_del_anio"),
         F.quarter(fecha_date).alias("trimestre"),

@@ -7,7 +7,8 @@ Differences from the reference, all scale-motivated (SURVEY §4.3):
   11 uncached count() actions;
 - sink: distributed ``partitionBy`` writer instead of a driver-side
   toPandas() loop;
-- enrichment: single-select projection instead of 20+ withColumn calls.
+- enrichment: four projection layers, each shared intermediate computed
+  once, instead of 20+ withColumn calls.
 
 Stage outputs are pure DataFrame→DataFrame, so any stage is usable alone
 (library entry point parity, SURVEY §3.2).

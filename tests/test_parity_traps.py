@@ -1,10 +1,13 @@
 """Explicit tests for every parity trap in SURVEY §7 — the behaviors that
 are easy to "fix" into incorrectness."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_entregas_pyspark_spark.operators import derive, filters
+from tests.conftest import REFERENCE_CSV
 
 
 @pytest.fixture(scope="module")
@@ -111,13 +114,13 @@ class TestSurvey7Traps:
 
 
 class TestGoldenPartitionCounts:
+    @pytest.mark.skipif(not os.path.exists(REFERENCE_CSV), reason="reference CSV unavailable")
     def test_per_partition_rows(self, spark, tmp_path):
         """BASELINE per-partition distribution over the golden CSV:
         the 123 output rows split across the 6 dates exactly as published
         (docs/data_flow_diagram.md:367-384)."""
         from etl_entregas_pyspark_spark.config import load_config
         from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
-        from tests.conftest import REFERENCE_CSV
 
         cfg = load_config(dotlist=[
             f"paths.input_file={REFERENCE_CSV}",
@@ -132,3 +135,70 @@ class TestGoldenPartitionCounts:
         }
         assert sum(counts.values()) == 123
         assert len(counts) == 6
+
+
+DERIVED_SCHEMA = [
+    ("pais", "string"), ("fecha_proceso", "string"), ("transporte", "string"),
+    ("ruta", "string"), ("tipo_entrega", "string"), ("material", "string"),
+    ("unidad", "string"), ("precio", "double"), ("cantidad", "double"),
+    ("cantidad_unidades", "double"), ("categoria_entrega", "string"),
+    ("es_entrega_rutina", "boolean"), ("es_entrega_bonificacion", "boolean"),
+    ("precio_total", "double"), ("nombre_pais", "string"),
+    ("fecha_procesamiento_etl", "timestamp"), ("precio_por_unidad", "double"),
+    ("es_bonificacion_gratuita", "boolean"), ("anio_proceso", "int"),
+    ("mes_proceso", "int"), ("dia_proceso", "int"), ("dia_semana", "int"),
+    ("nombre_dia_semana", "string"), ("semana_del_anio", "int"),
+    ("trimestre", "int"), ("periodo_mes", "string"), ("rango_volumen", "string"),
+    ("es_alto_valor", "boolean"), ("codigo_region", "string"),
+]
+
+
+class TestLayeredDerive:
+    """derive_all computes each shared intermediate once per row, also when
+    Catalyst merges it into the dedup aggregate (SCALE.md, "Layered derive
+    projection")."""
+
+    @pytest.fixture(scope="class")
+    def mixed(self, spark):
+        # 2025-01-12..18 is Sunday..Saturday; every day gets each unit case.
+        cases = [
+            ("ZPRE", "10.5", "2.0", "CS"),
+            ("Z04", "0E-18", "3.0", "ST"),
+            ("ZVE1", "7.25", "0", "KG"),
+            ("COBR", "1200.0", "1.0", "ST"),
+        ]
+        rows = [
+            ("GT", f"202501{day}", "67053596", None if day == 13 else f"91{day}885", t, "M", p, q, u)
+            for day in range(12, 19)
+            for t, p, q, u in cases
+        ]
+        schema = ", ".join(
+            f"{c} string"
+            for c in ["pais", "fecha_proceso", "transporte", "ruta", "tipo_entrega",
+                      "material", "precio", "cantidad", "unidad"]
+        )
+        return spark.createDataFrame(rows, schema)
+
+    def test_shared_subexpressions_appear_once_over_dedup(self, mixed):
+        plan = derive.derive_all(mixed.dropDuplicates(), CONFIG)._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("gettimestamp") == 1, plan
+        assert plan.count("CASE WHEN (unidad") == 1, plan
+
+    def test_dedup_path_matches_plain_path(self, mixed):
+        def derived(df):
+            return derive.derive_all(df, CONFIG).drop("fecha_procesamiento_etl")
+
+        plain = derived(mixed).collect()
+        fused = derived(mixed.dropDuplicates()).collect()
+        assert len(plain) == 28
+        assert sorted(map(tuple, plain)) == sorted(map(tuple, fused))
+        days = {(r.dia_semana, r.nombre_dia_semana) for r in fused}
+        assert days == {
+            (1, "Domingo"), (2, "Lunes"), (3, "Martes"), (4, "Miércoles"),
+            (5, "Jueves"), (6, "Viernes"), (7, "Sábado"),
+        }
+
+    def test_schema_pinned_and_no_transient_column(self, mixed):
+        out = derive.derive_all(mixed.dropDuplicates(), CONFIG)
+        assert out.dtypes == DERIVED_SCHEMA
+        assert "fecha_date" not in out.columns
