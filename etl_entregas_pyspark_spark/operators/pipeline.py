@@ -3,11 +3,12 @@
 standardize → load) recomposed from the operator library.
 
 Differences from the reference, all scale-motivated (SURVEY §4.3):
-- metrics: one aggregation pass over a cached post-quality frame instead of
-  11 uncached count() actions;
+- metrics: one two-phase aggregate over the raw scan
+  (``quality.metrics_frame``), nothing cached, instead of 11 uncached
+  count() actions;
 - sink: distributed ``partitionBy`` writer instead of a driver-side
   toPandas() loop;
-- enrichment: four projection layers, each shared intermediate computed
+- enrichment: layered projections, each shared intermediate computed
   once, instead of 20+ withColumn calls.
 
 Stage outputs are pure DataFrame→DataFrame, so any stage is usable alone

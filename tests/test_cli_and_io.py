@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from etl_entregas_pyspark_spark.__main__ import main, parse_arguments
 from etl_entregas_pyspark_spark.io.readers import read_csv_raw, read_json, read_orc, read_parquet
 from etl_entregas_pyspark_spark.io.writers import write_partitioned
-from tests.conftest import REFERENCE_CSV
+from tests.conftest import FIXTURE_CSV, FIXTURE_LADDER, REFERENCE_CSV
 
 
 class TestCLI:
@@ -44,6 +44,25 @@ class TestCLI:
         assert out.returncode == 0, out.stderr[-2000:]
         metrics = json.loads(out.stdout[out.stdout.index("{"):])
         assert metrics["data_quality"]["final_rows"] == 123
+
+    def test_dry_run_end_to_end_fixture(self, tmp_path):
+        """The same CLI contract over the committed synthetic CSV, so it
+        runs where the reference CSV is absent."""
+        out = subprocess.run(
+            [
+                sys.executable, "-m", "etl_entregas_pyspark_spark",
+                "--dry-run",
+                f"paths.input_file={FIXTURE_CSV}",
+                f"paths.output_base={tmp_path}/out",
+                "spark.master=local[2]",
+                "spark.configs.spark.ui.enabled=false",
+            ],
+            capture_output=True, text=True, timeout=240,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        metrics = json.loads(out.stdout[out.stdout.index("{"):])
+        assert metrics["data_quality"] == FIXTURE_LADDER
+        assert not (tmp_path / "out").exists()
 
 
 class TestIORoundTrips:

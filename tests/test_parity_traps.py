@@ -2,12 +2,14 @@
 are easy to "fix" into incorrectness."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from etl_entregas_pyspark_spark.operators import derive, filters
-from tests.conftest import REFERENCE_CSV
+from tests.conftest import FIXTURE_CSV, FIXTURE_PARTITION_ROWS, REFERENCE_CSV
 
 
 @pytest.fixture(scope="module")
@@ -136,6 +138,25 @@ class TestGoldenPartitionCounts:
         assert sum(counts.values()) == 123
         assert len(counts) == 6
 
+    def test_per_partition_rows_fixture(self, spark, tmp_path):
+        """The same stage chain over the committed synthetic CSV: its
+        hand-derived per-date split (tests/conftest.py)."""
+        from etl_entregas_pyspark_spark.config import load_config
+        from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
+
+        cfg = load_config(dotlist=[
+            f"paths.input_file={FIXTURE_CSV}",
+            f"paths.output_base={tmp_path}/out",
+        ])
+        pipe = EntregasPipeline(spark, cfg)
+        cleaned, _ = pipe.apply_data_quality(pipe.extract())
+        final = pipe.standardize_columns(pipe.transform(pipe.apply_filters(cleaned)))
+        counts = {
+            r.fecha_proceso: r.n
+            for r in final.groupBy("fecha_proceso").agg(F.count("*").alias("n")).collect()
+        }
+        assert counts == FIXTURE_PARTITION_ROWS
+
 
 DERIVED_SCHEMA = [
     ("pais", "string"), ("fecha_proceso", "string"), ("transporte", "string"),
@@ -202,3 +223,29 @@ class TestLayeredDerive:
         out = derive.derive_all(mixed.dropDuplicates(), CONFIG)
         assert out.dtypes == DERIVED_SCHEMA
         assert "fecha_date" not in out.columns
+
+    def test_generated_code_identical_across_runs(self, mixed):
+        """The per-run stamp must not be inlined into the generated Java:
+        an identical source hits Spark's codegen cache, so the dedup→derive
+        class compiles once per session, not once per run."""
+        def sources():
+            out = derive.derive_all(mixed.dropDuplicates(), CONFIG)
+            out.collect()
+            seq = out._jdf.queryExecution().debug().codegenToSeq()
+            return [seq.apply(i)._2() for i in range(seq.size())]
+
+        first, second = sources(), sources()
+        assert first and first == second
+
+    def test_stamp_one_value_per_run(self, mixed):
+        before = time.time()
+        out = derive.derive_all(mixed.dropDuplicates(), CONFIG)
+        rows = out.collect()
+        after = time.time()
+        assert len(rows) == mixed.count() == 28
+        stamps = {r.fecha_procesamiento_etl for r in rows}
+        assert len(stamps) == 1
+        assert before <= stamps.pop().timestamp() <= after
+        field = out.schema["fecha_procesamiento_etl"]
+        assert field.dataType == TimestampType()
+        assert not field.nullable
