@@ -19,7 +19,10 @@ source, so the stage's class would differ on every run and be compiled
 again. An array literal is passed to the generated code by reference, so
 the source stays identical across runs and Spark's codegen cache reuses the
 compiled class; exploding the one-element, non-null array keeps exactly one
-row per input row and a non-nullable ``TimestampType`` column.
+row per input row and a non-nullable ``TimestampType`` column. This saves
+only on the second and later runs in one ``SparkSession``, i.e. for a
+caller that keeps the session and calls ``EntregasPipeline.run`` again;
+the CLI runs once per session and compiles the class once either way.
 
 Parity traps honored (SURVEY §7):
 - doubles, not decimals, for 18-decimal inputs incl. ``0E-18`` (F1);
@@ -150,11 +153,7 @@ def derive_all(df: DataFrame, config: Mapping[str, Any]) -> DataFrame:
     the stage into a ``dropDuplicates`` aggregate (SCALE.md, "Layered
     derive projection").
 
-    The last layer adds ``fecha_procesamiento_etl`` as an exploded
-    one-element array so the per-run timestamp reaches the generated code
-    by reference rather than as inlined source; the stage's Java class is
-    then the same on every run and compiles once per session (module
-    docstring).
+    The stamp is an exploded one-element array; see the module docstring.
     """
     rules = config.get("business_rules", {})
     factors = rules.get("units_conversion", {"CS": 20, "ST": 1})

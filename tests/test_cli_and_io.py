@@ -14,6 +14,24 @@ from etl_entregas_pyspark_spark.io.writers import write_partitioned
 from tests.conftest import FIXTURE_CSV, FIXTURE_LADDER, REFERENCE_CSV
 
 
+def _dry_run(tmp_path, csv):
+    """``python -m etl_entregas_pyspark_spark --dry-run`` over ``csv`` in a
+    fresh JVM; returns the printed metrics."""
+    out = subprocess.run(
+        [
+            sys.executable, "-m", "etl_entregas_pyspark_spark",
+            "--dry-run",
+            f"paths.input_file={csv}",
+            f"paths.output_base={tmp_path}/out",
+            "spark.master=local[2]",
+            "spark.configs.spark.ui.enabled=false",
+        ],
+        capture_output=True, text=True, timeout=240,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout[out.stdout.index("{"):])
+
+
 class TestCLI:
     def test_show_config_applies_overrides(self, capsys):
         rc = main(["--show-config", "filters.country=GT", "spark.master=local[2]"])
@@ -30,37 +48,13 @@ class TestCLI:
     def test_dry_run_end_to_end(self, tmp_path):
         """Full subprocess run (fresh JVM) against the reference CSV with
         write skipped — validates the reference CLI contract."""
-        out = subprocess.run(
-            [
-                sys.executable, "-m", "etl_entregas_pyspark_spark",
-                "--dry-run",
-                f"paths.input_file={REFERENCE_CSV}",
-                f"paths.output_base={tmp_path}/out",
-                "spark.master=local[2]",
-                "spark.configs.spark.ui.enabled=false",
-            ],
-            capture_output=True, text=True, timeout=240,
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        metrics = json.loads(out.stdout[out.stdout.index("{"):])
+        metrics = _dry_run(tmp_path, REFERENCE_CSV)
         assert metrics["data_quality"]["final_rows"] == 123
 
     def test_dry_run_end_to_end_fixture(self, tmp_path):
         """The same CLI contract over the committed synthetic CSV, so it
         runs where the reference CSV is absent."""
-        out = subprocess.run(
-            [
-                sys.executable, "-m", "etl_entregas_pyspark_spark",
-                "--dry-run",
-                f"paths.input_file={FIXTURE_CSV}",
-                f"paths.output_base={tmp_path}/out",
-                "spark.master=local[2]",
-                "spark.configs.spark.ui.enabled=false",
-            ],
-            capture_output=True, text=True, timeout=240,
-        )
-        assert out.returncode == 0, out.stderr[-2000:]
-        metrics = json.loads(out.stdout[out.stdout.index("{"):])
+        metrics = _dry_run(tmp_path, FIXTURE_CSV)
         assert metrics["data_quality"] == FIXTURE_LADDER
         assert not (tmp_path / "out").exists()
 

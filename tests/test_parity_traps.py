@@ -115,48 +115,38 @@ class TestSurvey7Traps:
         assert row.precio_por_unidad == 0.0
 
 
+def _partition_counts(spark, tmp_path, csv):
+    """Rows per ``fecha_proceso`` after the pipeline's stage chain over ``csv``."""
+    from etl_entregas_pyspark_spark.config import load_config
+    from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
+
+    cfg = load_config(dotlist=[
+        f"paths.input_file={csv}",
+        f"paths.output_base={tmp_path}/out",
+    ])
+    pipe = EntregasPipeline(spark, cfg)
+    cleaned, _ = pipe.apply_data_quality(pipe.extract())
+    final = pipe.standardize_columns(pipe.transform(pipe.apply_filters(cleaned)))
+    return {
+        r.fecha_proceso: r.n
+        for r in final.groupBy("fecha_proceso").agg(F.count("*").alias("n")).collect()
+    }
+
+
 class TestGoldenPartitionCounts:
     @pytest.mark.skipif(not os.path.exists(REFERENCE_CSV), reason="reference CSV unavailable")
     def test_per_partition_rows(self, spark, tmp_path):
         """BASELINE per-partition distribution over the golden CSV:
         the 123 output rows split across the 6 dates exactly as published
         (docs/data_flow_diagram.md:367-384)."""
-        from etl_entregas_pyspark_spark.config import load_config
-        from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
-
-        cfg = load_config(dotlist=[
-            f"paths.input_file={REFERENCE_CSV}",
-            f"paths.output_base={tmp_path}/out",
-        ])
-        pipe = EntregasPipeline(spark, cfg)
-        cleaned, _ = pipe.apply_data_quality(pipe.extract())
-        final = pipe.standardize_columns(pipe.transform(pipe.apply_filters(cleaned)))
-        counts = {
-            r.fecha_proceso: r.n
-            for r in final.groupBy("fecha_proceso").agg(F.count("*").alias("n")).collect()
-        }
+        counts = _partition_counts(spark, tmp_path, REFERENCE_CSV)
         assert sum(counts.values()) == 123
         assert len(counts) == 6
 
     def test_per_partition_rows_fixture(self, spark, tmp_path):
         """The same stage chain over the committed synthetic CSV: its
         hand-derived per-date split (tests/conftest.py)."""
-        from etl_entregas_pyspark_spark.config import load_config
-        from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
-
-        cfg = load_config(dotlist=[
-            f"paths.input_file={FIXTURE_CSV}",
-            f"paths.output_base={tmp_path}/out",
-        ])
-        pipe = EntregasPipeline(spark, cfg)
-        cleaned, _ = pipe.apply_data_quality(pipe.extract())
-        final = pipe.standardize_columns(pipe.transform(pipe.apply_filters(cleaned)))
-        counts = {
-            r.fecha_proceso: r.n
-            for r in final.groupBy("fecha_proceso").agg(F.count("*").alias("n")).collect()
-        }
-        assert counts == FIXTURE_PARTITION_ROWS
-
+        assert _partition_counts(spark, tmp_path, FIXTURE_CSV) == FIXTURE_PARTITION_ROWS
 
 DERIVED_SCHEMA = [
     ("pais", "string"), ("fecha_proceso", "string"), ("transporte", "string"),
