@@ -3,16 +3,19 @@
 standardize → load) recomposed from the operator library.
 
 Differences from the reference, all scale-motivated (SURVEY §4.3):
-- metrics: one two-phase aggregate over the raw scan
-  (``quality.metrics_frame``), nothing cached, instead of 11 uncached
-  count() actions;
+- one action per run: the DQ ladder and the output row count are
+  ``Observation``s on the write pass (``quality.observe_quality``), read
+  after it, instead of 11 uncached count() actions; the CSV is scanned
+  once, and nothing is cached;
 - sink: distributed ``partitionBy`` writer instead of a driver-side
-  toPandas() loop;
+  toPandas() loop; a dry run runs the same plan into a ``noop`` sink;
 - enrichment: layered projections, each shared intermediate computed
   once, instead of 20+ withColumn calls.
 
 Stage outputs are pure DataFrame→DataFrame, so any stage is usable alone
-(library entry point parity, SURVEY §3.2).
+(library entry point parity, SURVEY §3.2). ``apply_data_quality`` returns
+its ladder unread: it fills in when ``load`` (or any action on a frame
+derived from the cleaned one) has run.
 """
 
 from __future__ import annotations
@@ -20,7 +23,8 @@ from __future__ import annotations
 import time
 from typing import Any, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_entregas_pyspark_spark.io.readers import read_csv_raw
 from etl_entregas_pyspark_spark.io.writers import write_metrics_json, write_partitioned
@@ -39,9 +43,11 @@ class EntregasPipeline:
             raise ValueError("paths.input_file not configured")
         return read_csv_raw(self.spark, str(input_path))
 
-    def apply_data_quality(self, df: DataFrame) -> tuple[DataFrame, dict[str, int]]:
-        metrics = quality.quality_metrics(df, self.config)
-        return quality.apply_quality(df, self.config), metrics
+    def apply_data_quality(self, df: DataFrame) -> tuple[DataFrame, Mapping[str, int]]:
+        """The cleaned frame and its DQ ladder; runs no action. The ladder
+        fills in when an action runs the cleaned frame or one derived from
+        it (``load``), and reading it earlier raises."""
+        return quality.observe_quality(df, self.config)
 
     def apply_filters(self, df: DataFrame) -> DataFrame:
         return filters.apply_filters(df, self.config)
@@ -61,6 +67,8 @@ class EntregasPipeline:
 
     # -- orchestration --------------------------------------------------------
     def run(self, write: bool = True) -> dict[str, Any]:
+        """One action: the write, or with ``write=False`` the same plan into
+        a ``noop`` sink. The DQ ladder is read after it."""
         started = time.time()
         raw = self.extract()
         cleaned, dq_metrics = self.apply_data_quality(raw)
@@ -68,18 +76,18 @@ class EntregasPipeline:
         enriched = self.transform(filtered)
         final = self.standardize_columns(enriched)
 
-        metrics: dict[str, Any] = {"data_quality": dq_metrics}
+        metrics: dict[str, Any] = {"data_quality": {}}
         if write:
             # Observation: the output-row metric rides the write pass itself
             # (observe() accumulates during the action) — no cache, no second
             # materialization, works at any data size.
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
             obs = Observation("entregas_output")
             observed = final.observe(obs, F.count(F.lit(1)).alias("output_rows"))
             metrics.update(self.load(observed))
-            metrics["output_rows"] = obs.get["output_rows"]
+            metrics["output_rows"] = quality.read_observation(self.spark, obs).get("output_rows", 0)
+        else:
+            final.write.format("noop").mode("overwrite").save()
+        metrics["data_quality"] = dict(dq_metrics)  # read after the action
         metrics["duration_sec"] = round(time.time() - started, 3)
 
         metrics_path = self.config.get("paths", {}).get("metrics_file")

@@ -55,6 +55,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def registry_builds(spark):
+    """Every registered query built once per session, kept as strings only:
+    ``{name: (executed-plan text, [complex-typed output column names])}``.
+    Building a query can launch eager jobs, so the registry-wide checks
+    share one build instead of each building all of it again."""
+    from etl_entregas_pyspark_spark import queries as q
+
+    builds = {}
+    for name, spec in q.REGISTRY.items():
+        df = spec.spark(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        complex_cols = [f.name for f in df.schema.fields if f.dataType.typeName() in ("array", "map", "struct")]
+        builds[name] = (plan, complex_cols)
+    return builds
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

@@ -5,7 +5,12 @@ plus the golden end-to-end ladder 379 → -18 → -41 → -197 → 123 over the
 reference's shipped CSV (read-only input; BASELINE.md rows).
 """
 
+import csv
+import json
 import os
+import subprocess
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +18,7 @@ from pyspark.sql import functions as F
 from etl_entregas_pyspark_spark.config import load_config
 from etl_entregas_pyspark_spark.operators import derive, filters, quality
 from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
-from tests.conftest import REFERENCE_CSV
+from tests.conftest import FIXTURE_CSV, FIXTURE_LADDER, REFERENCE_CSV
 
 COLUMNS = [
     "pais",
@@ -208,6 +213,154 @@ class TestGoldenLadder:
         out_df = spark.read.option("header", "true").csv(str(tmp_path / "out"))
         assert out_df.count() == 123
         assert len(out_df.columns) == 29
+
+
+def _fixture_pipeline(spark, tmp_path):
+    cfg = load_config(dotlist=[f"paths.input_file={FIXTURE_CSV}", f"paths.output_base={tmp_path}/out"])
+    return EntregasPipeline(spark, cfg)
+
+
+# Runs the quality stage over 40 copies of the fixture CSV on local[2,2]
+# (a task may fail once), where a Python UDF on `material` fails the first
+# attempt of partition 0 at its 600th row. Python UDFs run in batches of
+# 100 rows, so the earlier batches have already passed the scan observation
+# when it fails. Prints the observed ladder and whether the failure fired.
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+from etl_entregas_pyspark_spark.config import load_config
+from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
+
+fixture, work = sys.argv[1], sys.argv[2]
+lines = open(fixture).read().splitlines()
+with open(os.path.join(work, "in.csv"), "w") as fh:
+    fh.write("\n".join(lines[:1] + lines[1:] * 40) + "\n")
+marker = os.path.join(work, "failed_once")
+spark = (SparkSession.builder.master("local[2,2]").config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+
+
+def flaky(value, calls=[0]):
+    ctx = TaskContext.get()
+    calls[0] += 1
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and calls[0] == 600:
+        open(marker, "w").close()
+        raise RuntimeError("injected first-attempt failure")
+    return value
+
+
+pipe = EntregasPipeline(spark, load_config(dotlist=[f"paths.input_file={work}/in.csv"]))
+raw = pipe.extract()
+raw = raw.withColumn("material", F.udf(flaky, "string")("material"))
+cleaned, ladder = pipe.apply_data_quality(raw)
+cleaned.write.format("noop").mode("overwrite").save()
+print(json.dumps({"ladder": dict(ladder), "failed_once": os.path.exists(marker)}))
+spark.stop()
+"""
+
+
+class TestObservedLadder:
+    """The DQ ladder is observed on the pipeline's one action (the write, or
+    the dry run's noop sink) instead of a separate aggregate pass."""
+
+    def test_write_run_fixture(self, spark, tmp_path):
+        metrics = _fixture_pipeline(spark, tmp_path).run(write=True)
+        assert metrics["data_quality"] == FIXTURE_LADDER
+        assert type(metrics["data_quality"]) is dict
+        assert metrics["output_rows"] == 7
+        parts = [p for p in (tmp_path / "out").iterdir() if p.name.startswith("fecha_proceso=")]
+        assert len(parts) == 4
+
+    def test_dry_run_fixture(self, spark, tmp_path):
+        metrics = _fixture_pipeline(spark, tmp_path).run(write=False)
+        assert metrics["data_quality"] == FIXTURE_LADDER
+        assert not (tmp_path / "out").exists()
+
+    @pytest.mark.parametrize(
+        "column, value, ladder",
+        [
+            # P1 removes every row: the dedup exchange is empty
+            ("material", "   ", {"input_rows": 23, "null_material_removed": 23, "invalid_type_removed": 0,
+                                 "duplicates_removed": 0, "final_rows": 0}),
+            # P4 removes every row that survives the dedup
+            ("pais", "XX", {"input_rows": 23, "null_material_removed": 5, "invalid_type_removed": 3,
+                            "duplicates_removed": 5, "final_rows": 0}),
+        ],
+    )
+    def test_write_run_without_output_rows(self, spark, tmp_path, column, value, ladder):
+        """Adaptive execution replaces a plan whose result is empty with an
+        empty relation, and its observations complete without values; the
+        ladder is then counted again and the output row count is 0."""
+        with open(FIXTURE_CSV, newline="") as fh:
+            rows = list(csv.reader(fh))
+        at = rows[0].index(column)
+        for row in rows[1:]:
+            row[at] = value
+        path = tmp_path / "in.csv"
+        with open(path, "w", newline="") as fh:
+            csv.writer(fh).writerows(rows)
+        cfg = load_config(dotlist=[f"paths.input_file={path}", f"paths.output_base={tmp_path}/out"])
+        metrics = EntregasPipeline(spark, cfg).run(write=True)
+        assert metrics["data_quality"] == ladder
+        assert metrics["output_rows"] == 0
+
+    def test_write_run_job_count(self, spark, tmp_path):
+        """One CSV scan per run: the write is 4 Spark jobs (CSV header
+        read, the scan-to-dedup map stage, the write, its commit). A
+        separate metrics pass would add 3."""
+        pipe = _fixture_pipeline(spark, tmp_path)
+        sc = spark.sparkContext
+        group = f"entregas-run-{tmp_path.name}"
+        sc.setJobGroup(group, "job count of one pipeline run")
+        try:
+            pipe.run(write=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+    def test_read_before_action_raises(self, spark, tmp_path):
+        """Before any action the ladder raises within its bound; Observation.get
+        alone would block forever. The thread guard turns a hang into a
+        failure instead of a stalled suite."""
+        pipe = _fixture_pipeline(spark, tmp_path)
+        _, ladder = pipe.apply_data_quality(pipe.extract())
+        assert list(ladder) == list(FIXTURE_LADDER)
+        outcome = []
+
+        def read():
+            try:
+                outcome.append(ladder["input_rows"])
+            except RuntimeError as exc:
+                outcome.append(exc)
+
+        reader = threading.Thread(target=read, daemon=True)
+        reader.start()
+        reader.join(timeout=quality.DRAIN_MS / 1000 + 30)
+        assert not reader.is_alive(), "reading the ladder before any action hung"
+        assert isinstance(outcome[0], RuntimeError)
+
+    def test_retried_task_counts_once(self, tmp_path):
+        """A failed task attempt's observed-metric updates are dropped, so a
+        retried task inside the observed stage leaves the ladder exact."""
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = subprocess.run(
+            [sys.executable, "-c", _RETRY_SCRIPT, FIXTURE_CSV, str(tmp_path)],
+            cwd=repo, capture_output=True, text=True, timeout=240,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        result = json.loads(out.stdout.strip().splitlines()[-1])
+        assert result["failed_once"]
+        # 40 copies: every count scales by 40 except the 10 distinct rows
+        # that survive the dedup
+        assert result["ladder"] == {
+            "input_rows": 23 * 40,
+            "null_material_removed": 5 * 40,
+            "invalid_type_removed": 3 * 40,
+            "duplicates_removed": 15 * 40 - 10,
+            "final_rows": 9,
+        }
 
 
 class TestConfigLayering:

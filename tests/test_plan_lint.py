@@ -19,9 +19,6 @@ import re
 
 import pytest
 
-from etl_entregas_pyspark_spark import queries as q
-from tests.conftest import SF_DIR
-
 # Arrow-batched Python stages are the POINT of the multimodal queries.
 _ARROW_PYTHON_OK = {
     "q57_multimodal_decode",
@@ -46,14 +43,9 @@ _GLOBAL_WINDOW_OK = {
 }
 
 
-def _plan(spark, name: str) -> str:
-    df = q.REGISTRY[name].spark(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.fixture(scope="module")
-def plans(spark):
-    return {name: _plan(spark, name) for name in q.REGISTRY}
+def plans(registry_builds):
+    return {name: plan for name, (plan, _) in registry_builds.items()}
 
 
 def test_no_cartesian_product(plans):

@@ -103,6 +103,37 @@ def test_single_pass_metrics_equal_sequential_counts(spark_prop, rows):
     }
 
 
+# Lowercase valid countries pass P4 after upper(); duplicating a slice of
+# the rows guarantees duplicates among P1/P2 survivors and among removed
+# rows alike.
+observed_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["GT", "gt", "Pe", "XX", "us"]),
+        st.sampled_from(["20250101", "20250630"]),
+        st.just("67000001"),
+        st.sampled_from(["919885", "100200"]),
+        st.sampled_from(["ZPRE", "Z04", "COBR", "cobr"]),
+        st.sampled_from(["MAT1", "MAT2", "", "   ", None]),
+        st.sampled_from(["1.50", "0E-18"]),
+        st.just("1.00"),
+        st.sampled_from(["CS", "ST"]),
+    ),
+    min_size=1,
+    max_size=40,
+).map(lambda rows: rows + rows[::3])
+
+
+@settings(max_examples=5, deadline=None)
+@given(observed_rows)
+def test_observed_ladder_equals_one_pass_metrics(spark_prop, rows):
+    """The ladder observed on the pipeline's action (quality.observe_quality)
+    equals the one-aggregation metrics for ANY input."""
+    df = spark_prop.createDataFrame(rows, _ENTREGAS_SCHEMA).repartition(3)
+    cleaned, ladder = quality.observe_quality(df, CONFIG)
+    cleaned.write.format("noop").mode("overwrite").save()
+    assert dict(ladder) == quality.quality_metrics(df, CONFIG)
+
+
 @pytest.fixture(scope="module")
 def spark_prop(spark):
     return spark

@@ -127,19 +127,10 @@ def test_oracle_match(spark, oracle, name):
     assert canon_rows(s_cols, s_rows) == canon_rows(d_cols, d_rows)
 
 
-def test_no_complex_output_columns(spark):
+def test_no_complex_output_columns(registry_builds):
     """The driver's canonicalizer sorts result columns with pandas, which
     cannot hash array/map/struct cells (q38/q96/q125 crashed rounds 2-3
     on this). Guard the WHOLE registry: every query's output schema must
     be scalar-only — serialize arrays with array_join/to_json instead."""
-    bad = {}
-    for name, spec in sorted(q.REGISTRY.items()):
-        sdf = spec.spark(spark, SF_DIR)
-        complex_cols = [
-            f.name
-            for f in sdf.schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct")
-        ]
-        if complex_cols:
-            bad[name] = complex_cols
+    bad = {name: cols for name, (_, cols) in sorted(registry_builds.items()) if cols}
     assert not bad, f"complex-typed output columns: {bad}"
