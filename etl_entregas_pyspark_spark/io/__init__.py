@@ -2,7 +2,6 @@ from etl_entregas_pyspark_spark.io.readers import (
     read_csv_raw,
     read_parquet,
     read_table,
-    load_star_schema,
 )
 from etl_entregas_pyspark_spark.io.writers import (
     write_partitioned,
@@ -13,7 +12,6 @@ __all__ = [
     "read_csv_raw",
     "read_parquet",
     "read_table",
-    "load_star_schema",
     "write_partitioned",
     "write_metrics_json",
 ]

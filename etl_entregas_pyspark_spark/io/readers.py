@@ -16,19 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_csv_raw(spark: SparkSession, path: str, **extra: str) -> DataFrame:
     """All-string CSV scan with the reference's options."""
@@ -58,9 +45,3 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One synthetic star-schema table (TESTDATA.md) by name."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All testdata tables, keyed by name. Plans stay lazy — loading all ten
-    costs only footer reads."""
-    return {name: read_table(spark, sf_dir, name) for name in TESTDATA_TABLES}

@@ -73,7 +73,8 @@ def dedup_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame
 
 class _Rules:
     """The enabled rules of one config: P1 on/off, the P2 and P4 lists and
-    P3 on/off."""
+    P3 on/off, with the row predicates that the observed ladder and
+    ``metrics_frame`` count by."""
 
     def __init__(self, config: Mapping[str, Any]):
         dq = config.get("data_quality", {})
@@ -84,7 +85,21 @@ class _Rules:
         countries = dq.get("valid_countries") if dq.get("validate_country_codes", True) else None
         self.valid_countries = [c.upper() for c in countries or []]
 
+    def material_removed(self) -> Column:
+        """Rows P1 removes; FALSE when P1 is off."""
+        return null_blank_predicate("material") if self.null_material else F.lit(False)
+
+    def type_removed(self) -> Column:
+        """Rows P2 removes, NULL ``tipo_entrega`` included (the IN-list is
+        NULL there and the filter drops it); FALSE when P2 is off."""
+        if not self.valid_types:
+            return F.lit(False)
+        return ~F.coalesce(in_list("tipo_entrega", self.valid_types), F.lit(False))
+
     def country_ok(self) -> Column:
+        """Rows P4 keeps; TRUE when P4 is off."""
+        if not self.valid_countries:
+            return F.lit(True)
         return in_list("pais", self.valid_countries, normalize_upper=True)
 
 
@@ -157,13 +172,14 @@ class ObservedLadder(Mapping[str, int]):
     def tap(self, point: str, df: DataFrame) -> DataFrame:
         one = F.lit(1)
         if point == "scan":
-            removed = null_blank_predicate("material") if self._rules.null_material else F.lit(False)
-            aggs = [F.count(one).alias("input_rows"), F.count_if(removed).alias("null_material_removed")]
+            aggs = [
+                F.count(one).alias("input_rows"),
+                F.count_if(self._rules.material_removed()).alias("null_material_removed"),
+            ]
         elif point == "kept":
             aggs = [F.count(one).alias("n12")]
         else:
-            ok = self._rules.country_ok() if self._rules.valid_countries else F.lit(True)
-            aggs = [F.count(one).alias("nd"), F.count_if(ok).alias("final_rows")]
+            aggs = [F.count(one).alias("nd"), F.count_if(self._rules.country_ok()).alias("final_rows")]
         obs = Observation(f"dq_{point}")
         self._taps.append((obs, df, aggs))
         return df.observe(obs, *aggs)
@@ -238,22 +254,19 @@ def metrics_frame(df: DataFrame, config: Mapping[str, Any]) -> DataFrame:
     is a two-phase aggregate keyed on a 128-bit xxhash64 row fingerprint —
     group to (fingerprint, rule flags, multiplicity) with map-side partial
     aggregation, then one scalar rollup (details in the block comment
-    below).
+    below). The rule predicates and toggles are ``_Rules``', the ones the
+    pipeline filters with; with P3 off, ``final_rows`` counts every copy.
 
     Assumes every column casts injectively to string (the fingerprint
     input): frames limited to atomic column types — which all current
     callers are. An array/map/struct column would need the groupBy(*cols)
     shape instead.
     """
-    dq = config.get("data_quality", {})
-    rules = config.get("business_rules", {}).get("delivery_types", {})
-    valid_types = list(rules.get("routine", [])) + list(rules.get("bonus", []))
-    valid_countries = [c.upper() for c in dq.get("valid_countries", [])]
-
-    p1_removed = null_blank_predicate("material")
-    p2_removed = (~p1_removed) & ~F.col("tipo_entrega").isin(valid_types)
-    passes_12 = (~p1_removed) & F.col("tipo_entrega").isin(valid_types)
-    valid_country = F.upper(F.col("pais")).isin(valid_countries)
+    rules = _Rules(config)
+    p1_removed = rules.material_removed()
+    type_removed = rules.type_removed()
+    p2_removed = (~p1_removed) & type_removed
+    passes_12 = (~p1_removed) & ~type_removed
 
     # Two-phase shape: group to (distinct row, multiplicity) first, then
     # one scalar aggregate. A single-agg formulation with two
@@ -283,21 +296,26 @@ def metrics_frame(df: DataFrame, config: Mapping[str, Any]) -> DataFrame:
         p1_removed.alias("f_p1"),
         p2_removed.alias("f_p2"),
         passes_12.alias("f_p12"),
-        (passes_12 & valid_country).alias("f_ok"),
+        (passes_12 & rules.country_ok()).alias("f_ok"),
     )
     per_row = keyed.groupBy("h1", "h2", "f_p1", "f_p2", "f_p12", "f_ok").agg(
         F.count(F.lit(1)).alias("row_multiplicity")
     )
     n = F.col("row_multiplicity")
+
+    def rows(flag: str) -> Column:
+        return F.sum(F.when(F.col(flag), n).otherwise(F.lit(0)))
+
+    def survivors(flag: str) -> Column:
+        # P3 keeps one row per fingerprint; with P3 off every copy survives
+        return F.count(F.when(F.col(flag), F.lit(1))) if rules.dedup else rows(flag)
+
     return per_row.agg(
         F.sum(n).alias("input_rows"),
-        F.sum(F.when(F.col("f_p1"), n).otherwise(F.lit(0))).alias("null_material_removed"),
-        F.sum(F.when(F.col("f_p2"), n).otherwise(F.lit(0))).alias("invalid_type_removed"),
-        (
-            F.sum(F.when(F.col("f_p12"), n).otherwise(F.lit(0)))
-            - F.count(F.when(F.col("f_p12"), F.lit(1)))
-        ).alias("duplicates_removed"),
-        F.count(F.when(F.col("f_ok"), F.lit(1))).alias("final_rows"),
+        rows("f_p1").alias("null_material_removed"),
+        rows("f_p2").alias("invalid_type_removed"),
+        (rows("f_p12") - survivors("f_p12")).alias("duplicates_removed"),
+        survivors("f_ok").alias("final_rows"),
     )
 
 

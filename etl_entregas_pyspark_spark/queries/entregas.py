@@ -314,8 +314,8 @@ def q60_entregas_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         (SELECT COUNT(*) FROM raw) AS input_rows,
         (SELECT COUNT(*) FROM raw WHERE material IS NULL OR trim(material) = '')
             AS null_material_removed,
-        (SELECT COUNT(*) FROM raw WHERE material IS NOT NULL AND trim(material) <> ''
-            AND tipo_entrega NOT IN ('ZPRE','ZVE1','Z04','Z05')) AS invalid_type_removed,
+        (SELECT COUNT(*) FROM raw WHERE material IS NOT NULL AND trim(material) <> '')
+            - (SELECT COUNT(*) FROM passed) AS invalid_type_removed,
         (SELECT COUNT(*) FROM passed) - (SELECT COUNT(*) FROM (SELECT DISTINCT * FROM passed))
             AS duplicates_removed,
         (SELECT COUNT(*) FROM (SELECT DISTINCT * FROM passed)

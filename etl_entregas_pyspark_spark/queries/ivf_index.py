@@ -3212,8 +3212,9 @@ def q252_live_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # between sf0.01's full-precision footprint (~124 KB -> everything fits,
 # highest-fidelity engine wins) and sf0.1's (~496 KB -> full precision is
 # evicted, the codes engines compete) so the choice is live at BOTH gate
-# scales, and tools/ann_chooser_ladder.py shows it flipping again when
-# even int8 stops fitting.
+# scales, and the replica ladder recorded in SCALE.md ("Engine-chooser
+# flip"; `git show 1c513ab:tools/ann_chooser_ladder.py`) shows it
+# flipping again when even int8 stops fitting.
 _ANN_BUDGET_BYTES = 200_000
 
 
@@ -3285,7 +3286,7 @@ def _q250_oracle() -> str:
     "arithmetic is pure integer products and one window over four "
     "model-state rows. As the corpus grows the choice flips exactly "
     "where the budget line crosses each footprint — "
-    "tools/ann_chooser_ladder.py measures the flip (flat at small n, "
+    "SCALE.md's engine-chooser ladder measured the flip (flat at small n, "
     "codes engines as n x 64B crosses the budget, IVF-PQ once only "
     "4B/vec fits) — the SCALE.md-recorded inversion, now a decision "
     "rule instead of a chart.",

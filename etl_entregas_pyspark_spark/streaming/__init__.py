@@ -14,7 +14,6 @@ from etl_entregas_pyspark_spark.streaming.streams import (
     dedup_stream,
     read_event_stream,
     sessionized_stream,
-    sliding_counts_stream,
     start_memory_sink,
     stream_stream_join,
     enriched_counts_stream,
@@ -31,7 +30,6 @@ __all__ = [
     "dedup_stream",
     "enriched_counts_stream",
     "tumbling_counts_stream",
-    "sliding_counts_stream",
     "sessionized_stream",
     "stream_stream_join",
     "start_memory_sink",

@@ -91,21 +91,6 @@ def tumbling_counts_stream(
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame,
-    size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """q31's sliding-window aggregation as a stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide))
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
-        .select(F.col("window.start").alias("window_start"), "n_events", "total_value")
-    )
-
-
 def sessionized_stream(
     events: DataFrame,
     gap: str = "30 minutes",

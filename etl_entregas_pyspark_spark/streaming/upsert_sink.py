@@ -474,20 +474,3 @@ def upsert_batch_bucketed(
         for v in versions[: -keep_last] if len(versions) > keep_last else []:
             shutil.rmtree(os.path.join(bdir, f"v{v}"), ignore_errors=True)
     return True
-
-
-def start_bucketed_upsert_sink(
-    change_log: DataFrame, snapshot_dir: str, checkpoint_dir: str,
-    keep_last: int = 2,
-):
-    """Run the streaming change log into the bucket-pruned snapshot
-    store; same source contract as ``start_upsert_sink``."""
-    return (
-        change_log.writeStream.foreachBatch(
-            lambda df, epoch: upsert_batch_bucketed(
-                df, epoch, snapshot_dir, keep_last
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

@@ -85,6 +85,32 @@ class TestDataQuality:
         assert metrics["duplicates_removed"] == 1
         assert metrics["final_rows"] == 1
 
+    _ROW = ("GT", "20250115", "1", "10", "ZPRE", "M1", "1", "1", "ST")
+
+    @pytest.mark.parametrize(
+        "toggle, rows, ladder",
+        [
+            # P2 drops a NULL delivery type: the IN-list is NULL there
+            (None, [_ROW, _ROW[:4] + (None,) + _ROW[5:]], (2, 0, 1, 0, 1)),
+            ("remove_duplicates", [_ROW] * 3, (3, 0, 0, 0, 3)),
+            ("validate_country_codes", [_ROW, ("XX",) + _ROW[1:]], (2, 0, 0, 0, 2)),
+            ("remove_null_material", [_ROW, _ROW[:5] + ("",) + _ROW[6:]], (2, 0, 0, 0, 2)),
+        ],
+    )
+    def test_metrics_equal_observed_ladder(self, spark, config, toggle, rows, ladder):
+        """The one-pass metrics use the pipeline's rules: a NULL type counts
+        as removed by P2, and each toggle that switches a rule off is
+        honoured."""
+        if toggle:
+            config = {**config, "data_quality": {**config["data_quality"], toggle: False}}
+        df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in COLUMNS))
+        cleaned, observed = quality.observe_quality(df, config)
+        rows_out = len(cleaned.collect())
+        assert dict(observed) == dict(zip(quality.ObservedLadder.KEYS, ladder))
+        assert quality.quality_metrics(df, config) == dict(observed)
+        removed = observed["null_material_removed"] + observed["invalid_type_removed"] + observed["duplicates_removed"]
+        assert observed["input_rows"] - removed == observed["final_rows"] == rows_out
+
 
 class TestTransformations:
     def _first(self, df):

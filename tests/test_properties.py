@@ -38,7 +38,7 @@ def test_rnd_and_dsum_match_duckdb(spark_prop, values):
 
 
 country_codes = st.sampled_from(["GT", "SV", "HN", "EC", "PE", "JM", "XX", "us"])
-delivery_types = st.sampled_from(["ZPRE", "ZVE1", "Z04", "Z05", "COBR", ""])
+delivery_types = st.sampled_from(["ZPRE", "ZVE1", "Z04", "Z05", "COBR", "", None])
 materials = st.sampled_from(["MAT1", "MAT2", "", "   ", None])
 
 entregas_rows = st.lists(
@@ -112,7 +112,7 @@ observed_rows = st.lists(
         st.sampled_from(["20250101", "20250630"]),
         st.just("67000001"),
         st.sampled_from(["919885", "100200"]),
-        st.sampled_from(["ZPRE", "Z04", "COBR", "cobr"]),
+        st.sampled_from(["ZPRE", "Z04", "COBR", "cobr", None]),
         st.sampled_from(["MAT1", "MAT2", "", "   ", None]),
         st.sampled_from(["1.50", "0E-18"]),
         st.just("1.00"),

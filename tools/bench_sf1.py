@@ -1,7 +1,7 @@
 """sf1 bench record: replicate sf0.1 facts 10× in /tmp (shifted keys —
-the scale_smoke layout, including the worst-case IDENTICAL 10× document
-duplication) and run the full `bench.py` headline battery against it,
-writing `BENCH_SF1.json` at the repo root.
+`tools/growth_exponent.py`'s layout, including the worst-case IDENTICAL
+10× document duplication) and run the full `bench.py` headline battery
+against it, writing `BENCH_SF1.json` at the repo root.
 
 This turns SCALE.md's 100×-survival arguments into a measured artifact at
 one decade above the driver's bench point (r4 VERDICT residual #3).
@@ -17,7 +17,6 @@ import re
 import shutil
 import subprocess
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -26,11 +25,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def build_replica(replicas: int) -> tuple[str, dict]:
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from tools.scale_smoke import FACTS, KEY_STRIDE, SRC
+    from tools.growth_exponent import FACTS, build
 
-    out_dir = tempfile.mkdtemp(prefix="bench_sf1_")
     spark = (
         SparkSession.builder.appName("bench-sf1-build")
         .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
@@ -41,20 +38,9 @@ def build_replica(replicas: int) -> tuple[str, dict]:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    rows = {}
     try:
-        for name in ("region", "nation", "supplier", "part"):
-            shutil.copy(f"{SRC}/{name}.parquet", f"{out_dir}/{name}.parquet")
-        for name, keys in FACTS.items():
-            base = spark.read.parquet(f"{SRC}/{name}.parquet")
-            rep = spark.range(replicas).select(F.col("id").alias("__rep__"))
-            scaled = base.crossJoin(rep)
-            for k in keys:
-                scaled = scaled.withColumn(k, F.col(k) + F.col("__rep__") * KEY_STRIDE)
-            scaled.drop("__rep__").repartition(32).write.mode("overwrite").parquet(
-                f"{out_dir}/{name}.parquet"
-            )
-            rows[name] = spark.read.parquet(f"{out_dir}/{name}.parquet").count()
+        out_dir = build(spark, replicas)
+        rows = {name: spark.read.parquet(f"{out_dir}/{name}.parquet").count() for name in FACTS}
     finally:
         spark.stop()
     with open(os.path.join(out_dir, "_manifest.json"), "w") as f:

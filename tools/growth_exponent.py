@@ -1,13 +1,14 @@
-"""Growth-exponent measurement for individual registry queries (r7 VERDICT
-#8): build shifted-key replica layouts of sf0.1 at several scale factors
-(the scale_smoke layout, including the worst-case verbatim document/
-embedding duplication), time each target query at each point (min of two
-passes after one warm-up), and fit the log-log slope
+"""Growth-exponent ladder for registry queries: build shifted-key replica
+layouts of sf0.1 at several scale factors (including the worst-case
+verbatim document/embedding duplication), time each target query at each
+point (min of two passes after one warm-up), and fit the log-log slope
 
     t(N) ~ N^alpha   =>   alpha = slope of ln t vs ln N (least squares)
 
 alpha ≈ 1 means the plan scales linearly in data volume; alpha ≈ 2 means a
 pairwise stage dominates. Results go into SCALE.md's measured-scaling table.
+One rung (``--replicas 16``) is the 16× scale smoke; ``build`` is also the
+layout `tools/bench_sf1.py` benchmarks.
 
 Usage: python tools/growth_exponent.py q158_containment_join q192_lsh_recall_audit [--replicas 1,2,4]
 Prints one JSON line per query: {"query": ..., "points": {N: sec}, "alpha": ...}
@@ -28,11 +29,37 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from tools.scale_smoke import FACTS, KEY_STRIDE, SRC
+SRC = "/root/testdata/sf0.1"
+# fact tables replicated with shifted keys; dims copied as-is.
+# documents replicate with IDENTICAL text — deliberately: N× literal
+# duplication is the near-dup operator's worst case (every LSH bucket's
+# membership multiplies by N, the in-bucket pair grid by N²), i.e. the
+# common-crawl-style duplication profile the dedup path must survive.
+FACTS = {"lineitem": ["l_orderkey"], "orders": ["o_orderkey", "o_custkey"],
+         "documents": ["doc_id"],
+         # customer replicates with c_custkey shifted by the SAME stride
+         # as orders.o_custkey, so every replicated order keeps a matching
+         # customer — without this, ~90% of orders were orphaned and
+         # customer-join row counts understated true sf1 cost
+         "customer": ["c_custkey"],
+         # embeddings replicate verbatim under shifted vec_ids — the same
+         # duplication worst case as documents (every cosine bucket's
+         # membership multiplies by N), so embedding-arm queries bench
+         # against N× vectors
+         "embeddings": ["vec_id"],
+         # shifting user_id multiplies the user population while keeping
+         # each user's history length constant — the realistic growth
+         # axis for sessionization/funnel (more entities, not deeper ones)
+         "events": ["event_id", "user_id"]}
+KEY_STRIDE = 100_000_000
 
 
 def build(spark, replicas: int) -> str:
+    """Write the N× replica layout into a fresh temp dir and return it."""
     out_dir = tempfile.mkdtemp(prefix=f"growth_{replicas}x_")
+    # true dims: their keys are never shifted by any fact replica, so
+    # copying keeps referential integrity (l_partkey/l_suppkey/
+    # c_nationkey all still resolve)
     for name in ("region", "nation", "supplier", "part"):
         shutil.copy(f"{SRC}/{name}.parquet", f"{out_dir}/{name}.parquet")
     for name, keys in FACTS.items():
