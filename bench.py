@@ -1,11 +1,24 @@
-"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark: the registry's battery (every query outside the basic tier) at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints a
+detail line, then ONE summary JSON line last:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is materialized with the noop sink (full computation, zero
 driver collect — the honest distributed cost). Session startup is excluded
 from per-query times, matching how the reference's published numbers are
 startup-dominated while ours measure data throughput.
+
+Usage: python bench.py [--passes N] [--skip-demos] [--only q01_pricing_summary,q216_stream_disordered_join]
+
+- ``--passes N``: timed passes per query, the minimum kept (default 2: one
+  cold-contention sample must not define a query's cost).
+- ``--skip-demos``: drop the demo baselines. They re-prove quadratic laws
+  SCALE.md already records, and at sf1 they burn ~40% of the battery (r9
+  VERDICT #6). Their scaled production twins always run.
+- ``--only``: time just the named registered queries in one session, the
+  isolation run for re-measuring a few rows min-of-N. It skips the standing
+  store builds (the untimed pass absorbs them) and never rewrites the
+  per-SF detail file.
 """
 
 from __future__ import annotations
@@ -16,429 +29,74 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-from pyspark.sql import SparkSession
-
-# breadth over the capability surface: agg / join family / window / top-k /
-# events / text-dedup / similarity / entregas pipeline
-HEADLINE = [
-    "q01_pricing_summary",
-    "q03_top_orders",
-    "q05_region_revenue",
-    "q06_global_agg",
-    "q11_broadcast_brand",
-    "q14_window_topn",
-    "q18_topk_orders",
-    "q30_events_tumbling",
-    "q32_events_session",
-    "q42_fingerprint_dedup",
-    "q45_word_jaccard_pairs",
-    "q51_cosine_topk",
-    "q53_minhash_near_dup",
-    "q56_cosine_near_dup",
-    "q57_multimodal_decode",
-    "q58_asof_join",
-    "q59_range_join",
-    "q62_dedup_components",
-    "q63_deterministic_split",
-    "q64_decontamination",
-    "q66_chunking",
-    "q69_trailing_range_window",
-    "q70_gap_fill_forward",
-    "q71_alto_valor_flag",
-    "q73_ivf_search",
-    "q77_edit_distance_pairs",
-    "q78_tfidf_top_terms",
-    "q79_salted_aggregate",
-    "q80_latest_per_key",
-    "q82_sequence_packing",
-    "q83_sessionization",
-    "q84_funnel",
-    "q85_repetition_profile",
-    "q86_mixture_weights",
-    "q87_expectation_audit",
-    "q88_corpus_filter",
-    "q89_heavy_hitters",
-    "q90_denylist_scrub",
-    "q91_exists_decorrelated",
-    "q93_dedup_pipeline",
-    "q94_scd2_intervals",
-    "q95_partial_merge",
-    "q96_map_funcs",
-    "q97_explode_outer",
-    "q98_cohort_retention",
-    "q99_rfm_segments",
-    "q100_incremental_dedup",
-    "q101_ohlc_bars",
-    "q102_rolling_zscore",
-    "q103_bigram_counts",
-    "q104_cdc_apply",
-    "q105_per_key_sample",
-    "q106_kmeans_loop",
-    "q107_skew_split_join",
-    "q108_twap",
-    "q109_minmax_scale",
-    "q110_boilerplate_score",
-    "q111_cluster_canonical",
-    "q112_winsorize",
-    "q113_debounce_dedup",
-    "q114_user_paths",
-    "q115_pagerank",
-    "q116_pii_redaction",
-    "q117_vocab_coverage",
-    "q118_basket_pairs",
-    "q119_benford_audit",
-    "q120_transition_matrix",
-    "q121_mad_outliers",
-    "q122_group_ols",
-    "q123_weighted_sample",
-    "q124_hourly_churn",
-    "q125_inverted_index",
-    "q126_copurchase_triangles",
-    "q127_quantile_bucketize",
-    "q128_bm25_scoring",
-    "q129_multimodal_embed",
-    "q130_zorder_layout",
-    "q131_global_index",
-    "q132_bloom_semi_join",
-    "q133_interval_islands",
-    "q134_pareto_skyline",
-    "q135_power_iteration",
-    "q136_chisq_drift",
-    "q137_association_rules",
-    "q138_auc_rank",
-    "q139_ks_drift",
-    "q140_split_gain",
-    "q141_bigram_perplexity",
-    "q142_country_filter",
-    "q143_fk_integrity",
-    "q144_decay_score",
-    "q145_count_min_sketch",
-    "q146_last_touch_attribution",
-    "q147_distinct_n",
-    "q148_rrf_fusion",
-    "q149_seasonal_anomaly",
-    "q150_bucketed_dedup_chain",
-    "q151_stream_upsert_sink",
-    "q152_setjoin_prefix_filter",
-    "q153_sliding_distinct",
-    "q154_calibration_bins",
-    "q155_psi_drift",
-    "q156_feature_matrix",
-    "q157_negative_sampling",
-    "q158_containment_join",
-    "q159_linear_attribution",
-    "q160_interval_overlap_join",
-    "q161_proportional_allocation",
-    "q162_bfs_levels",
-    "q163_weighted_sample_noreplace",
-    "q164_category_entropy",
-    "q165_ab_proportion_test",
-    "q166_golden_record",
-    "q167_pmi_cooccurrence",
-    "q168_geo_distance_join",
-    "q169_hierarchy_rollup",
-    "q170_rolling_corr",
-    "q171_link_prediction",
-    "q172_clamped_running_sum",
-    "q173_link_prediction_capped",
-    "q174_sliding_distinct_bucketed",
-    "q175_stream_sliding_distinct",
-    "q176_hll_sketch_rollup",
-    "q177_jl_projection_topk",
-    "q178_group_split",
-    "q179_hard_negative_mining",
-    "q180_contamination_score",
-    "q181_balanced_resample",
-    "q182_semdedup",
-    "q183_phash_near_dup",
-    "q184_rolling_psi",
-    "q185_compaction_planner",
-    "q186_cohens_kappa",
-    "q187_merkle_partition_diff",
-    "q188_pretrain_funnel",
-    "q189_sketch_calibration",
-    "q190_stratified_kfold",
-    "q191_label_noise",
-    "q192_lsh_recall_audit",
-    "q193_epoch_shuffle",
-    "q194_link_prediction_adaptive",
-    "q195_source_overlap_matrix",
-    "q196_semdedup_scaled",
-    "q197_label_noise_scaled",
-    "q198_triangles_adaptive_support",
-    "q199_semdedup_auto",
-    "q200_label_noise_auto",
-    "q201_stream_disordered_tumbling",
-    "q202_span_dup_profile",
-    "q203_incremental_lsh_probe",
-    "q204_source_divergence",
-    "q205_join_skew_plan",
-    "q206_tokenizer_fertility",
-    "q207_centroid_drift",
-    "q208_pps_sample_audit",
-    "q209_zipf_slope",
-    "q210_incremental_lsh_probe_persisted",
-    "q211_ingest_apply",
-    "q212_stream_disordered_session",
-    "q213_stream_disordered_sliding_distinct",
-    "q214_span_scrub_apply",
-    "q215_ivf_recall_audit",
-    "q216_stream_disordered_join",
-    "q217_band_index_reconcile",
-    "q218_scrub_budget_by_source",
-    "q219_snapshot_novelty",
-    "q220_mixture_plan",
-    "q221_ingest_commit",
-    "q222_live_index_probe",
-    "q223_ivf_probe_persisted",
-    "q224_ivf_ingest_commit",
-    "q225_ivf_reconcile",
-    "q226_deletion_propagation",
-    "q227_ivf_deletion_propagation",
-    "q228_live_ivf_probe",
-    "q229_ivf_scrub_under_ingest",
-    "q230_ivf_nprobe_sweep",
-    "q231_ivf_centroid_refresh",
-    "q232_ivf_sq8_rescore",
-    "q233_lsh_band_plan_sweep",
-    "q234_ivf_refresh_apply",
-    "q235_lsh_replan_from_signatures",
-    "q236_sq8_shortlist_sweep",
-    "q237_lsh_bucket_valve",
-    "q238_ivf_centroid_plan",
-    "q239_lsh_valve_off_demo",
-    "q240_pq_adc_search",
-    "q241_pq_shortlist_sweep",
-    "q242_ivfpq_search",
-    "q243_ivfpq_ingest_probe",
-    "q244_ann_engine_matrix",
-    "q245_ivfpq_forget_probe",
-    "q246_semantic_decontamination",
-    "q247_length_bucket_plan",
-    "q248_ivfpq_drift_audit",
-    "q249_ivfpq_refresh_apply",
-    "q250_ann_engine_choice",
-    "q251_packed_batch_assign",
-    "q252_live_ivfpq_probe",
-    "q253_ivfpq_shortlist_sweep",
-    "q254_sq8_clip_audit",
-    "q255_stream_static_enrich",
-    "q256_filter_attribution",
-    "q257_bpe_merge_mining",
-    "q258_contamination_depth",
-    "q259_preference_pairs",
-    "q260_dedup_sampling_weights",
-    "q261_bpe_compression_curve",
-    "q262_mmr_rerank",
-    "q263_admission_ledger",
-    "q264_ivf_mmr_stack",
-    "q265_leakage_safe_split",
-    "q60_entregas_pipeline",
-    "q61_entregas_quality_metrics",
-]
-
-# Deliberately-unguarded demonstration baselines, kept registered as the
-# measured contrast for their production twins (r7 VERDICT #5). Their rows
-# stay in the battery, but totals are reported twice: the full battery and
-# the production subset you'd actually run at 100x.
-#   q171 uncapped link prediction  -> guarded twins q173 (fixed cap) / q194 (adaptive)
-#   q182 SemDeDup at fixed K=8     -> K-scaled twin q196
-#   q191 label noise at fixed K=8  -> K-scaled twin q197
-#   q239 un-valved band-bucket grid -> valved twin q237 (r14 valve)
-DEMO_BASELINES = {
-    "q171_link_prediction",
-    "q182_semdedup",
-    "q191_label_noise",
-    "q239_lsh_valve_off_demo",
-}
-
-# Declared contrast pairs (scaled-twin / demo-baseline): the sandbox swings
-# 2-3x on absolute wall clocks between sessions, so regressions are judged
-# on WITHIN-SESSION ratios of two queries from the same battery. Each pair
-# is (numerator, denominator). Expected values are SCALE-DEPENDENT and the
-# point is their round-over-round stability, not a universal "<1":
-#   q197/q191 and q196/q182 (K-scaled vs fixed-K=8): <1 at every scale,
-#     shrinking with n (sf0.1 ~0.6, sf1 ~0.25 — the n²/K law).
-#   q198/q126 and q194/q171 (derived-valve vs fixed/uncapped): ~1.2 at
-#     sf0.1 (baseline density — the valve derivation costs a model-state
-#     pass and prunes nothing) and <1 under density stress (sf1: q198/q126
-#     measured 0.21x) — the valve is insurance priced at ~20% of a cheap
-#     query, paying off 5x on the layout that needs it.
-#   q210/q203 (persisted-index probe vs recompute twin): >1 at toy corpus
-#     sizes (sf0.1 ~2.1-2.6 across r10-r13 — the persisted path pays checkpoint/scan stage
-#     floors while the recompute twin's corpus re-hash is still cheap) and
-#     <1 once the corpus costs real money to re-hash — MEASURED at sf1:
-#     0.576 / 0.561 across two r11 batteries (SCALE.md round-11 section);
-#     the recompute twin carries a corpus-bytes term the persisted form
-#     doesn't, and one decade of corpus growth flips the ratio.
-#   q214/q202 (exact-substring span scrub APPLY vs duplication profile):
-#     ~1-1.5 expected — apply adds the coverage union + per-doc rollup on
-#     top of the profile's gram aggregate, both linear in corpus tokens;
-#     the pair guards against the apply path ever regressing superlinear.
-#   q228/q73 (live-maintained IVF probe vs recompute twin — q222/q203's
-#     pattern for vectors): >1 at toy scale (the live path pays the
-#     store read + first-run replay amortization while q73's corpus
-#     re-assignment is still cheap) and flips once re-assigning the
-#     corpus costs real money — same decade-of-growth argument as
-#     q210/q203, measured there at sf1 (0.58).
-#   q232/q223 (SQ8 quantized-scan + rescore vs full-precision persisted
-#     probe, SAME index): since r14 the admission scan reads the
-#     PERSISTED int8 codes only (no float column, no vectors in the
-#     shortlist shuffle). At sf0.1 both rows are sub-second and the
-#     rescore's extra broadcast-join stage dominates — measured ~1.5;
-#     sf1 is the authoritative decade (r13 read 0.949 with inline
-#     codes; the persisted-codes form should hold <= that as the
-#     scan-bytes term grows). The pair guards plan shape; the
-#     ReadSchema test guards the claim.
-#   q237/q239 (valved vs un-valved band-bucket stage on the SAME
-#     degenerate 2000-replica corpus): <1 expected and shrinking with
-#     R — the un-valved twin pays the 4 x C(R+1,2) in-row pair grid +
-#     ~2M-pair dedup the valve exists to avoid; at a production 10^6-
-#     copy hot key the denominator never finishes (SCALE.md r14).
-#   q242/q223 (IVF-PQ probe vs full-precision probe, SAME coarse
-#     quantizer): the composed engine adds the codebook/LUT stages and
-#     the posexplode of the code arrays on top of the probe q223 runs
-#     directly — at sf0.1 both are fixed-overhead-dominated, so ~1-2.5
-#     expected (measured 2.33 in the r14 session battery; q223's row is
-#     0.66 s, so the ratio prices LUT/posexplode stage floors, not
-#     bytes); the decision q244 records is that the PQ scan's
-#     admission bytes are 64x smaller, which no toy-scale wall clock
-#     shows (q232/q223's documented caveat, one family over).
-#   q243/q242 (live-maintained PQ store probe vs bulk-file probe):
-#     q228/q73's live-vs-batch shape for the PQ index — near 1
-#     expected (same admission plan over a store read instead of a
-#     partition-pruned file; the store pays a pointer resolve, the
-#     file pays partition discovery).
-# Emitted into the detail JSON so the driver's BENCH_rN.json carries the
-# instrument, not just the wall clocks.
-CONTRAST_PAIRS = [
-    ("q197_label_noise_scaled", "q191_label_noise"),
-    ("q198_triangles_adaptive_support", "q126_copurchase_triangles"),
-    ("q194_link_prediction_adaptive", "q171_link_prediction"),
-    ("q196_semdedup_scaled", "q182_semdedup"),
-    ("q210_incremental_lsh_probe_persisted", "q203_incremental_lsh_probe"),
-    ("q214_span_scrub_apply", "q202_span_dup_profile"),
-    ("q228_live_ivf_probe", "q73_ivf_search"),
-    ("q232_ivf_sq8_rescore", "q223_ivf_probe_persisted"),
-    ("q237_lsh_bucket_valve", "q239_lsh_valve_off_demo"),
-    ("q242_ivfpq_search", "q223_ivf_probe_persisted"),
-    ("q243_ivfpq_ingest_probe", "q242_ivfpq_search"),
-    ("q252_live_ivfpq_probe", "q242_ivfpq_search"),
-    ("q264_ivf_mmr_stack", "q262_mmr_rerank"),
-    ("q249_ivfpq_refresh_apply", "q242_ivfpq_search"),
-]
-# r15 additions: q252/q242 (live-maintained codes store probe vs bulk
-# file — q243/q242's shape with the full three-epoch replay + compaction
-# history behind the store read, near 1 expected); q249/q242 (probe over
-# the REFRESHED-codebook index vs the frozen one — identical plan over
-# same-shape artifacts, near 1 expected; a drift here means the refresh
-# rebuild produced a worse layout, not just different values).
+from etl_entregas_pyspark_spark.queries import REGISTRY, registry  # noqa: E402
+from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
 
 
-def _prev_round_times() -> tuple[str | None, dict[str, float], object]:
-    """Harvest per-query times from the newest BENCH_r{N}.json at the repo
-    root (the driver's record of last round's battery) so this run can
-    flag round-over-round regressions in-round instead of leaving them
-    for the judge. The tail may hold a truncated detail line — harvest
-    every q<N>: <sec> pair visible (tools/compare_bench.py's rule).
-    Newest = highest round NUMBER (an unpadded BENCH_r9.json or a future
-    r100 would defeat a lexicographic sort). Also returns the record's
-    "sf" field (or None) so the caller can refuse cross-scale ratios."""
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    records = sorted(
-        (f for f in os.listdir(here) if re.fullmatch(r"BENCH_r\d+\.json", f)),
-        key=lambda f: int(re.search(r"\d+", f).group()),
-    )
-    if not records:
-        return None, {}, None
-    path = records[-1]
-    try:
-        with open(os.path.join(here, path)) as f:
-            rec = json.load(f)
-        parsed = rec.get("parsed") or {}
-        blob = json.dumps(parsed) + (rec.get("tail") or "")
-        # the driver stamps the battery's sf at the record's top level;
-        # fall back to the embedded JSON lines for hand-rolled records
-        rec_sf = rec.get("sf")
-        if rec_sf is None:
-            sf_vals = {
-                m.group(1)
-                for m in re.finditer(r'"sf":\s*([0-9.]+)', blob)
-            }
-            rec_sf = float(sf_vals.pop()) if len(sf_vals) == 1 else None
+def _args(argv: list[str]) -> tuple[int, bool, list[str] | None]:
+    passes, skip_demos, only = 2, False, None
+    it = iter(argv)
+    for a in it:
+        flag, eq, val = a.partition("=")
+        if flag in ("--passes", "--only") and not eq:
+            val = next(it, "")
+        if flag == "--passes":
+            passes = max(1, int(val))
+        elif flag == "--only":
+            only = [n for n in val.split(",") if n]
+        elif a == "--skip-demos":
+            skip_demos = True
         else:
-            rec_sf = float(rec_sf)
-        pairs = {
-            m.group(1): float(m.group(2))
-            for m in re.finditer(r'"(q\d+[a-z0-9_]*)":\s*([0-9.]+)', blob)
-        }
-        # The driver's tail buffer truncates the 200-query detail line to
-        # ~2 KB, so the record alone exposes only the tail fragment plus
-        # the top-5 summary (9 rows in r14 — exactly how the q233
-        # regression hid). bench.py now writes its FULL detail to
-        # BENCH_DETAIL_LAST.json on every run; when that file and the
-        # driver record came from the SAME run (same sf and every
-        # overlapping per-query value identical — both sides are
-        # round(.,3) of the same floats), use it to restore the full
-        # battery. A stale or in-round file fails the value match and is
-        # ignored.
-        try:
-            with open(os.path.join(here, "BENCH_DETAIL_LAST.json")) as f:
-                full = json.load(f)
-            fq = {k: float(v) for k, v in (full.get("queries") or {}).items()}
-            if (
-                float(full.get("sf", -1)) == rec_sf
-                and pairs
-                and all(fq.get(k) == v for k, v in pairs.items())
-            ):
-                pairs = fq
-        except (OSError, json.JSONDecodeError, ValueError, TypeError):
-            pass
-        return path, pairs, rec_sf
-    except (OSError, json.JSONDecodeError, ValueError):
-        return path, {}, None
+            sys.exit(f"unknown argument {a!r}")
+    unknown = [n for n in only or [] if n not in REGISTRY]
+    if unknown:
+        sys.exit(f"not registered: {unknown}")
+    return passes, skip_demos, only
+
+
+def _scale(sf_dir: str) -> float | str:
+    """The scale factor named by an ``sf<N>`` layout directory; any other
+    directory name is returned as-is and gets no detail file."""
+    name = os.path.basename(sf_dir.rstrip("/"))
+    try:
+        return float(name.removeprefix("sf"))
+    except ValueError:
+        return name
+
+
+def _baseline(path: str) -> dict[str, float]:
+    """Per-query times of the last full battery at this scale."""
+    try:
+        with open(path) as f:
+            return {k: float(v) for k, v in json.load(f)["queries"].items()}
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return {}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    # --passes N: timed passes per query (min kept). Default 2 — one
-    # cold-contention sample must not define a query's cost.
-    # --skip-demos: drop the tagged DEMO_BASELINES from the run — they
-    # exist only to re-prove quadratic laws already measured in SCALE.md,
-    # and at sf1 they burn ~40% of the battery (r9 VERDICT #6). Their
-    # scaled production twins (q194/q196/q197/q198) always run.
-    passes = 2
-    skip_demos = False
-    argv = sys.argv[1:]
-    for i, a in enumerate(argv):
-        if a == "--passes" and i + 1 < len(argv):
-            passes = max(1, int(argv[i + 1]))
-        elif a.startswith("--passes="):
-            passes = max(1, int(a.split("=", 1)[1]))
-        elif a == "--skip-demos":
-            skip_demos = True
-    headline = [n for n in HEADLINE if not (skip_demos and n in DEMO_BASELINES)]
+    passes, skip_demos, only = _args(sys.argv[1:])
+    sf = _scale(sf_dir)
+    demos = registry.demo_baselines()
+    pool = only or registry.battery()
+    names = [n for n in pool if not (skip_demos and n in demos)]
 
-    spark = (
-        SparkSession.builder.appName("etl-entregas-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 32)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from etl_entregas_pyspark_spark import queries as q
+    # AQE, partition coalescing and the UTC session time zone come from
+    # session.SCALE_DEFAULTS.
+    spark = build_session({"spark": {
+        "app_name": "etl-entregas-bench",
+        "master": f"local[{cpus}]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": max(int(cpus), 32),
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        },
+    }})
 
     # warm-up: JVM JIT, codegen, shuffle and noop-sink classloading, parquet
     # footer caches — so per-query times measure data throughput rather than
@@ -467,7 +125,7 @@ def main() -> None:
     )
 
     store_builds: dict[str, float] = {}
-    for label, build in (
+    for label, build in () if only else (
         ("signature_store", lambda: _ensure_sigs(spark, sf_dir)),
         ("ivf_index", lambda: _ivfx.ensure_ivf_index(spark, sf_dir)),
         ("ivfpq_index", lambda: _ivfx.ensure_ivfpq_index(spark, sf_dir)),
@@ -481,27 +139,25 @@ def main() -> None:
 
     # one untimed pass per query first: interpreted higher-order-function
     # expressions C2-compile only after a few executions, and a single cold
-    # sample can read 3x the steady-state cost. Then TWO timed passes,
+    # sample can read 3x the steady-state cost. Then the timed passes,
     # keeping the per-query minimum — a single pass is vulnerable to
     # transient machine contention (GC, co-tenant load) inflating a few
     # queries 3-4x; the min of two is the honest steady-state data cost.
-    times: dict[str, float] = {}
+    samples: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     for timed in (False,) + (True,) * passes:
-        for name in headline:
+        for name in names:
             if name in errors:
                 continue
-            spec = q.REGISTRY[name]
             t0 = time.time()
             try:
-                spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
             except Exception as e:  # one broken query must not zero the round
-                errors[name] = str(e).splitlines()[0][:200]
-                times.pop(name, None)
+                errors[name] = (str(e) or repr(e)).splitlines()[0][:200]
+                samples.pop(name, None)
                 continue
             if timed:
-                dt = round(time.time() - t0, 3)
-                times[name] = min(times.get(name, dt), dt)
+                samples.setdefault(name, []).append(round(time.time() - t0, 3))
             # hygiene OUTSIDE the timed region: drop cached frames and nudge
             # the driver GC so ContextCleaner releases the finished query's
             # localCheckpoint RDD blocks. Without this the battery slowly
@@ -523,26 +179,16 @@ def main() -> None:
             # q215 9.4s -> ~3.2s). Runs between queries, outside timing.
             spark._jvm.System.gc()
 
+    times = {n: min(s) for n, s in samples.items()}
     total = round(sum(times.values()), 3)
-    prod_total = round(
-        sum(v for k, v in times.items() if k not in DEMO_BASELINES), 3
-    )
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # round-over-round drift guardrail: flag queries >1.3x slower than
-    # the last driver-recorded battery (r8's 9-query uniform drift was
-    # only caught by the judge; this surfaces it inside the round).
-    # ALWAYS harvest the prior record — the r14 q233 regression shipped
-    # unseen because an env-var check skipped the guard whenever the
-    # driver set SPARK_GRAFT_SF_DIR, even at the default sf0.1. The only
-    # legitimate skip is a genuine scale mismatch, judged from the
-    # record's own sf stamp, never from how the path was supplied.
-    prev_name, prev, prev_sf = _prev_round_times()
-    if prev_sf != sf_val:
-        # last recorded battery ran at a different (or unknown) scale —
-        # ratios would be cross-scale nonsense, so skip the guard but
-        # still NAME the record so the skip is visible in the artifact.
-        prev_name = f"{prev_name} (skipped: sf {prev_sf} != {sf_val})" if prev_name else None
-        prev = {}
+    prod_total = round(sum(v for k, v in times.items() if k not in demos), 3)
+    # In-run drift guard: flag queries >1.3x slower than the last full
+    # battery at this scale (r8's 9-query uniform drift was only caught by
+    # the judge). The baseline is the per-SF detail file, read whenever it
+    # exists — r14's q233 regression shipped unseen because an env-var
+    # check skipped the guard.
+    detail_path = os.path.join(HERE, f"BENCH_DETAIL_sf{sf:g}.json") if isinstance(sf, float) else None
+    prev = _baseline(detail_path) if detail_path else {}
     regressions = {
         n: {"prev": prev[n], "now": t, "ratio": round(t / prev[n], 2)}
         for n, t in times.items()
@@ -550,39 +196,37 @@ def main() -> None:
     }
     contrasts = {
         f"{a}/{b}": round(times[a] / times[b], 3)
-        for a, b in CONTRAST_PAIRS
+        for a, b in registry.contrast_pairs()
         if times.get(a) and times.get(b)
     }
     # detailed per-query record first (humans / round-over-round diffing) ...
     detail = {
-                "metric": "headline_queries_detail",
-                "value": total,
-                "unit": "sec",
-                "queries": times,
-                "errors": errors,
-                "demo_baselines": sorted(DEMO_BASELINES & set(times)),
-                "demos_skipped": sorted(DEMO_BASELINES - set(headline)),
-                "production_total": prod_total,
-                "store_builds": store_builds,
-                "regressions_vs": prev_name,
-                "regressions": regressions,
-                "contrasts": contrasts,
-                "sf": sf_val,
-            }
+        "metric": "headline_queries_detail",
+        "value": total,
+        "unit": "sec",
+        "queries": times,
+        "samples": samples,
+        "errors": errors,
+        "demo_baselines": sorted(demos & set(times)),
+        "demos_skipped": sorted(demos.intersection(pool) - set(names)),
+        "production_total": prod_total,
+        "store_builds": store_builds,
+        "regressions_vs": os.path.basename(detail_path) if prev else None,
+        "regressions": regressions,
+        "contrasts": contrasts,
+        "sf": sf,
+    }
     print(json.dumps(detail))
-    # persist the FULL detail beside the repo's BENCH_r*.json records: the
-    # driver captures only a truncated stdout tail, and _prev_round_times
-    # restores the complete battery from this file when the values prove
-    # it is the same run (see there). Best-effort — a read-only checkout
-    # must not fail the bench.
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL_LAST.json"), "w"
-        ) as f:
-            json.dump(detail, f)
-            f.write("\n")
-    except OSError:
-        pass
+    # The full detail is also the next battery's baseline: the driver
+    # captures only a truncated stdout tail. Best-effort — a read-only
+    # checkout must not fail the bench.
+    if detail_path and not only:
+        try:
+            with open(detail_path, "w") as f:
+                json.dump(detail, f)
+                f.write("\n")
+        except OSError:
+            pass
     # ... then a summary LAST, as FULL-fidelity as physics allows (r15
     # VERDICT #2): the driver's stdout capture keeps only the last 2000
     # chars and parses the last complete JSON line inside it — r02's
@@ -595,7 +239,7 @@ def main() -> None:
     # are flagged, and the `queries` dict is filled SLOWEST-FIRST with as
     # many per-query rows as keep the line under a 1900-char budget
     # (~25-35 rows — every row that carries perf signal; the sub-second
-    # floor rows live in BENCH_DETAIL_LAST.json and the detail line).
+    # floor rows live in the detail line and file).
     summary = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -604,7 +248,7 @@ def main() -> None:
         "n_errors": len(errors),
         "n_regressions": len(regressions),
         "production_total": prod_total,
-        "demo_baselines": sorted(DEMO_BASELINES & set(times)),
+        "demo_baselines": sorted(demos & set(times)),
         "queries": {
             "n_queries": len(times),
             "n_errors": len(errors),
@@ -612,7 +256,7 @@ def main() -> None:
             "production_total": prod_total,
         },
         "contrasts": contrasts,
-        "sf": sf_val,
+        "sf": sf,
     }
     for name, sec in sorted(times.items(), key=lambda kv: (-kv[1], kv[0])):
         summary["queries"][name] = sec

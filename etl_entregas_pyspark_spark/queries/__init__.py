@@ -23,6 +23,7 @@ from etl_entregas_pyspark_spark.queries.registry import (
     register,
     all_queries,
     all_oracle_sql,
+    check_tiers,
 )
 
 # importing the modules populates the registry
@@ -48,6 +49,8 @@ from etl_entregas_pyspark_spark.queries import setjoin  # noqa: E402,F401
 from etl_entregas_pyspark_spark.queries import lsh_index  # noqa: E402,F401
 from etl_entregas_pyspark_spark.queries import ivf_index  # noqa: E402,F401
 from etl_entregas_pyspark_spark.queries import geo  # noqa: E402,F401
+
+check_tiers()
 
 __all__ = [
     "QuerySpec",

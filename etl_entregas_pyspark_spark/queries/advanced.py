@@ -261,6 +261,7 @@ _Q72_TEMPLATE = """
     "corpus yields the deduplicated training set. Min-label propagation "
     "already converges each doc's label to the component minimum, so the "
     "drop-list is a filter on the label frame — no extra aggregation.",
+    tier="basic",
 )
 def q72_dedup_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = _component_labels(spark, sf_dir)
@@ -684,6 +685,12 @@ _TRI_SUPPORT_MULT = 2  # support = max(2, MULT × median pair count)
     "q194's derived_cap. Pair counts reuse basket_pair_counts (no "
     "self-join); the histogram rides the already-shuffled pair "
     "aggregate, so adaptivity costs one model-state aggregation.",
+    # Bench contrast: derived valve vs fixed/uncapped: ~1.2 at sf0.1 (baseline
+    # density: the valve derivation costs a model-state pass and prunes
+    # nothing) and <1 under density stress (sf1: q198/q126 measured 0.21x).
+    # The valve is insurance priced at ~20% of a cheap query, paying off 5x on
+    # the layout that needs it.
+    contrast_of="q126_copurchase_triangles",
 )
 def q198_triangles_adaptive_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     pc = basket_pair_counts(
@@ -1171,6 +1178,7 @@ _LP_MIN_COMMON = 3
     "production first caps part degree (drop the top-percentile hubs, "
     "exactly q137's support-prune argument) — same plan, one extra "
     "filter on a part-degree aggregate.",
+    tier="on_change_only",  # guarded twins: q173 (fixed cap), q194 (adaptive)
 )
 def q171_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return link_prediction_pairs(spark, sf_dir, part_degree_cap=None)
@@ -1346,6 +1354,12 @@ _LP_CAP_PCT = 0.95
     "map-side combine absorbs most of the pair growth at this scale; "
     "the cap's role is the hub-tail bound on power-law corpora and a "
     "measured ~15% edge at the sf1 coherent layout.",
+    # Bench contrast: derived valve vs fixed/uncapped: ~1.2 at sf0.1 (baseline
+    # density: the valve derivation costs a model-state pass and prunes
+    # nothing) and <1 under density stress (sf1: q198/q126 measured 0.21x).
+    # The valve is insurance priced at ~20% of a cheap query, paying off 5x on
+    # the layout that needs it.
+    contrast_of="q171_link_prediction",
 )
 def q194_link_prediction_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select(

@@ -26,6 +26,7 @@ _STATUSES = ["F", "O", "P"]
     """,
     doc="pivot: order counts per priority × status (fixed pivot values so "
     "the plan is a single aggregate, no extra distinct pass)",
+    tier="basic",
 )
 def q29_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -60,6 +61,7 @@ def q29_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="typed JSON parsing: from_json with an explicit schema into a "
     "struct column (vs q33's path extraction) — schema-on-read for "
     "semi-structured props",
+    tier="basic",
 )
 def q37_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = E(spark, sf_dir)
@@ -92,6 +94,7 @@ def q37_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "serialized (array_join) in the final projection: the driver's "
     "canonicalizer sorts output columns with pandas, which cannot hash "
     "raw list cells (r02 VERDICT item 1).",
+    tier="basic",
 )
 def q38_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part").filter(F.col("p_partkey") <= 2000)
@@ -121,6 +124,7 @@ def q38_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="unpivot/melt: wide numeric attributes to long (key, attribute, "
     "value) rows via DataFrame.unpivot — a single Expand over the scan "
     "(rows x attributes, no shuffle, no join), q29's inverse",
+    tier="basic",
 )
 def q74_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 500)
@@ -145,6 +149,7 @@ def q74_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "GROUPING() id disambiguating NULL-as-total from NULL-as-value, via "
     "the SQL API — one Expand + one aggregate, same plan family as "
     "q12/q13",
+    tier="basic",
 )
 def q76_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     T(spark, sf_dir, "orders").createOrReplaceTempView("q76_orders")

@@ -173,6 +173,7 @@ _PER_STRATUM = 5
     doc=f"deterministic stratified sample: exactly {_PER_STRATUM} docs per "
     "language, ordered by content hash — reproducible eval-set construction "
     "(rand()-based sampling is neither exact-count nor engine-portable)",
+    tier="basic",
 )
 def q67_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

@@ -68,6 +68,7 @@ def q30_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned GROUP BY window_start
     """,
     doc="sliding window (1h size, 30m slide): every event lands in exactly two windows",
+    tier="basic",
 )
 def q31_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = E(spark, sf_dir)
@@ -131,6 +132,7 @@ def q32_events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
     doc="semi-structured JSON property extraction + aggregation",
+    tier="basic",
 )
 def q33_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = E(spark, sf_dir)

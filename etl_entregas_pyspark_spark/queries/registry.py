@@ -1,13 +1,30 @@
-"""Registry plumbing for the query corpus."""
+"""Registry plumbing for the query corpus, and the one home of query
+metadata: the bench battery, its demo baselines and contrast pairs, and the
+driver's window order are all derived from here."""
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+
+# - "production": timed by the bench battery (bench.py) and planned into
+#   PLANS.md.
+# - "basic": the q04–q92 single-operator basics and their peers. Oracle- and
+#   pytest-covered, but outside the battery, whose total is the driver's
+#   headline number.
+# - "demo": a deliberately unguarded baseline, kept registered as the
+#   measured contrast for its production twin (r7 VERDICT #5). Timed, but
+#   reported apart from production_total.
+# - "on_change_only": a demo baseline that re-proves a scaling law SCALE.md
+#   already records (r10 VERDICT #2). It keeps its registration, oracle and
+#   pytest coverage but is not enqueued for driver rows unless its code
+#   changes, so it must stay out of _PRIORITY.
+TIERS = ("production", "basic", "demo", "on_change_only")
 
 
 @dataclass(frozen=True)
@@ -16,129 +33,93 @@ class QuerySpec:
     spark: SparkQuery
     oracle: Optional[str]  # ANSI SQL for DuckDB, or None → rows-only check
     doc: str = ""
+    tier: str = "production"
+    # Denominator of a bench contrast ratio (this query's time / its time).
+    # Absolute wall clocks swing 2-3x between sandbox sessions, so
+    # regressions are judged on within-session ratios of two battery rows.
+    # The expected ratios, given at each numerator's registration, are
+    # scale-dependent: the point is their round-over-round stability, not
+    # a universal "<1".
+    contrast_of: Optional[str] = None
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: Optional[str], doc: str = "") -> Callable[[SparkQuery], SparkQuery]:
+def register(
+    name: str,
+    oracle: Optional[str],
+    doc: str = "",
+    *,
+    tier: str = "production",
+    contrast_of: Optional[str] = None,
+) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: register a (spark_fn, oracle_sql) pair under ``name``."""
+    if tier not in TIERS:
+        raise ValueError(f"{name}: unknown tier {tier!r}; expected one of {TIERS}")
 
     def wrap(fn: SparkQuery) -> SparkQuery:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = QuerySpec(
+            name=name, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
+            tier=tier, contrast_of=contrast_of,
+        )
         return fn
 
     return wrap
 
 
+def _number(name: str) -> int:
+    return int(re.match(r"q(\d+)", name).group(1))
+
+
+def battery() -> list[str]:
+    """Every query outside the basic tier, in query-number order."""
+    return sorted((n for n, s in REGISTRY.items() if s.tier != "basic"), key=_number)
+
+
+def demo_baselines() -> set[str]:
+    return {n for n, s in REGISTRY.items() if s.tier in ("demo", "on_change_only")}
+
+
+def on_change_only() -> set[str]:
+    return {n for n, s in REGISTRY.items() if s.tier == "on_change_only"}
+
+
+def contrast_pairs() -> list[tuple[str, str]]:
+    """(numerator, denominator) for each declared contrast, in battery order."""
+    return [(n, REGISTRY[n].contrast_of) for n in battery() if REGISTRY[n].contrast_of]
+
+
 # The driver's CORRECTNESS gate checks the first 50 queries in the order
-# ``queries()`` yields them. Round 1 proved the relational/events/text/
-# similarity/sketches battery green but left the flagship pipeline and the
-# newest LLM-pipeline operators outside the window. This list pins the
-# queries that still need (or just regained) driver verification to the
-# front; everything else follows in registration order, so the window is
-# always "all unproven queries + as many previously-proven as fit".
-# On-change-only tier (r10 VERDICT #2): demo baselines that exist to
-# re-prove scaling laws already recorded in SCALE.md (their production
-# twins q194/q196/q197 stay in rotation). They keep their registration,
-# oracle, and pytest coverage, but are NOT re-enqueued for driver rows
-# unless their code changes — shrinking the active rotation cycle.
-_ON_CHANGE_ONLY = {
-    "q171_link_prediction",
-    "q182_semdedup",
-    "q191_label_noise",
-}
-
-# The demo tier is exactly the set of registered queries MANUALLY omitted
-# from _PRIORITY; the assert below (checked at import time, so every pytest
-# and driver run trips it) keeps the set and the list from silently
-# drifting apart (r11 ADVICE #4).
-
+# ``queries()`` yields them. This list pins the queries that most need
+# driver verification to the front: first the newest registrations, which
+# have no driver row yet, then the oldest rotating evidence. Everything else
+# follows in registration order. On-change-only queries never appear here
+# (check_tiers).
 _PRIORITY = [
-    # --- round-15 window (the r14 registry plan executed: new r15
-    # registrations first, then the FULL r10 cohort — after the r14
-    # window re-proved the r9 remainder, the r10 rows are the oldest
-    # rotating evidence (age 4) — then backfill to 50 from the r11
-    # cohort). q182/q191 stay out DELIBERATELY despite being the only
-    # age-7 rows: they are on-change-only demo baselines (fixed-K=8
-    # twins whose n²/K law is recorded in SCALE.md; their scaled
-    # production twins q196/q197 rotate normally) and their code has
-    # not changed since r7 — the import-time guard below enforces the
-    # separation. -----------------------------------------------------
-    # (a) NEW this round: the IVF-PQ codebook LIFECYCLE that the r14
-    # VERDICT named as the engine's missing half — q248 the residual
-    # drift audit (per-subspace quantization error of the arrived
-    # epoch vs the standing corpus against the frozen codebook, q231's
-    # retrain-decision instrument for the inner quantizer) and q249
-    # the refresh apply (one Lloyd step on the COMMITTED code
-    # assignments, re-encode, probe vs a from-scratch oracle rebuild,
-    # q234's contract) — plus q250 the ANN engine CHOOSER (the
-    # cost-based decision that consumes q244's matrix: budget-feasible
-    # highest-measured-recall engine, fidelity tie-break), q251 the
-    # packed-batch ASSIGNMENT executing q247's plan (uniform-slot FFD
-    # = window-arithmetic chunking within sharded length buckets), and
-    # q252 the LIVE-maintained PQ codes store probe (foreachBatch
-    # encode against frozen model state, epoch fencing + mid-stream
-    # compaction, q242's oracle verbatim — q228's streaming contract
-    # for the composed engine).
+    # newest registrations first
     "q248_ivfpq_drift_audit",
     "q249_ivfpq_refresh_apply",
     "q250_ann_engine_choice",
     "q251_packed_batch_assign",
     "q252_live_ivfpq_probe",
-    # session-2 registrations: the rescore-budget sweep the composed
-    # engine was missing (q236/q241's instrument for IVF-PQ), the SQ8
-    # range/clip drift audit (closing the quantizer-audit symmetry:
-    # coarse q231, residual-PQ q248, scalar q254), and the stream-STATIC
-    # dimension-enrichment join (the Structured Streaming join family
-    # the corpus lacked; live twin equivalence-pinned in
-    # tests/test_streaming.py)
     "q253_ivfpq_shortlist_sweep",
     "q254_sq8_clip_audit",
     "q255_stream_static_enrich",
-    # ... and the filter rejection-attribution ledger (which rule
-    # killed each document — q88's keep rate with first-fail
-    # attribution, tie-out pinned by test)
     "q256_filter_attribution",
-    # session-3 registrations: the BPE merge-mining loop (tokenizer
-    # TRAINING as a vocabulary-bounded iterative plan — rule-for-rule
-    # replay vs a pure-Python Sennrich reference pinned by test), the
-    # contamination depth profile (eval-side n-gram overlap decay
-    # across n — q64's attribution at one width, this the curve),
-    # preference-pair construction (DPO data prep: per-source
-    # top-vs-bottom integer-quality pairing), and dedup-aware sampling
-    # weights (SOFT dedup: 1/class-size reweighting in exact integer
-    # micro-units)
     "q257_bpe_merge_mining",
     "q258_contamination_depth",
     "q259_preference_pairs",
     "q260_dedup_sampling_weights",
-    # ... and the BPE compression curve (per-round re-encode; the
-    # overlap_deficit column differentially pins the greedy-apply
-    # convention itself)
     "q261_bpe_compression_curve",
-    # ... and MMR diversified re-rank (dedup-aware retrieval: greedy
-    # lam*rel - (1-lam)*max-sim selection over the relevance pool,
-    # pick-for-pick replay vs a pure-Python reference pinned by test)
     "q262_mmr_rerank",
-    # ... and the decontamination ADMISSION LEDGER, the live ingest
-    # gate's batch twin (live form in streaming/admission.py shares the
-    # gating function; equivalence + exactly-once re-delivery pinned in
-    # tests/test_streaming.py)
     "q263_admission_ledger",
-    # ... and the composed retrieval stack (q223's persisted-IVF probe
-    # widened to the relevance pool, re-ranked by the SAME mmr_greedy
-    # trajectory as q262 — first pick tie-out vs q223 pinned by test)
     "q264_ivf_mmr_stack",
-    # ... and the leakage-safe split (q63's content-hash split with
-    # cross-split n-gram leakage forced into train; the emitted eval
-    # splits share ZERO scrub-width grams with train, pinned by test)
     "q265_leakage_safe_split",
-    # (b) the r10 cohort (age 4 — exactly the last=r10 rows in the
-    # CORRECTNESS_r1..r14 union, minus the on-change-only demo q171),
-    # name-order.
+    # then the r10 cohort, the oldest rotating driver rows (q171 is
+    # on-change-only), in name order
     "q150_bucketed_dedup_chain",
     "q151_stream_upsert_sink",
     "q152_setjoin_prefix_filter",
@@ -171,22 +152,20 @@ _PRIORITY = [
     "q215_ivf_recall_audit",
     "q26_math_funcs",
     "q27_conditional_agg",
-    # with the session-3 registrations the head holds EIGHTEEN new
-    # rows, so the 50-cut lands after q27_conditional_agg;
-    # q29_pivot, q33_events_json … q56_cosine_near_dup (the r10 cohort's last
-    # name-order rows) plus the whole r11 cohort
-    # (q100_incremental_dedup … q71_alto_valor_flag, name-order) head
-    # the r16 window.
+    # The 50-cut lands after q27_conditional_agg. The rest of the r10
+    # cohort (q29_pivot, q33_events_json … q56_cosine_near_dup) and the
+    # whole r11 cohort head the next window.
 ]
 
-# checked at import time so every pytest and driver run trips it; an
-# explicit raise, not an assert, so `python -O` cannot strip the guard
-# (r12 ADVICE #4)
-if not _ON_CHANGE_ONLY.isdisjoint(_PRIORITY):
-    raise ValueError(
-        "on-change-only demo queries must not be enqueued for driver rows: "
-        f"{sorted(_ON_CHANGE_ONLY.intersection(_PRIORITY))}"
-    )
+
+def check_tiers() -> None:
+    """Raise if an on-change-only query is enqueued for driver rows. Runs
+    once the registry is populated (the end of ``queries/__init__.py``), so
+    every pytest and driver run trips it; a raise, not an assert, so
+    ``python -O`` cannot strip it (r12 ADVICE #4)."""
+    enqueued = on_change_only().intersection(_PRIORITY)
+    if enqueued:
+        raise ValueError(f"on-change-only demo queries must not be enqueued for driver rows: {sorted(enqueued)}")
 
 
 def _ordered() -> list[str]:

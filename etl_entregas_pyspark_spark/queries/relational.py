@@ -170,6 +170,7 @@ def q06_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderpriority
     """,
     doc="single-pass conditional aggregation (sum-of-when — the engine's quality-metric pattern)",
+    tier="basic",
 )
 def q27_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -189,6 +190,7 @@ def q27_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) GROUP BY n_orders
     """,
     doc="aggregate-of-aggregate with HAVING",
+    tier="basic",
 )
 def q28_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -209,6 +211,7 @@ def q28_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (r_name, n_name)
     """,
     doc="hierarchical rollup with GROUPING indicators",
+    tier="basic",
 )
 def q12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
@@ -232,6 +235,7 @@ def q12_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
     doc="full cube over two dimensions",
+    tier="basic",
 )
 def q13_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")
@@ -290,6 +294,7 @@ def q03_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
     doc="TPC-H Q4 flavor: EXISTS decorrelated to a left-semi join",
+    tier="basic",
 )
 def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").filter(
@@ -351,6 +356,7 @@ def q05_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_custkey, c.c_mktsegment
     """,
     doc="left outer join preserving unmatched rows (COUNT of nullable side)",
+    tier="basic",
 )
 def q07_left_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
@@ -375,6 +381,7 @@ def q07_left_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_mktsegment
     """,
     doc="left-anti join: customers with no orders in the window",
+    tier="basic",
 )
 def q08_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
@@ -397,6 +404,7 @@ def q08_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_nationkey
     """,
     doc="left-semi join: customers having at least one finished order",
+    tier="basic",
 )
 def q09_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")
@@ -420,6 +428,7 @@ def q09_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ON cu.nk = su.nk
     """,
     doc="full outer join of two aggregates with COALESCE null-merge",
+    tier="basic",
 )
 def q10_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = (
@@ -500,6 +509,7 @@ def q14_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     doc="running total per customer (exact decimal accumulation)",
+    tier="basic",
 )
 def q15_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -524,6 +534,7 @@ def q15_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     doc="lag: per-customer order-to-order spend delta (NULL for first order)",
+    tier="basic",
 )
 def q16_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -547,6 +558,7 @@ def q16_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     "approximates with a constant). Deliberately the non-scalable shape — a "
     "single-partition global sort; at scale use q71 (scalar percentile "
     "threshold broadcast to a map-side flag) or q35 (percentile_approx)",
+    tier="basic",
 )
 def q17_window_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
@@ -595,6 +607,7 @@ def q18_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
          UNION SELECT DISTINCT s_nationkey FROM supplier)
     """,
     doc="union / intersect / except over nation keys, tagged",
+    tier="basic",
 )
 def q19_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk")).distinct()
@@ -609,6 +622,7 @@ def q19_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q20_distinct",
     "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
     doc="distinct pairs (hash-aggregate dedup)",
+    tier="basic",
 )
 def q20_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
@@ -632,6 +646,7 @@ def q20_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     """,
     doc="string function battery (upper/substr/length/concat/replace/lpad/trim)",
+    tier="basic",
 )
 def q21_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part")
@@ -661,6 +676,7 @@ def q21_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="temporal derivations (year/quarter/month/day/dayofweek/weekofyear/trunc); "
     "dow normalized to Spark's 1=Sunday convention on the oracle side",
+    tier="basic",
 )
 def q22_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -689,6 +705,7 @@ def q22_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderkey <= 1000
     """,
     doc="null semantics: nullif / coalesce / CASE-to-null / IS NULL",
+    tier="basic",
 )
 def q23_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000)
@@ -714,6 +731,7 @@ def q23_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem WHERE l_orderkey <= 500
     """,
     doc="entregas-style derived columns (bucket CASE chains, boolean flags, rounded arithmetic — F2/F16/F17/F18 parity shapes)",
+    tier="basic",
 )
 def q24_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 500)
@@ -737,6 +755,7 @@ def q24_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     """,
     doc="map-literal lookup (F6 parity: miss → NULL); scalable form is q11's broadcast join",
+    tier="basic",
 )
 def q25_map_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = T(spark, sf_dir, "nation")
@@ -759,6 +778,7 @@ def q25_map_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part
     """,
     doc="math battery (abs/ceil/floor/sqrt/ln/power/mod; transcendentals rounded to absorb libm ulp differences)",
+    tier="basic",
 )
 def q26_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part")
@@ -802,6 +822,7 @@ def q26_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape shuffles each table once on the key it is already keyed by; "
     "the classic fact-vs-detail integrity audit a 100-TB warehouse runs "
     "nightly.",
+    tier="basic",
 )
 def q81_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (

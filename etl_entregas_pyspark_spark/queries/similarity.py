@@ -134,6 +134,7 @@ def _ipow_sql(expr: str, n: int) -> str:
     FROM embeddings
     """,
     doc="ArrayType(float) column plumbing: per-vector dimension and exact L2 norm",
+    tier="basic",
 )
 def q50_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
@@ -218,6 +219,7 @@ def q51_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     """,
     doc="10-NN majority-label vote per query vector (deterministic tie-break on label)",
+    tier="basic",
 )
 def q52_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = q51_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
@@ -659,6 +661,7 @@ def _q54_oracle() -> str:
     _q54_oracle(),
     doc=f"{_SIMHASH_BITS}-bit SimHash per document over distinct tokens "
     "(bit b set iff the +1/−1 majority of token-hash bit b is positive)",
+    tier="basic",
 )
 def q54_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
@@ -804,6 +807,7 @@ def ivf_assign(src: DataFrame, cent: DataFrame, keep: int = 1) -> DataFrame:
     doc="IVF inverted-file layout: assign every vector to its nearest of 8 "
     "fixed centroids (exact L2², deterministic argmin) and report bucket stats; "
     "at scale the ANN search probes only the query's bucket",
+    tier="basic",
 )
 def q55_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
@@ -862,6 +866,7 @@ def _q8_sql(expr: str) -> str:
     "vectors whose integer dot products are exact and engine-portable — "
     "the storage/bandwidth play for ANN at 100 TB; per-label integrity "
     "stats over the quantized codes",
+    tier="basic",
 )
 def q68_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
@@ -1003,6 +1008,7 @@ _KM_SCALE = 10_000_000  # float -> scaled-int for order-independent sums
     "accumulation (order-independent, engine-portable); the iterative "
     "driver loop is q62's localCheckpoint pattern applied to centroids, "
     "which stay k x dim sized — broadcastable at any corpus scale.",
+    tier="basic",
 )
 def q75_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
@@ -1689,6 +1695,7 @@ _SEMDEDUP_COS_SQL = """list_sum(list_transform(list_zip(a.embedding, b.embedding
     "shuffle once on centroid_id. Cosines are exact doubles on both "
     "engines (float32 products, sequential fold — the module contract), "
     "so the τ comparison is portable with no rounding guard.",
+    tier="on_change_only",  # K-scaled twin: q196
 )
 def q182_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_prune(spark, sf_dir, n_centroids=8)
@@ -1955,6 +1962,7 @@ def _label_noise_oracle(n_centroids: int | str, derived_k: bool = False) -> str:
     "This K=8 form is the DEMONSTRATION BASELINE kept for measured "
     "contrast; q197 registers the same operator at the production "
     "centroid count (the q182→q196 pattern).",
+    tier="on_change_only",  # K-scaled twin: q197
 )
 def q191_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_noise_flags(spark, sf_dir, n_centroids=8)
@@ -2303,6 +2311,9 @@ _SEMDEDUP_K = 32
     "centroids broadcast, pair join equi-keyed on centroid_id, "
     "per-cluster audit output; only K differs, so diffing q182's and "
     "q196's outputs IS the boundary-approximation measurement.",
+    # Bench contrast: K-scaled vs fixed-K=8: <1 at every scale, shrinking with
+    # n (sf0.1 ~0.6, sf1 ~0.25 — the n²/K law).
+    contrast_of="q182_semdedup",
 )
 def q196_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_prune(spark, sf_dir, n_centroids=_SEMDEDUP_K)
@@ -2333,6 +2344,9 @@ def q196_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     "measurement. Production derives K from corpus size (sqrt(n) IVF "
     "rule) — this registered form makes the knob oracle-checked rather "
     "than a docstring promise.",
+    # Bench contrast: K-scaled vs fixed-K=8: <1 at every scale, shrinking with
+    # n (sf0.1 ~0.6, sf1 ~0.25 — the n²/K law).
+    contrast_of="q191_label_noise",
 )
 def q197_label_noise_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_noise_flags(spark, sf_dir, n_centroids=_SEMDEDUP_K)
@@ -3277,6 +3291,12 @@ def _q237_oracle() -> str:
     "hot class moves as skinny (doc_id, sig) rows through hash "
     "aggregates — per-task memory is bounded by cap^2 structs "
     "regardless of replica multiplicity.",
+    # Bench contrast: valved vs un-valved band-bucket stage on the SAME
+    # degenerate 2000-replica corpus: <1 expected and shrinking with R. The
+    # un-valved twin pays the 4 x C(R+1,2) in-row pair grid and ~2M-pair dedup
+    # the valve exists to avoid; at a production 10^6-copy hot key the
+    # denominator never finishes (SCALE.md r14).
+    contrast_of="q239_lsh_valve_off_demo",
 )
 def q237_lsh_bucket_valve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
@@ -3420,6 +3440,7 @@ def _q239_oracle() -> str:
     "premium, and the SCALE.md r14 table extrapolates the 10^6-copy "
     "hot key where this baseline simply never finishes. Runs at demo "
     "scale only because R is small — that is the point.",
+    tier="demo",  # valved twin: q237 (r14 valve)
 )
 def q239_lsh_valve_off_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the demo's POINT is the un-valved pair grid below; the hashing

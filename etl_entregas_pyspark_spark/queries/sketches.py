@@ -38,6 +38,7 @@ from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spre
     "|HLL - exact| <= 5% * exact (5x the configured rsd) and the oracle "
     "asserts it literally — a hash mismatch means the sketch left its "
     "published error envelope.",
+    tier="basic",
 )
 def q34_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -73,6 +74,7 @@ def q34_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "accuracy=10000 guarantees rank error <= 1e-4, so the sketch value "
     "must lie inside the exact [p-0.01, p+0.01] quantile envelope; "
     "Spark emits that boolean, the oracle asserts it.",
+    tier="basic",
 )
 def q35_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -108,6 +110,7 @@ def q35_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="exact continuous percentiles (SQL-standard linear interpolation — "
     "identical semantics in Spark `percentile` and DuckDB `quantile_cont`)",
+    tier="basic",
 )
 def q36_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders")
@@ -131,6 +134,7 @@ def q36_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="BPE-ish regex tokenizer (letter runs / digit runs / single "
     "punctuation) — token counting without a trained vocab",
+    tier="basic",
 )
 def q46_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
@@ -163,6 +167,7 @@ _RP = 2147483647
     doc="document fingerprinting via rolling polynomial hash over "
     "codepoints (base 31 mod 2^31-1) — an md5-free content fingerprint "
     "whose incremental form supports chunk-level dedup",
+    tier="basic",
 )
 def q47_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
@@ -278,6 +283,7 @@ def q56_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fixed-point-quantized values: the integer sums Σx, Σx², Σxy are exact "
     "and order-independent, so the derived moments are deterministic under "
     "any partitioning — the portable form of stddev/corr at scale",
+    tier="basic",
 )
 def q65_statistical_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = T(spark, sf_dir, "lineitem")

@@ -28,6 +28,7 @@ from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd
     """,
     doc="scalar subquery in a predicate: parts above the global average "
     "price (Catalyst plans the subquery once and broadcasts the scalar)",
+    tier="basic",
 )
 def q39_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = T(spark, sf_dir, "part")
@@ -66,6 +67,7 @@ def q39_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="posexplode (UNNEST WITH ORDINALITY): token positional statistics "
     "across documents",
+    tier="basic",
 )
 def q49_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)

@@ -30,6 +30,7 @@ from etl_entregas_pyspark_spark.queries.relational import T, _dsum_sql, _rnd_sql
     FROM documents WHERE doc_id < 200
     """,
     doc="per-document token counting (whitespace tokenizer) and length stats",
+    tier="basic",
 )
 def q40_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -56,6 +57,7 @@ def q40_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents GROUP BY lang
     """,
     doc="corpus profile per language",
+    tier="basic",
 )
 def q41_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
@@ -111,6 +113,7 @@ def _occurrences_sql(expr: str, needle: str) -> str:
     FROM documents GROUP BY source
     """,
     doc="n-gram/stopword language-ID heuristic (en stopword hits)",
+    tier="basic",
 )
 def q43_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
@@ -132,6 +135,7 @@ def q43_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents WHERE doc_id < 200
     """,
     doc="document quality score: length saturation + lexical diversity (distinct-token ratio)",
+    tier="basic",
 )
 def q44_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
@@ -611,6 +615,7 @@ def q90_denylist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "size, so the exchange after the partial aggregate is constant-width "
     "— the size-distribution profile a data loader consults for packing/"
     "padding decisions.",
+    tier="basic",
 )
 def q92_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = T(spark, sf_dir, "documents")
@@ -1769,6 +1774,11 @@ def _q214_oracle() -> str:
     "shuffles keyed by gram / (doc, pos). At 100 TB this is the "
     "cheapest exact-dedup arm there is: no signatures, no pairs, two "
     "token-bounded shuffles.",
+    # Bench contrast: span scrub apply vs duplication profile: ~1-1.5
+    # expected. Apply adds the coverage union and per-doc rollup on top of the
+    # profile's gram aggregate, both linear in corpus tokens; the pair guards
+    # against the apply path ever regressing superlinear.
+    contrast_of="q202_span_dup_profile",
 )
 def q214_span_scrub_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _SPAN_W

@@ -5,7 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -39,17 +39,16 @@ FIXTURE_PARTITION_ROWS = {"20250114": 2, "20250215": 2, "20250321": 1, "20250602
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.appName("etl-entregas-tests")
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    session.sparkContext.setLogLevel("ERROR")
+    session = build_session({"spark": {
+        "app_name": "etl-entregas-tests",
+        "master": "local[4]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "4g",
+        },
+    }})
     yield session
     session.stop()
 

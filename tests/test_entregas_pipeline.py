@@ -254,18 +254,18 @@ def _fixture_pipeline(spark, tmp_path):
 _RETRY_SCRIPT = r"""
 import json, os, sys
 from pyspark import TaskContext
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 from etl_entregas_pyspark_spark.config import load_config
 from etl_entregas_pyspark_spark.operators.pipeline import EntregasPipeline
+from etl_entregas_pyspark_spark.session import build_session
 
 fixture, work = sys.argv[1], sys.argv[2]
 lines = open(fixture).read().splitlines()
 with open(os.path.join(work, "in.csv"), "w") as fh:
     fh.write("\n".join(lines[:1] + lines[1:] * 40) + "\n")
 marker = os.path.join(work, "failed_once")
-spark = (SparkSession.builder.master("local[2,2]").config("spark.ui.enabled", "false")
-         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
-spark.sparkContext.setLogLevel("OFF")
+spark = build_session({"spark": {"master": "local[2,2]", "log_level": "OFF", "configs": {
+    "spark.ui.enabled": "false", "spark.sql.shuffle.partitions": "4"}}})
 
 
 def flaky(value, calls=[0]):

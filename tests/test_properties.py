@@ -3,7 +3,7 @@ quality ladder hold for arbitrary inputs, not just the shipped fixtures."""
 
 import duckdb
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -79,8 +79,18 @@ CONFIG = {
 }
 
 
+# With max_examples=5 a draw may miss the widened values, so explicit rows
+# always exercise them: a NULL delivery type with a valid material is
+# removed by P2 (isin() is NULL, and the sequential filter drops the row),
+# and a lowercase "cobr" is not a valid type.
+_NULL_TYPE_ROW = ("GT", "20250101", "67000001", "919885", None, "MAT1", "1.50", "1.00", "CS")
+_VALID_ROW = ("gt", "20250630", "67000001", "100200", "ZPRE", "MAT2", "0E-18", "1.00", "ST")
+_LOWER_COBR_ROW = ("Pe", "20250101", "67000001", "919885", "cobr", "MAT1", "1.50", "1.00", "CS")
+
+
 @settings(max_examples=5, deadline=None)
 @given(entregas_rows)
+@example([_NULL_TYPE_ROW, _VALID_ROW])
 def test_single_pass_metrics_equal_sequential_counts(spark_prop, rows):
     """metrics_frame (one aggregation) must equal the reference's
     rule-by-rule sequential counting for ANY input."""
@@ -125,6 +135,7 @@ observed_rows = st.lists(
 
 @settings(max_examples=5, deadline=None)
 @given(observed_rows)
+@example([_NULL_TYPE_ROW, _VALID_ROW, _LOWER_COBR_ROW, _NULL_TYPE_ROW])
 def test_observed_ladder_equals_one_pass_metrics(spark_prop, rows):
     """The ladder observed on the pipeline's action (quality.observe_quality)
     equals the one-aggregation metrics for ANY input."""

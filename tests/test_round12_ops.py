@@ -4,7 +4,7 @@ Covers, as they land this round:
 - the empty-micro-batch fix in ``upsert_batch_bucketed`` (r11 ADVICE #1:
   foreachBatch may deliver empty batches; the bucketed merge used to
   raise on ``repartition(0)``),
-- the ``_ON_CHANGE_ONLY`` / ``_PRIORITY`` disjointness assert (ADVICE #4).
+- the on-change-only tier / ``_PRIORITY`` disjointness guard (ADVICE #4).
 """
 
 from __future__ import annotations
@@ -80,12 +80,9 @@ class TestEmptyMicroBatch:
 
 class TestRegistryDemoTier:
     def test_on_change_only_disjoint_from_priority(self):
-        from etl_entregas_pyspark_spark.queries.registry import (
-            _ON_CHANGE_ONLY,
-            _PRIORITY,
-        )
+        from etl_entregas_pyspark_spark.queries import registry
 
-        assert _ON_CHANGE_ONLY.isdisjoint(_PRIORITY)
+        assert registry.on_change_only().isdisjoint(registry._PRIORITY)
 
 
 # ---------------------------------------------------------------------------

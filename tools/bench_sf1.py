@@ -1,6 +1,6 @@
 """sf1 bench record: replicate sf0.1 facts 10× in /tmp (shifted keys —
 `tools/growth_exponent.py`'s layout, including the worst-case IDENTICAL
-10× document duplication) and run the full `bench.py` headline battery
+10× document duplication) and run the full `bench.py` battery
 against it, writing `BENCH_SF1.json` at the repo root.
 
 This turns SCALE.md's 100×-survival arguments into a measured artifact at
@@ -24,20 +24,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def build_replica(replicas: int) -> tuple[str, dict]:
-    from pyspark.sql import SparkSession
-
+    from etl_entregas_pyspark_spark.session import build_session
     from tools.growth_exponent import FACTS, build
 
-    spark = (
-        SparkSession.builder.appName("bench-sf1-build")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session({"spark": {
+        "app_name": "bench-sf1-build",
+        "master": f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": "64",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
+    }})
     try:
         out_dir = build(spark, replicas)
         rows = {name: spark.read.parquet(f"{out_dir}/{name}.parquet").count() for name in FACTS}
@@ -107,7 +106,7 @@ def main() -> None:
             elif rec["metric"] == "headline_queries_total_wall":
                 summary = rec
         record = {
-            "sf": 1.0,
+            "sf": replicas / 10,
             "built_from": f"{replicas}x sf0.1 (shifted fact keys; customer "
                           "replicated coherently with the shifted o_custkey; "
                           "documents and embeddings duplicated verbatim under "
@@ -136,7 +135,7 @@ def main() -> None:
         }))
     finally:
         if not keep:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
 
 
 if __name__ == "__main__":

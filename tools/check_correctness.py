@@ -155,22 +155,22 @@ def main() -> int:
         return freshness()
 
     import duckdb
-    from pyspark.sql import SparkSession
+
+    from etl_entregas_pyspark_spark.session import build_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = (
-        SparkSession.builder.appName("check-correctness")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session({"spark": {
+        "app_name": "check-correctness",
+        "master": f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": "16",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "8g",
+        },
+    }})
 
     con = duckdb.connect()
     for t in TABLES:

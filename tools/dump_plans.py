@@ -1,4 +1,4 @@
-"""Regenerate PLANS.md: formatted physical plans for the headline queries,
+"""Regenerate PLANS.md: formatted physical plans for the battery queries,
 so plan-quality properties (pushdown, pruning, broadcast choice, top-k,
 bucketing) are reviewable without running Spark.
 
@@ -12,223 +12,25 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-HEADLINE = [
-    "q01_pricing_summary",
-    "q03_top_orders",
-    "q05_region_revenue",
-    "q11_broadcast_brand",
-    "q14_window_topn",
-    "q18_topk_orders",
-    "q30_events_tumbling",
-    "q53_minhash_near_dup",
-    "q60_entregas_pipeline",
-    "q61_entregas_quality_metrics",
-    "q62_dedup_components",
-    "q64_decontamination",
-    "q66_chunking",
-    "q69_trailing_range_window",
-    "q70_gap_fill_forward",
-    "q71_alto_valor_flag",
-    "q73_ivf_search",
-    "q78_tfidf_top_terms",
-    "q79_salted_aggregate",
-    "q80_latest_per_key",
-    "q82_sequence_packing",
-    "q83_sessionization",
-    "q84_funnel",
-    "q85_repetition_profile",
-    "q86_mixture_weights",
-    "q87_expectation_audit",
-    "q88_corpus_filter",
-    "q89_heavy_hitters",
-    "q90_denylist_scrub",
-    "q91_exists_decorrelated",
-    "q92_length_histogram",
-    "q93_dedup_pipeline",
-    "q100_incremental_dedup",
-    "q101_ohlc_bars",
-    "q102_rolling_zscore",
-    "q103_bigram_counts",
-    "q104_cdc_apply",
-    "q105_per_key_sample",
-    "q106_kmeans_loop",
-    "q107_skew_split_join",
-    "q108_twap",
-    "q109_minmax_scale",
-    "q110_boilerplate_score",
-    "q111_cluster_canonical",
-    "q112_winsorize",
-    "q113_debounce_dedup",
-    "q114_user_paths",
-    "q115_pagerank",
-    "q116_pii_redaction",
-    "q117_vocab_coverage",
-    "q118_basket_pairs",
-    "q119_benford_audit",
-    "q120_transition_matrix",
-    "q121_mad_outliers",
-    "q122_group_ols",
-    "q123_weighted_sample",
-    "q124_hourly_churn",
-    "q125_inverted_index",
-    "q126_copurchase_triangles",
-    "q127_quantile_bucketize",
-    "q128_bm25_scoring",
-    "q129_multimodal_embed",
-    "q130_zorder_layout",
-    "q131_global_index",
-    "q132_bloom_semi_join",
-    "q133_interval_islands",
-    "q134_pareto_skyline",
-    "q135_power_iteration",
-    "q136_chisq_drift",
-    "q137_association_rules",
-    "q138_auc_rank",
-    "q139_ks_drift",
-    "q140_split_gain",
-    "q141_bigram_perplexity",
-    "q142_country_filter",
-    "q143_fk_integrity",
-    "q144_decay_score",
-    "q145_count_min_sketch",
-    "q146_last_touch_attribution",
-    "q147_distinct_n",
-    "q148_rrf_fusion",
-    "q149_seasonal_anomaly",
-    "q150_bucketed_dedup_chain",
-    "q151_stream_upsert_sink",
-    "q152_setjoin_prefix_filter",
-    "q153_sliding_distinct",
-    "q154_calibration_bins",
-    "q155_psi_drift",
-    "q156_feature_matrix",
-    "q157_negative_sampling",
-    "q158_containment_join",
-    "q159_linear_attribution",
-    "q160_interval_overlap_join",
-    "q161_proportional_allocation",
-    "q162_bfs_levels",
-    "q163_weighted_sample_noreplace",
-    "q164_category_entropy",
-    "q165_ab_proportion_test",
-    "q166_golden_record",
-    "q167_pmi_cooccurrence",
-    "q168_geo_distance_join",
-    "q169_hierarchy_rollup",
-    "q170_rolling_corr",
-    "q171_link_prediction",
-    "q172_clamped_running_sum",
-    "q173_link_prediction_capped",
-    "q174_sliding_distinct_bucketed",
-    "q176_hll_sketch_rollup",
-    "q177_jl_projection_topk",
-    "q178_group_split",
-    "q179_hard_negative_mining",
-    "q180_contamination_score",
-    "q181_balanced_resample",
-    "q182_semdedup",
-    "q183_phash_near_dup",
-    "q184_rolling_psi",
-    "q185_compaction_planner",
-    "q186_cohens_kappa",
-    "q187_merkle_partition_diff",
-    "q188_pretrain_funnel",
-    "q189_sketch_calibration",
-    "q190_stratified_kfold",
-    "q191_label_noise",
-    "q192_lsh_recall_audit",
-    "q193_epoch_shuffle",
-    "q194_link_prediction_adaptive",
-    "q195_source_overlap_matrix",
-    "q196_semdedup_scaled",
-    "q197_label_noise_scaled",
-    "q198_triangles_adaptive_support",
-    "q199_semdedup_auto",
-    "q200_label_noise_auto",
-    "q202_span_dup_profile",
-    "q203_incremental_lsh_probe",
-    "q204_source_divergence",
-    "q205_join_skew_plan",
-    "q206_tokenizer_fertility",
-    "q207_centroid_drift",
-    "q208_pps_sample_audit",
-    "q209_zipf_slope",
-    "q210_incremental_lsh_probe_persisted",
-    "q211_ingest_apply",
-    "q214_span_scrub_apply",
-    "q215_ivf_recall_audit",
-    "q217_band_index_reconcile",
-    "q218_scrub_budget_by_source",
-    "q219_snapshot_novelty",
-    "q220_mixture_plan",
-    "q221_ingest_commit",
-    "q222_live_index_probe",
-    "q223_ivf_probe_persisted",
-    "q224_ivf_ingest_commit",
-    "q225_ivf_reconcile",
-    "q226_deletion_propagation",
-    "q227_ivf_deletion_propagation",
-    "q228_live_ivf_probe",
-    "q229_ivf_scrub_under_ingest",
-    "q230_ivf_nprobe_sweep",
-    "q231_ivf_centroid_refresh",
-    "q232_ivf_sq8_rescore",
-    "q233_lsh_band_plan_sweep",
-    "q234_ivf_refresh_apply",
-    "q235_lsh_replan_from_signatures",
-    "q236_sq8_shortlist_sweep",
-    "q237_lsh_bucket_valve",
-    "q238_ivf_centroid_plan",
-    "q240_pq_adc_search",
-    "q241_pq_shortlist_sweep",
-    "q242_ivfpq_search",
-    "q243_ivfpq_ingest_probe",
-    "q244_ann_engine_matrix",
-    "q245_ivfpq_forget_probe",
-    "q246_semantic_decontamination",
-    "q247_length_bucket_plan",
-    "q248_ivfpq_drift_audit",
-    "q249_ivfpq_refresh_apply",
-    "q250_ann_engine_choice",
-    "q251_packed_batch_assign",
-    "q252_live_ivfpq_probe",
-    "q253_ivfpq_shortlist_sweep",
-    "q254_sq8_clip_audit",
-    "q255_stream_static_enrich",
-    "q256_filter_attribution",
-    "q257_bpe_merge_mining",
-    "q258_contamination_depth",
-    "q259_preference_pairs",
-    "q260_dedup_sampling_weights",
-    "q261_bpe_compression_curve",
-    "q262_mmr_rerank",
-    "q263_admission_ledger",
-    "q264_ivf_mmr_stack",
-    "q265_leakage_safe_split",
-]
+from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.appName("dump-plans")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session({"spark": {
+        "app_name": "dump-plans",
+        "master": "local[8]",
+        "log_level": "ERROR",
+        "configs": {"spark.sql.shuffle.partitions": "16", "spark.ui.enabled": "false"},
+    }})
     from etl_entregas_pyspark_spark import queries as q
 
+    names = q.registry.battery()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out = [
-        f"# PLANS — formatted physical plans for the {len(HEADLINE)} headline"
-        " queries (of the full registry; scoped by tools/dump_plans.py"
-        " HEADLINE — a curated review set, not the whole corpus)",
+        f"# PLANS — formatted physical plans for the {len(names)} battery"
+        " queries (every registered query outside the basic tier, the set"
+        " bench.py times)",
         "",
         f"Generated by `python tools/dump_plans.py {sf_dir}`. Reviewed properties:",
         "`PushedFilters`/`ReadSchema` (pushdown + pruning), `BroadcastHashJoin`",
@@ -279,7 +81,7 @@ def main() -> None:
         ],
     }
 
-    for name in HEADLINE:
+    for name in names:
         plan = (
             q.REGISTRY[name]
             .spark(spark, sf_dir)
@@ -292,7 +94,7 @@ def main() -> None:
             out.append(f"### {name} — {title}\n\n```\n{sub.strip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"PLANS.md written ({len(HEADLINE)} plans)")
+    print(f"PLANS.md written ({len(names)} plans)")
     spark.stop()
 
 

@@ -26,8 +26,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from etl_entregas_pyspark_spark.session import build_session
 
 SRC = "/root/testdata/sf0.1"
 # fact tables replicated with shifted keys; dims copied as-is.
@@ -55,8 +56,12 @@ KEY_STRIDE = 100_000_000
 
 
 def build(spark, replicas: int) -> str:
-    """Write the N× replica layout into a fresh temp dir and return it."""
-    out_dir = tempfile.mkdtemp(prefix=f"growth_{replicas}x_")
+    """Write the N× replica layout into ``<fresh temp dir>/sf<N/10>`` and
+    return that path. The directory names the layout's scale (10 replicas of
+    sf0.1 give ``sf1``), which bench.py stamps on its records; remove the
+    temp parent when done."""
+    out_dir = os.path.join(tempfile.mkdtemp(prefix=f"growth_{replicas}x_"), f"sf{replicas / 10:g}")
+    os.mkdir(out_dir)
     # true dims: their keys are never shifted by any fact replica, so
     # copying keeps referential integrity (l_partkey/l_suppkey/
     # c_nationkey all still resolve)
@@ -114,18 +119,17 @@ def main() -> None:
     if not names:
         names = ["q158_containment_join", "q192_lsh_recall_audit"]
 
-    spark = (
-        SparkSession.builder.appName("growth-exponent")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = build_session({"spark": {
+        "app_name": "growth-exponent",
+        "master": f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": "64",
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        },
+    }})
 
     from etl_entregas_pyspark_spark import queries as q
 
@@ -153,7 +157,7 @@ def main() -> None:
                     # full precision for the log-log fit; round at print
                     results[name][n_rep] = best
             finally:
-                shutil.rmtree(out_dir, ignore_errors=True)
+                shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
         for name in names:
             print(json.dumps({
                 "query": name,

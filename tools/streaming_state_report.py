@@ -16,7 +16,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
 
 N_FILES = 8  # micro-batches per run (one file per trigger)
 
@@ -54,16 +54,16 @@ def _fmt_table(rows, title, note):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.appName("streaming-state-report")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session({"spark": {
+        "app_name": "streaming-state-report",
+        "master": "local[8]",
+        "log_level": "ERROR",
+        "configs": {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+            "spark.ui.enabled": "false",
+        },
+    }})
 
     from etl_entregas_pyspark_spark.queries.events import E
     from etl_entregas_pyspark_spark.streaming import (
