@@ -32,6 +32,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet  # noqa: E402
 from etl_entregas_pyspark_spark.queries import REGISTRY, registry  # noqa: E402
 from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
 
@@ -67,18 +68,36 @@ def _scale(sf_dir: str) -> float | str:
         return name
 
 
-def _baseline(path: str) -> dict[str, float]:
-    """Per-query times of the last full battery at this scale."""
+def _baseline(path: str) -> dict:
+    """The detail record of the last full battery at this scale, or {}."""
     try:
         with open(path) as f:
-            return {k: float(v) for k, v in json.load(f)["queries"].items()}
+            record = json.load(f)
+        record["queries"] = {k: float(v) for k, v in record["queries"].items()}
+        return record
     except (OSError, ValueError, KeyError, TypeError, AttributeError):
         return {}
 
 
+def _guard(times: dict[str, float], prev: dict, sf: float | str, cpus: int) -> tuple[dict, str | None]:
+    """Rows over 1.3x (and 0.2 s) slower than the baseline record ``prev``,
+    and why the guard was skipped, if it was. Only a baseline taken at the
+    same scale and core count says anything about this run."""
+    if not prev:
+        return {}, "no baseline at this scale"
+    if (prev.get("sf"), prev.get("cpus")) != (sf, cpus):
+        return {}, f"baseline is sf={prev.get('sf')} cpus={prev.get('cpus')}, this run is sf={sf} cpus={cpus}"
+    base = prev["queries"]
+    return {
+        n: {"prev": base[n], "now": t, "ratio": round(t / base[n], 2)}
+        for n, t in times.items()
+        if n in base and base[n] > 0 and t > 1.3 * base[n] and t - base[n] > 0.2
+    }, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     passes, skip_demos, only = _args(sys.argv[1:])
     sf = _scale(sf_dir)
     demos = registry.demo_baselines()
@@ -92,7 +111,7 @@ def main() -> None:
         "master": f"local[{cpus}]",
         "log_level": "ERROR",
         "configs": {
-            "spark.sql.shuffle.partitions": max(int(cpus), 32),
+            "spark.sql.shuffle.partitions": max(cpus, 32),
             "spark.ui.enabled": "false",
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         },
@@ -104,12 +123,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        read_parquet(spark, f"{sf_dir}/lineitem.parquet")
         .groupBy("l_returnflag")
         .agg(F.sum("l_quantity"), F.count("*"))
         .write.format("noop").mode("overwrite").save()
     )
-    spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    read_parquet(spark, f"{sf_dir}/orders.parquet").count()
 
     # Standing index/store builds as their OWN line items (r14 VERDICT
     # #1: first-consumer attribution polluted q233's wall when the
@@ -183,17 +202,12 @@ def main() -> None:
     total = round(sum(times.values()), 3)
     prod_total = round(sum(v for k, v in times.items() if k not in demos), 3)
     # In-run drift guard: flag queries >1.3x slower than the last full
-    # battery at this scale (r8's 9-query uniform drift was only caught by
-    # the judge). The baseline is the per-SF detail file, read whenever it
-    # exists — r14's q233 regression shipped unseen because an env-var
-    # check skipped the guard.
+    # battery at this scale and core count (r8's 9-query uniform drift went
+    # unflagged by the bench itself). The baseline is the per-SF detail
+    # file, read whenever it exists — r14's q233 regression shipped unseen
+    # because an env-var check skipped the guard.
     detail_path = os.path.join(HERE, f"BENCH_DETAIL_sf{sf:g}.json") if isinstance(sf, float) else None
-    prev = _baseline(detail_path) if detail_path else {}
-    regressions = {
-        n: {"prev": prev[n], "now": t, "ratio": round(t / prev[n], 2)}
-        for n, t in times.items()
-        if n in prev and prev[n] > 0 and t > 1.3 * prev[n] and t - prev[n] > 0.2
-    }
+    regressions, guard_skipped = _guard(times, _baseline(detail_path) if detail_path else {}, sf, cpus)
     contrasts = {
         f"{a}/{b}": round(times[a] / times[b], 3)
         for a, b in registry.contrast_pairs()
@@ -211,10 +225,13 @@ def main() -> None:
         "demos_skipped": sorted(demos.intersection(pool) - set(names)),
         "production_total": prod_total,
         "store_builds": store_builds,
-        "regressions_vs": os.path.basename(detail_path) if prev else None,
+        "regressions_vs": None if guard_skipped else os.path.basename(detail_path),
+        "guard_skipped": guard_skipped,
         "regressions": regressions,
         "contrasts": contrasts,
         "sf": sf,
+        "cpus": cpus,
+        "passes": passes,
     }
     print(json.dumps(detail))
     # The full detail is also the next battery's baseline: the driver

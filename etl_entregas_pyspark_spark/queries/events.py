@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.io.readers import read_table
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import _dsum_sql, _rnd_sql, dsum, rnd
 from etl_entregas_pyspark_spark.timeutil import epoch_us, epoch_us_sql
@@ -27,7 +28,7 @@ def E(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation — exactly what DuckDB's reader does natively, so both
     engines see identical values."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_table(spark, sf_dir, "events")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -1212,7 +1213,7 @@ def q166_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q255_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = E(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("segment"),

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import REGISTRY, register
 from etl_entregas_pyspark_spark.queries.relational import T
 from etl_entregas_pyspark_spark.streaming.epoch_store import EpochStore
@@ -124,7 +125,7 @@ def ensure_ivf_index(
 )
 def q223_ivf_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     probes = (
         ivf_assign(
@@ -145,7 +146,7 @@ def q223_ivf_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["centroid_id"]
         for r in probes.select("centroid_id").distinct().collect()
     ]
-    cand = spark.read.parquet(os.path.join(idx, "cand")).filter(
+    cand = read_parquet(spark, os.path.join(idx, "cand")).filter(
         F.col("centroid_id").isin(buckets)
     )
     cos = dot(F.col("q_emb"), F.col("embedding")) / (
@@ -198,8 +199,8 @@ def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
     store = EpochStore(path, IVF_MEMBER_COLS)
     if store.pointer()["epoch"] >= 1:
         return path
-    cent = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    cent = read_parquet(
+        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     )
     e = T(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") >= 16)
@@ -264,8 +265,8 @@ _ASSIGN_BATCH_SQL = _ASSIGN_STANDING_SQL.replace("<> 0)", "= 0)")
 )
 def q224_ivf_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = EpochStore(ensure_ivf_commit(spark, sf_dir), IVF_MEMBER_COLS)
-    cent_ids = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    cent_ids = read_parquet(
+        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     ).select("centroid_id")
     # per-epoch split via the store's fenced reader — never raw
     # epoch=N paths, which break silently under compaction (r12 ADVICE #2)
@@ -365,7 +366,7 @@ def ivf_membership_batch(
     if epoch_id <= store.pointer()["epoch"]:
         return False  # fence EARLY: skip the assignment work entirely
     spark = batch_df.sparkSession
-    cent = spark.read.parquet(centroids_path)
+    cent = read_parquet(spark, centroids_path)
     assigned = ivf_assign(
         batch_df.select("vec_id", "embedding"), cent, keep=1
     ).localCheckpoint()  # decide BEFORE touching the store
@@ -626,8 +627,8 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
 )
 def q228_live_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_dir = ensure_live_ivf_membership(spark, sf_dir)
-    cent = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    cent = read_parquet(
+        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     )
     e = T(spark, sf_dir, "embeddings")
     probes = (
@@ -789,8 +790,8 @@ _PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
 )
 def q229_ivf_scrub_under_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_dir = ensure_govlive_ivf_membership(spark, sf_dir)
-    cent = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    cent = read_parquet(
+        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     )
     e = T(spark, sf_dir, "embeddings")
     probes = (
@@ -925,7 +926,7 @@ _SWEEP_NPROBES = [1, 2, 4, 8]  # C = 8 centroids: up to the exhaustive probe
 )
 def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     # probe ranks 1..8 per query (keep d2 ordering as pr via re-rank)
@@ -940,7 +941,7 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    cand = spark.read.parquet(os.path.join(idx, "cand"))
+    cand = read_parquet(spark, os.path.join(idx, "cand"))
     cos = dot(F.col("q_emb"), F.col("embedding")) / (
         F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
     )
@@ -1180,8 +1181,8 @@ def q231_ivf_centroid_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_cid")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_in"))
     )
-    cent_ids = spark.read.parquet(
-        os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+    cent_ids = read_parquet(
+        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
     ).select("centroid_id")
     n_members = F.coalesce("n_members", F.lit(0))
     n_stay = F.coalesce("n_stay", F.lit(0))
@@ -1241,7 +1242,7 @@ def _sq8_admission(
       shortlist rows carry (query_id, neighbor_id, q8_dot, srn), never
       a vector."""
     idx = ensure_ivf_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     probes = (
         ivf_assign(
@@ -1258,7 +1259,7 @@ def _sq8_admission(
         )
         .localCheckpoint()
     )
-    cand_codes = spark.read.parquet(os.path.join(idx, "cand")).select(
+    cand_codes = read_parquet(spark, os.path.join(idx, "cand")).select(
         "vec_id",
         "centroid_id",
         F.col("codes").cast("array<long>").alias("codes"),
@@ -1428,7 +1429,7 @@ def ensure_refreshed_ivf_index(
         F.col("new_cid").alias("centroid_id"), F.col("nc_emb").alias("c_emb")
     )
     newcent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cent = spark.read.parquet(os.path.join(path, "centroids"))
+    cent = read_parquet(spark, os.path.join(path, "centroids"))
     corpus = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= 16)
     (
         ivf_assign(corpus, cent, keep=1)
@@ -1506,7 +1507,7 @@ def ensure_refreshed_ivf_index(
 )
 def q234_ivf_refresh_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_refreshed_ivf_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     probes = (
         ivf_assign(
@@ -1521,7 +1522,7 @@ def q234_ivf_refresh_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "centroid_id",
         )
     )
-    cand = spark.read.parquet(os.path.join(idx, "cand"))
+    cand = read_parquet(spark, os.path.join(idx, "cand"))
     cos = dot(F.col("q_emb"), F.col("embedding")) / (
         F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
     )
@@ -1650,7 +1651,7 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     truth = (
-        spark.read.parquet(os.path.join(idx, "cand"))
+        read_parquet(spark, os.path.join(idx, "cand"))
         .select("vec_id", "centroid_id", "embedding")
         .join(
             F.broadcast(probes.select("query_id", "q_emb", "centroid_id")),
@@ -1856,7 +1857,7 @@ def ensure_ivfpq_index(
         .write.mode("overwrite")
         .parquet(os.path.join(path, "codebook"))
     )
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
+    cb = read_parquet(spark, os.path.join(path, "codebook"))
     (
         _ivfpq_encode(resid, cb)
         .write.mode("overwrite")
@@ -1932,8 +1933,8 @@ def _ivfpq_admission(
     admission at a different persisted layout with the same directory
     shape (q249 probes the REFRESHED-codebook index)."""
     idx = idx_root or ensure_ivfpq_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
-    cb = spark.read.parquet(os.path.join(idx, "codebook"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
+    cb = read_parquet(spark, os.path.join(idx, "codebook"))
     e = T(spark, sf_dir, "embeddings")
     qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     probes = (
@@ -1975,7 +1976,7 @@ def _ivfpq_admission(
         .select("query_id", "m", F.col("k").alias("code"), pdot.alias("pdot"))
     )
     cand_src = (
-        spark.read.parquet(os.path.join(idx, "cand"))
+        read_parquet(spark, os.path.join(idx, "cand"))
         if cand_codes is None
         else cand_codes
     )
@@ -2221,7 +2222,7 @@ def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
     if store.pointer()["epoch"] >= 1:
         return path
     idx = ensure_ivfpq_index(spark, sf_dir)
-    cand = spark.read.parquet(os.path.join(idx, "cand"))
+    cand = read_parquet(spark, os.path.join(idx, "cand"))
     # the bulk file's partition column reads back as int32: normalize
     # both epochs to bigint so the store's schema is uniform
     store.seed(
@@ -2229,8 +2230,8 @@ def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
             "vec_id", F.col("centroid_id").cast("long").alias("centroid_id"), "codes"
         )
     )
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
-    cb = spark.read.parquet(os.path.join(idx, "codebook"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
+    cb = read_parquet(spark, os.path.join(idx, "codebook"))
     batch = T(spark, sf_dir, "embeddings").filter(
         (F.col("vec_id") >= 16) & (F.col("vec_id") % _VEC_BATCH_MOD == 0)
     )
@@ -2450,9 +2451,9 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe assignment (model-state-sized) recomputes, against the
     # persisted centroids.
     idx = ensure_ivf_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     probed_n = (
-        spark.read.parquet(os.path.join(idx, "cand"))
+        read_parquet(spark, os.path.join(idx, "cand"))
         .select("vec_id", "centroid_id")
         .join(
             F.broadcast(
@@ -2748,8 +2749,8 @@ def _q248_oracle() -> str:
 )
 def q248_ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivfpq_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
-    cb = spark.read.parquet(os.path.join(idx, "codebook"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
+    cb = read_parquet(spark, os.path.join(idx, "codebook"))
     store = EpochStore(ensure_ivfpq_commit(spark, sf_dir), IVFPQ_CODE_COLS)
     # per-epoch read: epoch 0 = standing corpus, epoch 1 = arrived batch;
     # the store rows already carry the committed (centroid_id, codes) —
@@ -2876,11 +2877,11 @@ def ensure_refreshed_ivfpq_index(
     if not force and os.path.exists(os.path.join(path, "cand", "_SUCCESS")):
         return path
     idx = ensure_ivfpq_index(spark, sf_dir)
-    cent = spark.read.parquet(os.path.join(idx, "centroids"))
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
     cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cb0 = spark.read.parquet(os.path.join(idx, "codebook"))
+    cb0 = read_parquet(spark, os.path.join(idx, "codebook"))
     e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    stored = spark.read.parquet(os.path.join(idx, "cand")).select(
+    stored = read_parquet(spark, os.path.join(idx, "cand")).select(
         "vec_id",
         F.col("centroid_id").cast("long").alias("centroid_id"),
         "codes",
@@ -2946,7 +2947,7 @@ def ensure_refreshed_ivfpq_index(
         .select("m", "k", F.coalesce("cw2", "cw").alias("cw"))
     )
     cb2.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    cb2r = spark.read.parquet(os.path.join(path, "codebook"))
+    cb2r = read_parquet(spark, os.path.join(path, "codebook"))
     (
         _ivfpq_encode(
             resid.select(
@@ -3134,8 +3135,8 @@ def ivfpq_codes_batch(
     if epoch_id <= store.pointer()["epoch"]:
         return False  # fence EARLY: skip the encode work entirely
     spark = batch_df.sparkSession
-    cent = spark.read.parquet(os.path.join(idx_root, "centroids"))
-    cb = spark.read.parquet(os.path.join(idx_root, "codebook"))
+    cent = read_parquet(spark, os.path.join(idx_root, "centroids"))
+    cb = read_parquet(spark, os.path.join(idx_root, "codebook"))
     live = _ivfpq_encode(
         _ivfpq_residuals(batch_df.select("vec_id", "embedding"), cent), cb
     ).localCheckpoint()  # decide BEFORE touching the store
@@ -3534,7 +3535,7 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth arm: full-precision PROBED ranking — membership from the
     # persisted index, id-keyed float pull, probed partitions only
     idx = ensure_ivfpq_index(spark, sf_dir)
-    member = spark.read.parquet(os.path.join(idx, "cand")).select(
+    member = read_parquet(spark, os.path.join(idx, "cand")).select(
         "vec_id", F.col("centroid_id").cast("long").alias("centroid_id")
     )
     wt = Window.partitionBy("query_id").orderBy(
@@ -3661,7 +3662,7 @@ def _q254_oracle() -> str:
 def q254_sq8_clip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
     el = (
-        spark.read.parquet(os.path.join(idx, "cand"))
+        read_parquet(spark, os.path.join(idx, "cand"))
         .select(
             "vec_id",
             F.when(F.col("vec_id") % _VEC_BATCH_MOD == 0, 1)
@@ -3793,7 +3794,7 @@ def _register_q264() -> None:
     )
     def q264_ivf_mmr_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = ensure_ivf_index(spark, sf_dir)
-        cent = spark.read.parquet(os.path.join(idx, "centroids"))
+        cent = read_parquet(spark, os.path.join(idx, "centroids"))
         e = T(spark, sf_dir, "embeddings")
         probes = (
             ivf_assign(
@@ -3814,7 +3815,7 @@ def _register_q264() -> None:
             r["centroid_id"]
             for r in probes.select("centroid_id").distinct().collect()
         ]
-        cand = spark.read.parquet(os.path.join(idx, "cand")).filter(
+        cand = read_parquet(spark, os.path.join(idx, "cand")).filter(
             F.col("centroid_id").isin(buckets)
         )
         rel = dot(F.col("q_emb"), F.col("embedding")) / (

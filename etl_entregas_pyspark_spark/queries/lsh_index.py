@@ -53,6 +53,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
 from etl_entregas_pyspark_spark.queries.similarity import (
@@ -206,7 +207,7 @@ def _probe_pairs(
     passes the LIVE-maintained store). Returns ``(cand, per_batch)``."""
     if corpus_bands is None:
         idx_path = ensure_band_index(spark, sf_dir)
-        corpus_bands = spark.read.parquet(idx_path)
+        corpus_bands = read_parquet(spark, idx_path)
     per_batch = _batch_signatures(spark, sf_dir)
     batch_bands = _band_long(per_batch)
 
@@ -462,7 +463,7 @@ def q211_ingest_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q217_band_index_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_path = ensure_band_index(spark, sf_dir)
     per_doc = (
-        spark.read.parquet(idx_path)
+        read_parquet(spark, idx_path)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_bands"))
     )
@@ -524,7 +525,7 @@ def seed_index_store(
     )
 
     EpochStore(index_dir, BAND_INDEX_COLS).seed(
-        spark.read.parquet(standing_index_path)
+        read_parquet(spark, standing_index_path)
     )
 
 
@@ -599,7 +600,7 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_total = route.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     ).select(F.lit("batch_total").alias("metric"), "n_docs")
-    before = spark.read.parquet(ensure_band_index(spark, sf_dir)).agg(
+    before = read_parquet(spark, ensure_band_index(spark, sf_dir)).agg(
         F.countDistinct("doc_id").cast("bigint").alias("nb")
     )
     after = read_band_index(spark, store).agg(
@@ -843,7 +844,7 @@ def q226_deletion_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         if after_df is not None
         else spark.range(1).select(F.lit(0).cast("bigint").alias("n"))
     )
-    before = spark.read.parquet(ensure_band_index(spark, sf_dir)).agg(
+    before = read_parquet(spark, ensure_band_index(spark, sf_dir)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
     deny = (
@@ -853,7 +854,7 @@ def q226_deletion_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deny_total = deny.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     indexed_deny = deny.join(
-        spark.read.parquet(ensure_band_index(spark, sf_dir))
+        read_parquet(spark, ensure_band_index(spark, sf_dir))
         .select("doc_id")
         .distinct(),
         "doc_id",
@@ -1017,7 +1018,7 @@ def _q235_oracle() -> str:
 def q235_lsh_replan_from_signatures(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    sigs = spark.read.parquet(ensure_signature_store(spark, sf_dir))
+    sigs = read_parquet(spark, ensure_signature_store(spark, sf_dir))
     # re-band from stored ints: one narrow explode, no corpus re-hash
     structs = [
         F.struct(

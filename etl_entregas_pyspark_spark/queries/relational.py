@@ -22,11 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark.io.readers import read_table as T
 from etl_entregas_pyspark_spark.queries.registry import register
-
-
-def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def spread_if_narrow(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:

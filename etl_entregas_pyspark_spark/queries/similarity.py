@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _dsum_sql, _rnd_sql, rnd, spread_if_narrow
 
@@ -605,7 +606,7 @@ def q53_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_signature_store,
     )
 
-    sigs = spark.read.parquet(ensure_signature_store(spark, sf_dir))
+    sigs = read_parquet(spark, ensure_signature_store(spark, sf_dir))
     cand, _ = banded_pairs(
         _band_long(sigs), ("band_id", "band_hash"), sig_from_minhash(sigs)
     )
@@ -2141,7 +2142,7 @@ def q192_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (q53's production path — zero re-hash); the truth arm is the one
     # consumer that genuinely needs every doc's shingle set, so it owns
     # the single text pass (checkpointed, shared with the verify join).
-    sigs = spark.read.parquet(ensure_signature_store(spark, sf_dir))
+    sigs = read_parquet(spark, ensure_signature_store(spark, sf_dir))
     cand_lsh, _ = banded_pairs(
         _band_long(sigs), ("band_id", "band_hash"), sig_from_minhash(sigs)
     )
@@ -3020,7 +3021,7 @@ def q233_lsh_band_plan_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all four plans band the PERSISTED 12-int signatures (q235's store
     # — since r14 also q53/q192's banding source): a 24-struct literal
     # explode (narrow), zero re-shingling in the banding stage
-    sigs = spark.read.parquet(ensure_signature_store(spark, sf_dir))
+    sigs = read_parquet(spark, ensure_signature_store(spark, sf_dir))
     structs = []
     for r in _BAND_PLANS:
         for b in range(N_HASHES // r):

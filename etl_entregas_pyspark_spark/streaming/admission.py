@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.streaming.epoch_store import (
     commit_pointer as _commit_pointer,
     read_pointer as _read_pointer,
@@ -75,7 +76,7 @@ def read_admission_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | N
     ptr = _read_pointer(ledger_dir)
     if ptr["version"] == 0:
         return None
-    return spark.read.parquet(os.path.join(ledger_dir, f"v{ptr['version']}"))
+    return read_parquet(spark, os.path.join(ledger_dir, f"v{ptr['version']}"))
 
 
 def admission_batch(

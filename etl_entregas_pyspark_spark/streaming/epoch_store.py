@@ -69,6 +69,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
+
 POINTER = "_COMMITTED.json"
 
 # Deterministic fault/race injection for tests: map hook-point name -> a
@@ -174,7 +176,7 @@ class EpochStore:
                 paths.append(os.path.join(self.path, entry))
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return read_parquet(spark, *paths)
 
     def read_epoch(self, spark: SparkSession, epoch_id: int) -> DataFrame:
         """ONE committed epoch's rows — for callers that need the
@@ -192,7 +194,7 @@ class EpochStore:
                 f"epoch {epoch_id} was absorbed into base=v{ptr.get('base_version')}"
                 " — per-epoch reads are only valid before compaction"
             )
-        return spark.read.parquet(self._epoch_dir(epoch_id))
+        return read_parquet(spark, self._epoch_dir(epoch_id))
 
     # -- write ------------------------------------------------------------
     def seed(self, df: DataFrame, epoch_id: int = 0) -> bool:
@@ -252,7 +254,7 @@ class EpochStore:
         if n_files is not None:
             out = out.repartition(n_files, *shuffle_cols)
         out.write.mode("overwrite").parquet(base_dir)
-        n_rows = spark.read.parquet(base_dir).count()
+        n_rows = read_parquet(spark, base_dir).count()
         old_base = entry_ptr.get("base_version")
         _hook(hook)
         with pointer_lock(self.path):

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.streaming.epoch_store import (
     POINTER as _POINTER,
 )
@@ -144,7 +145,7 @@ def read_snapshot_store(spark: SparkSession, snapshot_dir: str) -> DataFrame | N
     ptr = _read_pointer(snapshot_dir)
     if ptr["version"] == 0:
         return None
-    return spark.read.parquet(os.path.join(snapshot_dir, f"v{ptr['version']}"))
+    return read_parquet(spark, os.path.join(snapshot_dir, f"v{ptr['version']}"))
 
 
 def upsert_batch(
@@ -364,7 +365,7 @@ def read_bucketed_snapshot(
         os.path.join(snapshot_dir, f"bucket={b}", f"v{v}")
         for b, v in manifest.items()
     ]
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, *paths)
 
 
 def upsert_batch_bucketed(
@@ -420,7 +421,7 @@ def upsert_batch_bucketed(
         if str(b) in manifest
     ]
     existing = (
-        spark.read.parquet(*existing_paths) if existing_paths else None
+        read_parquet(spark, *existing_paths) if existing_paths else None
     )
     merged = merge_snapshot(existing, batch.drop("_bucket"))
     new_version = ptr["version"] + 1

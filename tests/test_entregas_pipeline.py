@@ -8,6 +8,7 @@ reference's shipped CSV (read-only input; BASELINE.md rows).
 import csv
 import json
 import os
+import shutil
 import subprocess
 import sys
 import threading
@@ -333,18 +334,25 @@ class TestObservedLadder:
         assert metrics["output_rows"] == 0
 
     def test_write_run_job_count(self, spark, tmp_path):
-        """One CSV scan per run: the write is 4 Spark jobs (CSV header
-        read, the scan-to-dedup map stage, the write, its commit). A
+        """One CSV scan per run: a first run is 4 Spark jobs (CSV header
+        read, the scan-to-dedup map stage, the write, its commit). A repeat
+        run in the same session reuses the header's schema, so it is 3. A
         separate metrics pass would add 3."""
-        pipe = _fixture_pipeline(spark, tmp_path)
+        src = tmp_path / "in.csv"
+        shutil.copy(FIXTURE_CSV, src)
+        cfg = load_config(dotlist=[f"paths.input_file={src}", f"paths.output_base={tmp_path}/out"])
+        pipe = EntregasPipeline(spark, cfg)
         sc = spark.sparkContext
-        group = f"entregas-run-{tmp_path.name}"
-        sc.setJobGroup(group, "job count of one pipeline run")
-        try:
-            pipe.run(write=True)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+        counts = []
+        for run in ("first", "repeat"):
+            group = f"entregas-run-{tmp_path.name}-{run}"
+            sc.setJobGroup(group, f"job count of the {run} pipeline run")
+            try:
+                pipe.run(write=True)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert counts == [4, 3]
 
     def test_read_before_action_raises(self, spark, tmp_path):
         """Before any action the ladder raises within its bound; Observation.get
