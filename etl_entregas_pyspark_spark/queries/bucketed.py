@@ -21,14 +21,13 @@ shuffle-free on the bucket key.
 from __future__ import annotations
 
 import os
-import re
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.io.writers import write_bucketed
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T
@@ -45,19 +44,17 @@ from etl_entregas_pyspark_spark.queries.similarity import (
 _N_BUCKETS = 16
 
 
-def _bucket_table(spark: SparkSession) -> tuple[str, str]:
+def _bucket_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Per-session table name and a stable per-session data path.
 
-    The table name is suffixed with the Spark application id so concurrent
-    sessions sharing a metastore don't clobber each other, and the path is
-    derived from the same id so repeated invocations in one session reuse
-    (and first clean) ONE directory instead of leaking a fresh
-    ``mkdtemp`` per run — DROP TABLE on an external table leaves the
-    files, so the caller must own the path lifecycle."""
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    table = f"b150_documents_{app_id}"
-    path = os.path.join(tempfile.gettempdir(), f"q150_bucketed_docs_{app_id}")
-    return table, path
+    Both come from ``stores.path``: the table is named after its store
+    directory, so concurrent sessions sharing a metastore don't clobber
+    each other, and repeated invocations in one session reuse (and first
+    clean) ONE directory instead of leaking a fresh ``mkdtemp`` per run —
+    DROP TABLE on an external table leaves the files, so the caller must
+    own the path lifecycle."""
+    path = stores.path(spark, sf_dir, "q150_bucketed_docs")
+    return os.path.basename(path), path
 
 
 def _q150_oracle() -> str:
@@ -132,7 +129,7 @@ def q150_bucketed_dedup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lay the corpus down bucketed once (at production scale this is the
     # standing ingest layout, not a per-query step; the write is included
     # here so the query is self-contained for the driver)
-    table, path = _bucket_table(spark)
+    table, path = _bucket_table(spark, sf_dir)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     shutil.rmtree(path, ignore_errors=True)  # external table: files outlive DROP
     # cluster by the bucket key BEFORE the write (guide §6, Iceberg's

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.events import E
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.streaming.upsert_sink import (
@@ -356,41 +357,30 @@ def _replay_ckpt_base() -> str | None:
     shm = "/dev/shm"
     return shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
 
-# (applicationId, sf_dir, schedule tag) -> slice directory. In-process
-# cache: the entry is set only after every slice file landed, so a crash
-# mid-build just rebuilds a fresh tempdir next call.
-_REPLAY_SRC_CACHE: dict[tuple[str, str, str], str] = {}
-
-
 def _ensure_replay_src(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
     """Write ``build()``'s slices as mtime-paced single parquet files,
-    once per (session, sf_dir, ``tag``); return the cached directory."""
+    once per (session, sf_dir, ``tag``); return the slice directory."""
     import glob as _glob
     import os
     import shutil
-    import tempfile
     import time
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), tag)
-    cached = _REPLAY_SRC_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    src = tempfile.mkdtemp(prefix=f"replay_{tag}_")
-    base_mtime = time.time()
-    for i, chunk in enumerate(build()):
-        stage = os.path.join(src, f"_stage{i}")
-        chunk.select(*_DISORDER_COLS).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(src, f"slice{i}.parquet")
-        os.rename(part, dst)
-        # FileStreamSource orders by modification time: stamp slices
-        # with strictly increasing mtimes instead of sleeping
-        os.utime(dst, (base_mtime + i, base_mtime + i))
-        shutil.rmtree(stage, ignore_errors=True)
-    _REPLAY_SRC_CACHE[key] = src
-    return src
+    def write_slices(src: str) -> None:
+        base_mtime = time.time()
+        for i, chunk in enumerate(build()):
+            stage = os.path.join(src, f"_stage{i}")
+            chunk.select(*_DISORDER_COLS).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(stage)
+            part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+            dst = os.path.join(src, f"slice{i}.parquet")
+            os.rename(part, dst)
+            # FileStreamSource orders by modification time: stamp slices
+            # with strictly increasing mtimes instead of sleeping
+            os.utime(dst, (base_mtime + i, base_mtime + i))
+            shutil.rmtree(stage, ignore_errors=True)
+
+    return stores.ensure(spark, sf_dir, f"replay_{tag}", write_slices)
 
 
 def _run_replay(spark: SparkSession, src: str, make_query, sink: str) -> DataFrame:

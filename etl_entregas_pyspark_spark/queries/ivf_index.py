@@ -30,13 +30,12 @@ LSH/text (q210/q211/q221/q222) and IVF/embedding (q55/q73/q215/q223).
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import REGISTRY, register
 from etl_entregas_pyspark_spark.queries.relational import T
@@ -51,16 +50,6 @@ from etl_entregas_pyspark_spark.queries.similarity import (
     sq_norm,
 )
 
-# test hook: (re)build count per index path — probes must never rebuild
-IVF_INDEX_BUILDS: dict[str, int] = {}
-
-
-def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_index_{app_id}_{tag}")
-
-
 def ensure_ivf_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -74,30 +63,27 @@ def ensure_ivf_index(
     (q232/q236) reads 1-byte codes instead of 4-byte floats — the FAISS
     IVF-SQ8 layout: parquet column pruning turns the cheap pass into a
     codes-only scan (r13 VERDICT weak #1; pinned by a ReadSchema test).
-    Idempotent per (session, sf_dir): gated on the candidate table's
-    _SUCCESS marker, written LAST so a half-built index is rebuilt,
-    never probed."""
-    path = _ivf_index_path(spark, sf_dir)
-    if not force and os.path.exists(
-        os.path.join(path, "cand", "_SUCCESS")
-    ):
-        return path
-    e = T(spark, sf_dir, "embeddings")
-    cent = ivf_centroids(e)
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    (
-        ivf_assign(e.filter(F.col("vec_id") >= 16), cent, keep=1)
-        .drop("d2")
-        .withColumn(
-            "codes",
-            q8_codes(F.col("embedding")).cast("array<tinyint>"),
+    Built once per (session, sf_dir) through ``stores.ensure``, whose
+    marker lands only after the build returns, so a half-built index is
+    rebuilt, never probed."""
+
+    def build(path: str) -> None:
+        e = T(spark, sf_dir, "embeddings")
+        cent = ivf_centroids(e)
+        cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        (
+            ivf_assign(e.filter(F.col("vec_id") >= 16), cent, keep=1)
+            .drop("d2")
+            .withColumn(
+                "codes",
+                q8_codes(F.col("embedding")).cast("array<tinyint>"),
+            )
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(path, "cand"))
         )
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "cand"))
-    )
-    IVF_INDEX_BUILDS[path] = IVF_INDEX_BUILDS.get(path, 0) + 1
-    return path
+
+    return stores.ensure(spark, sf_dir, "ivf_index", build, force)
 
 
 @register(
@@ -176,12 +162,6 @@ _VEC_BATCH_MOD = 5  # corpus vec_id % 5 == 0 plays the arriving batch
 IVF_MEMBER_COLS = ["vec_id", "centroid_id"]  # the skinny membership schema
 
 
-def _ivf_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_store_{app_id}_{tag}")
-
-
 def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
     """Build the epoch-fenced inverted-list MEMBERSHIP store and commit
     one arriving batch into it, exactly once per (session, sf_dir).
@@ -195,20 +175,20 @@ def ensure_ivf_commit(spark: SparkSession, sf_dir: str) -> str:
     membership table is deliberately skinny — vectors live once in the
     base table; the index is WHICH list each one belongs to, which is
     what arrives, merges, and audits at 100 TB."""
-    path = _ivf_store_path(spark, sf_dir)
-    store = EpochStore(path, IVF_MEMBER_COLS)
-    if store.pointer()["epoch"] >= 1:
-        return path
-    cent = read_parquet(
-        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    )
-    e = T(spark, sf_dir, "embeddings")
-    corpus = e.filter(F.col("vec_id") >= 16)
-    standing = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD != 0)
-    store.seed(ivf_assign(standing, cent, keep=1))  # no-op if epoch 0 exists
-    batch = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD == 0)
-    store.append(ivf_assign(batch, cent, keep=1), 1)  # fenced: re-runs skip
-    return path
+
+    def build(path: str) -> None:
+        store = EpochStore(path, IVF_MEMBER_COLS)
+        cent = read_parquet(
+            spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+        )
+        e = T(spark, sf_dir, "embeddings")
+        corpus = e.filter(F.col("vec_id") >= 16)
+        standing = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD != 0)
+        store.seed(ivf_assign(standing, cent, keep=1))  # no-op if epoch 0 exists
+        batch = corpus.filter(F.col("vec_id") % _VEC_BATCH_MOD == 0)
+        store.append(ivf_assign(batch, cent, keep=1), 1)  # fenced: re-runs skip
+
+    return stores.ensure(spark, sf_dir, "ivf_store", build)
 
 
 # both slices reuse similarity._IVF_ASSIGN_SQL (the one assignment
@@ -420,12 +400,6 @@ def scrub_ivf_membership(
 _VEC_DENY_MOD = 13  # vec_id % 13 == 2 plays the forget-request set
 
 
-def _ivf_scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_scrub_store_{app_id}_{tag}")
-
-
 def ensure_scrubbed_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated membership store from q224's COMMITTED state
     (one skinny pointer-resolved scan — no re-assignment) and execute
@@ -433,23 +407,23 @@ def ensure_scrubbed_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     shared commit store stays untouched (q224/q225 keep their
     contract); in production the scrub runs in place as scheduled
     maintenance."""
-    path = _ivf_scrub_store_path(spark, sf_dir)
-    store = EpochStore(path, IVF_MEMBER_COLS)
-    if store.pointer().get("base_version") is not None:
-        return path
-    shared = EpochStore(ensure_ivf_commit(spark, sf_dir), IVF_MEMBER_COLS)
-    # committed-state read through the shared store's pointer — layout-
-    # agnostic, so a compaction of the q224 store cannot break the seed
-    # (r12 ADVICE #2); the scrub compacts this copy into a base anyway,
-    # so the copy's own epoch structure is irrelevant
-    store.seed(shared.read(spark))
-    deny = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
-        .select("vec_id")
-    )
-    scrub_ivf_membership(spark, path, deny)
-    return path
+
+    def build(path: str) -> None:
+        store = EpochStore(path, IVF_MEMBER_COLS)
+        shared = EpochStore(ensure_ivf_commit(spark, sf_dir), IVF_MEMBER_COLS)
+        # committed-state read through the shared store's pointer — layout-
+        # agnostic, so a compaction of the q224 store cannot break the seed
+        # (r12 ADVICE #2); the scrub compacts this copy into a base anyway,
+        # so the copy's own epoch structure is irrelevant
+        store.seed(shared.read(spark))
+        deny = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
+            .select("vec_id")
+        )
+        scrub_ivf_membership(spark, path, deny)
+
+    return stores.ensure(spark, sf_dir, "ivf_scrub_store", build)
 
 
 @register(
@@ -557,14 +531,6 @@ def q227_ivf_deletion_propagation(
 
 # -- q228: live-vs-batch equivalence at the driver gate ---------------------
 
-_LIVE_VEC_EPOCHS = 3
-
-
-def _ivf_live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_live_store_{app_id}_{tag}")
-
 
 def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     """Build the corpus's IVF membership the LIVE way, once per
@@ -574,23 +540,22 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     recovery — must fence to a no-op) and a ``compact_ivf_membership``
     after epoch 1 (so the final read unions a compacted base WITH a
     post-compaction epoch dir — the q222 replay shape for vectors)."""
-    path = _ivf_live_store_path(spark, sf_dir)
-    store = EpochStore(path, IVF_MEMBER_COLS)
-    if store.pointer()["epoch"] >= _LIVE_VEC_EPOCHS - 1:
-        return path
-    cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
-        .select("vec_id", "embedding")
-    )
-    sl = F.pmod(F.col("vec_id"), 3)
-    ivf_membership_batch(corpus.filter(sl == 0), 0, path, cent_path)
-    ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)
-    ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)  # no-op
-    compact_ivf_membership(spark, path)  # absorbs epochs 0-1 into base=v*
-    ivf_membership_batch(corpus.filter(sl == 2), 2, path, cent_path)
-    return path
+
+    def build(path: str) -> None:
+        cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+        corpus = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") >= 16)
+            .select("vec_id", "embedding")
+        )
+        sl = F.pmod(F.col("vec_id"), 3)
+        ivf_membership_batch(corpus.filter(sl == 0), 0, path, cent_path)
+        ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)
+        ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)  # no-op
+        compact_ivf_membership(spark, path)  # absorbs epochs 0-1 into base=v*
+        ivf_membership_batch(corpus.filter(sl == 2), 2, path, cent_path)
+
+    return stores.ensure(spark, sf_dir, "ivf_live_store", build)
 
 
 @register(
@@ -684,14 +649,6 @@ def q228_live_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_govlive_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivf_govlive_store_{app_id}_{tag}"
-    )
-
-
 def ensure_govlive_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     """Build the membership store through the FULL lifecycle interleaving,
     once per (session, sf_dir): two ingest epochs land, a deletion request
@@ -703,32 +660,31 @@ def ensure_govlive_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
     committed read therefore unions a scrubbed base with a post-scrub
     epoch directory — the one layout shape q228's replay (compact between
     epochs) does not produce."""
-    path = _ivf_govlive_store_path(spark, sf_dir)
-    store = EpochStore(path, IVF_MEMBER_COLS)
-    if store.pointer()["epoch"] >= 2:
-        return path
-    cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
-        .select("vec_id", "embedding")
-    )
-    deny = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
-        .select("vec_id")
-    )
-    sl = F.pmod(F.col("vec_id"), 3)
-    ivf_membership_batch(corpus.filter(sl == 0), 0, path, cent_path)
-    ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)
-    # the forget request arrives mid-stream: filtered compaction NOW
-    scrub_ivf_membership(spark, path, deny)
-    # ingest resumes; the source filter drops post-request denied keys
-    resumed = corpus.filter(sl == 2).join(
-        F.broadcast(deny), "vec_id", "left_anti"
-    )
-    ivf_membership_batch(resumed, 2, path, cent_path)
-    return path
+
+    def build(path: str) -> None:
+        cent_path = os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
+        corpus = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") >= 16)
+            .select("vec_id", "embedding")
+        )
+        deny = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
+            .select("vec_id")
+        )
+        sl = F.pmod(F.col("vec_id"), 3)
+        ivf_membership_batch(corpus.filter(sl == 0), 0, path, cent_path)
+        ivf_membership_batch(corpus.filter(sl == 1), 1, path, cent_path)
+        # the forget request arrives mid-stream: filtered compaction NOW
+        scrub_ivf_membership(spark, path, deny)
+        # ingest resumes; the source filter drops post-request denied keys
+        resumed = corpus.filter(sl == 2).join(
+            F.broadcast(deny), "vec_id", "left_anti"
+        )
+        ivf_membership_batch(resumed, 2, path, cent_path)
+
+    return stores.ensure(spark, sf_dir, "ivf_govlive_store", build)
 
 
 _CAND_ASSIGN_GOV_SQL = _IVF_ASSIGN_SQL.replace(
@@ -1405,41 +1361,32 @@ _REFRESH_ASSIGN_SQL = """
 """
 
 
-def _ivf_refresh_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivf_refresh_{app_id}_{tag}")
-
-
 def ensure_refreshed_ivf_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
     """Apply q231's refresh: write a NEW inverted file under the refreshed
     centroids (same centroids/ + cand/centroid_id=<b>/ layout as
-    ensure_ivf_index, same _SUCCESS-last fencing). The refreshed
+    ensure_ivf_index, same ``stores.ensure`` gate). The refreshed
     coordinates are persisted as exact doubles, and the re-assignment
     reads them BACK from the persisted model state — the probe and the
     build see the same bits."""
-    path = _ivf_refresh_index_path(spark, sf_dir)
-    if not force and os.path.exists(
-        os.path.join(path, "cand", "_SUCCESS")
-    ):
-        return path
-    newcent = refreshed_centroids(_committed_assignment(spark, sf_dir)).select(
-        F.col("new_cid").alias("centroid_id"), F.col("nc_emb").alias("c_emb")
-    )
-    newcent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cent = read_parquet(spark, os.path.join(path, "centroids"))
-    corpus = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= 16)
-    (
-        ivf_assign(corpus, cent, keep=1)
-        .drop("d2")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "cand"))
-    )
-    IVF_INDEX_BUILDS[path] = IVF_INDEX_BUILDS.get(path, 0) + 1
-    return path
+
+    def build(path: str) -> None:
+        newcent = refreshed_centroids(_committed_assignment(spark, sf_dir)).select(
+            F.col("new_cid").alias("centroid_id"), F.col("nc_emb").alias("c_emb")
+        )
+        newcent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        cent = read_parquet(spark, os.path.join(path, "centroids"))
+        corpus = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") >= 16)
+        (
+            ivf_assign(corpus, cent, keep=1)
+            .drop("d2")
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(path, "cand"))
+        )
+
+    return stores.ensure(spark, sf_dir, "ivf_refresh", build, force)
 
 
 @register(
@@ -1503,7 +1450,7 @@ def ensure_refreshed_ivf_index(
     "once per refresh decision and amortized over every subsequent "
     "partition-pruned probe; refreshed centroids are C x D model "
     "state, broadcast both ways; the old index stays probe-able until "
-    "the new cand/_SUCCESS lands (same fencing as ensure_ivf_index).",
+    "the new one's store marker lands (same gate as ensure_ivf_index).",
 )
 def q234_ivf_refresh_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_refreshed_ivf_index(spark, sf_dir)
@@ -1783,16 +1730,6 @@ from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
     _pq_subspaces,
 )
 
-# test hook: (re)build count per index path — probes must never rebuild
-IVFPQ_INDEX_BUILDS: dict[str, int] = {}
-
-
-def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_index_{app_id}_{tag}")
-
-
 def _ivfpq_residuals(src: DataFrame, cent: DataFrame) -> DataFrame:
     """Residuals r = x − c(x) in ``_pq_subspaces``-sliceable form:
     (vec_id, centroid_id, embedding) where ``embedding`` IS the residual
@@ -1837,35 +1774,34 @@ def ensure_ivfpq_index(
       layout that lets a 100-TB corpus's entire search structure fit on
       a fraction of the nodes.
 
-    Gated on ``cand/_SUCCESS`` written LAST, so a half-built index is
-    rebuilt, never probed (ensure_ivf_index's discipline)."""
-    path = _ivfpq_index_path(spark, sf_dir)
-    if not force and os.path.exists(os.path.join(path, "cand", "_SUCCESS")):
-        return path
-    e = T(spark, sf_dir, "embeddings")
-    cent = ivf_centroids(e)
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    # residuals feed BOTH the codebook and the encode pass
-    resid = _ivfpq_residuals(
-        e.filter(F.col("vec_id") >= 16), cent
-    ).localCheckpoint()
-    (
-        _pq_subspaces(
-            resid.filter(F.col("vec_id") < 16 + _PQ_K), "cb_vec", "cw"
+    Gated by ``stores.ensure``, so a half-built index is rebuilt, never
+    probed (ensure_ivf_index's discipline)."""
+
+    def build(path: str) -> None:
+        e = T(spark, sf_dir, "embeddings")
+        cent = ivf_centroids(e)
+        cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        # residuals feed BOTH the codebook and the encode pass
+        resid = _ivfpq_residuals(
+            e.filter(F.col("vec_id") >= 16), cent
+        ).localCheckpoint()
+        (
+            _pq_subspaces(
+                resid.filter(F.col("vec_id") < 16 + _PQ_K), "cb_vec", "cw"
+            )
+            .select("m", (F.col("cb_vec") - 16).alias("k"), "cw")
+            .write.mode("overwrite")
+            .parquet(os.path.join(path, "codebook"))
         )
-        .select("m", (F.col("cb_vec") - 16).alias("k"), "cw")
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "codebook"))
-    )
-    cb = read_parquet(spark, os.path.join(path, "codebook"))
-    (
-        _ivfpq_encode(resid, cb)
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "cand"))
-    )
-    IVFPQ_INDEX_BUILDS[path] = IVFPQ_INDEX_BUILDS.get(path, 0) + 1
-    return path
+        cb = read_parquet(spark, os.path.join(path, "codebook"))
+        (
+            _ivfpq_encode(resid, cb)
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(path, "cand"))
+        )
+
+    return stores.ensure(spark, sf_dir, "ivfpq_index", build, force)
 
 
 def _ivfpq_encode(resid: DataFrame, cb: DataFrame) -> DataFrame:
@@ -2198,12 +2134,6 @@ def _ivfpq_finish(
 IVFPQ_CODE_COLS = ["vec_id", "centroid_id", "codes"]
 
 
-def _ivfpq_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_store_{app_id}_{tag}")
-
-
 def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
     """Build the epoch-fenced PQ codes store and commit one arriving
     batch into it, exactly once per (session, sf_dir).
@@ -2217,27 +2147,27 @@ def ensure_ivfpq_commit(spark: SparkSession, sf_dir: str) -> str:
     The standing corpus is never re-assigned or re-encoded: ingest is
     O(batch x C) assignment + O(batch x M x K) encode, FAISS's
     IVFPQ add() as a table commit."""
-    path = _ivfpq_store_path(spark, sf_dir)
-    store = EpochStore(path, IVFPQ_CODE_COLS)
-    if store.pointer()["epoch"] >= 1:
-        return path
-    idx = ensure_ivfpq_index(spark, sf_dir)
-    cand = read_parquet(spark, os.path.join(idx, "cand"))
-    # the bulk file's partition column reads back as int32: normalize
-    # both epochs to bigint so the store's schema is uniform
-    store.seed(
-        cand.filter(F.col("vec_id") % _VEC_BATCH_MOD != 0).select(
-            "vec_id", F.col("centroid_id").cast("long").alias("centroid_id"), "codes"
+
+    def build(path: str) -> None:
+        store = EpochStore(path, IVFPQ_CODE_COLS)
+        idx = ensure_ivfpq_index(spark, sf_dir)
+        cand = read_parquet(spark, os.path.join(idx, "cand"))
+        # the bulk file's partition column reads back as int32: normalize
+        # both epochs to bigint so the store's schema is uniform
+        store.seed(
+            cand.filter(F.col("vec_id") % _VEC_BATCH_MOD != 0).select(
+                "vec_id", F.col("centroid_id").cast("long").alias("centroid_id"), "codes"
+            )
         )
-    )
-    cent = read_parquet(spark, os.path.join(idx, "centroids"))
-    cb = read_parquet(spark, os.path.join(idx, "codebook"))
-    batch = T(spark, sf_dir, "embeddings").filter(
-        (F.col("vec_id") >= 16) & (F.col("vec_id") % _VEC_BATCH_MOD == 0)
-    )
-    live = _ivfpq_encode(_ivfpq_residuals(batch, cent), cb)
-    store.append(live.select(*IVFPQ_CODE_COLS), 1)  # fenced: re-runs skip
-    return path
+        cent = read_parquet(spark, os.path.join(idx, "centroids"))
+        cb = read_parquet(spark, os.path.join(idx, "codebook"))
+        batch = T(spark, sf_dir, "embeddings").filter(
+            (F.col("vec_id") >= 16) & (F.col("vec_id") % _VEC_BATCH_MOD == 0)
+        )
+        live = _ivfpq_encode(_ivfpq_residuals(batch, cent), cb)
+        store.append(live.select(*IVFPQ_CODE_COLS), 1)  # fenced: re-runs skip
+
+    return stores.ensure(spark, sf_dir, "ivfpq_store", build)
 
 
 @register(
@@ -2512,39 +2442,31 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivfpq_scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivfpq_scrub_store_{app_id}_{tag}"
-    )
-
-
 def ensure_ivfpq_scrub(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated PQ codes store from q243's COMMITTED state and
     execute the deletion compaction on it, once per (session, sf_dir).
     EpochStore.scrub's filtered-compaction recipe: anti-join against the
     broadcast request set, rewrite as one base, swing the pointer last.
     The shared ingest store stays untouched (q243 keeps its contract)."""
-    path = _ivfpq_scrub_store_path(spark, sf_dir)
-    store = EpochStore(path, IVFPQ_CODE_COLS)
-    if store.pointer().get("base_version") is not None:
-        return path
-    shared = EpochStore(ensure_ivfpq_commit(spark, sf_dir), IVFPQ_CODE_COLS)
-    store.seed(shared.read(spark))
-    deny = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
-        .select("vec_id")
-    )
-    # centroid-clustered rewrite: the surviving base keeps bucket
-    # locality so post-scrub probes stay prunable (q227's discipline).
-    # n_files is REQUIRED for the clustering to apply — _rewrite_base
-    # only repartitions when a file count is given (r15 ADVICE #1)
-    store.scrub(
-        spark, deny, "vec_id", n_files=_MEMBER_FILES, shuffle_cols=("centroid_id",)
-    )
-    return path
+
+    def build(path: str) -> None:
+        store = EpochStore(path, IVFPQ_CODE_COLS)
+        shared = EpochStore(ensure_ivfpq_commit(spark, sf_dir), IVFPQ_CODE_COLS)
+        store.seed(shared.read(spark))
+        deny = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") % _VEC_DENY_MOD == 2)
+            .select("vec_id")
+        )
+        # centroid-clustered rewrite: the surviving base keeps bucket
+        # locality so post-scrub probes stay prunable (q227's discipline).
+        # n_files is REQUIRED for the clustering to apply — _rewrite_base
+        # only repartitions when a file count is given (r15 ADVICE #1)
+        store.scrub(
+            spark, deny, "vec_id", n_files=_MEMBER_FILES, shuffle_cols=("centroid_id",)
+        )
+
+    return stores.ensure(spark, sf_dir, "ivfpq_scrub_store", build)
 
 
 @register(
@@ -2845,16 +2767,6 @@ def q248_ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #    code assignments, re-encode, probe the refreshed index (q234's
 #    retrain-APPLY contract for the residual quantizer)
 
-# test hook: (re)build count per refreshed-index path
-IVFPQ_REFRESH_BUILDS: dict[str, int] = {}
-
-
-def _ivfpq_refresh_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"ivfpq_refresh_{app_id}_{tag}")
-
-
 def ensure_refreshed_ivfpq_index(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -2871,96 +2783,95 @@ def ensure_refreshed_ivfpq_index(
     its frozen geometry (the k-means empty-cluster convention). The
     coarse quantizer is NOT retrained here — centroid refresh is
     q231/q234's move; this closes the inner quantizer's loop.
-    Gated on ``cand/_SUCCESS`` written LAST (a half-built refresh is
-    rebuilt, never probed)."""
-    path = _ivfpq_refresh_path(spark, sf_dir)
-    if not force and os.path.exists(os.path.join(path, "cand", "_SUCCESS")):
-        return path
-    idx = ensure_ivfpq_index(spark, sf_dir)
-    cent = read_parquet(spark, os.path.join(idx, "centroids"))
-    cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    cb0 = read_parquet(spark, os.path.join(idx, "codebook"))
-    e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    stored = read_parquet(spark, os.path.join(idx, "cand")).select(
-        "vec_id",
-        F.col("centroid_id").cast("long").alias("centroid_id"),
-        "codes",
-    )
-    resid = (
-        stored.join(e, "vec_id")
-        .join(F.broadcast(cent), "centroid_id")
-        .select(
+    Gated by ``stores.ensure`` (a half-built refresh is rebuilt, never
+    probed)."""
+
+    def build(path: str) -> None:
+        idx = ensure_ivfpq_index(spark, sf_dir)
+        cent = read_parquet(spark, os.path.join(idx, "centroids"))
+        cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        cb0 = read_parquet(spark, os.path.join(idx, "codebook"))
+        e = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        stored = read_parquet(spark, os.path.join(idx, "cand")).select(
             "vec_id",
-            "centroid_id",
+            F.col("centroid_id").cast("long").alias("centroid_id"),
             "codes",
-            F.zip_with(
-                "embedding",
-                "c_emb",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("rv"),
         )
-        .localCheckpoint()  # two consumers: the Lloyd step + the re-encode
-    )
-    # one Lloyd step: refreshed codeword = scaled-int element-wise mean
-    # of the member residual subvectors under the COMMITTED codes
-    rexp = (
-        resid.select(
-            F.posexplode(F.col("codes").cast("array<int>")).alias("m", "k"),
-            "rv",
-        )
-        .select(
-            "m",
-            "k",
-            F.expr(f"slice(rv, m * {_PQ_SUB} + 1, {_PQ_SUB})").alias("sv"),
-        )
-        .select(
-            "m",
-            "k",
-            F.explode(F.sequence(F.lit(1), F.lit(_PQ_SUB))).alias("pos"),
-            "sv",
-        )
-        .select(
-            "m",
-            "k",
-            "pos",
-            F.floor(
-                F.element_at("sv", F.col("pos")) * F.lit(float(_REFRESH_SCALE))
+        resid = (
+            stored.join(e, "vec_id")
+            .join(F.broadcast(cent), "centroid_id")
+            .select(
+                "vec_id",
+                "centroid_id",
+                "codes",
+                F.zip_with(
+                    "embedding",
+                    "c_emb",
+                    lambda x, y: x.cast("double") - y.cast("double"),
+                ).alias("rv"),
             )
-            .cast("long")
-            .alias("v"),
+            .localCheckpoint()  # two consumers: the Lloyd step + the re-encode
         )
-    )
-    cw2m = rexp.groupBy("m", "k", "pos").agg(
-        (
-            F.sum("v").cast("bigint").cast("double")
-            / F.lit(float(_REFRESH_SCALE))
-            / F.count(F.lit(1))
-        ).alias("coord")
-    )
-    cw2g = (
-        cw2m.groupBy("m", "k")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "coord"))).alias("pc"))
-        .select("m", "k", F.transform("pc", lambda s: s["coord"]).alias("cw2"))
-    )
-    cb2 = (
-        cb0.join(cw2g, ["m", "k"], "left")
-        .select("m", "k", F.coalesce("cw2", "cw").alias("cw"))
-    )
-    cb2.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
-    cb2r = read_parquet(spark, os.path.join(path, "codebook"))
-    (
-        _ivfpq_encode(
+        # one Lloyd step: refreshed codeword = scaled-int element-wise mean
+        # of the member residual subvectors under the COMMITTED codes
+        rexp = (
             resid.select(
-                "vec_id", "centroid_id", F.col("rv").alias("embedding")
-            ),
-            cb2r,
+                F.posexplode(F.col("codes").cast("array<int>")).alias("m", "k"),
+                "rv",
+            )
+            .select(
+                "m",
+                "k",
+                F.expr(f"slice(rv, m * {_PQ_SUB} + 1, {_PQ_SUB})").alias("sv"),
+            )
+            .select(
+                "m",
+                "k",
+                F.explode(F.sequence(F.lit(1), F.lit(_PQ_SUB))).alias("pos"),
+                "sv",
+            )
+            .select(
+                "m",
+                "k",
+                "pos",
+                F.floor(
+                    F.element_at("sv", F.col("pos")) * F.lit(float(_REFRESH_SCALE))
+                )
+                .cast("long")
+                .alias("v"),
+            )
         )
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(path, "cand"))
-    )
-    IVFPQ_REFRESH_BUILDS[path] = IVFPQ_REFRESH_BUILDS.get(path, 0) + 1
-    return path
+        cw2m = rexp.groupBy("m", "k", "pos").agg(
+            (
+                F.sum("v").cast("bigint").cast("double")
+                / F.lit(float(_REFRESH_SCALE))
+                / F.count(F.lit(1))
+            ).alias("coord")
+        )
+        cw2g = (
+            cw2m.groupBy("m", "k")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "coord"))).alias("pc"))
+            .select("m", "k", F.transform("pc", lambda s: s["coord"]).alias("cw2"))
+        )
+        cb2 = (
+            cb0.join(cw2g, ["m", "k"], "left")
+            .select("m", "k", F.coalesce("cw2", "cw").alias("cw"))
+        )
+        cb2.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
+        cb2r = read_parquet(spark, os.path.join(path, "codebook"))
+        (
+            _ivfpq_encode(
+                resid.select(
+                    "vec_id", "centroid_id", F.col("rv").alias("embedding")
+                ),
+                cb2r,
+            )
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(path, "cand"))
+        )
+
+    return stores.ensure(spark, sf_dir, "ivfpq_refresh", build, force)
 
 
 def _q249_oracle() -> str:
@@ -3166,14 +3077,6 @@ def compact_ivfpq_codes(spark: SparkSession, store_dir: str) -> int:
     )
 
 
-def _ivfpq_live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"ivfpq_live_store_{app_id}_{tag}"
-    )
-
-
 def ensure_live_ivfpq_codes(spark: SparkSession, sf_dir: str) -> str:
     """Build the corpus's PQ codes the LIVE way, once per (session,
     sf_dir): three vec_id-keyed epoch slices through
@@ -3182,23 +3085,22 @@ def ensure_live_ivfpq_codes(spark: SparkSession, sf_dir: str) -> str:
     ``compact_ivfpq_codes`` after epoch 1 (the final read unions a
     compacted base with a post-compaction epoch dir — exactly
     ``ensure_live_ivf_membership``'s replay shape, for codes)."""
-    path = _ivfpq_live_store_path(spark, sf_dir)
-    store = EpochStore(path, IVFPQ_CODE_COLS)
-    if store.pointer()["epoch"] >= _LIVE_VEC_EPOCHS - 1:
-        return path
-    idx = ensure_ivfpq_index(spark, sf_dir)
-    corpus = (
-        T(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= 16)
-        .select("vec_id", "embedding")
-    )
-    sl = F.pmod(F.col("vec_id"), 3)
-    ivfpq_codes_batch(corpus.filter(sl == 0), 0, path, idx)
-    ivfpq_codes_batch(corpus.filter(sl == 1), 1, path, idx)
-    ivfpq_codes_batch(corpus.filter(sl == 1), 1, path, idx)  # no-op fence
-    compact_ivfpq_codes(spark, path)  # absorbs epochs 0-1 into base=v*
-    ivfpq_codes_batch(corpus.filter(sl == 2), 2, path, idx)
-    return path
+
+    def build(path: str) -> None:
+        idx = ensure_ivfpq_index(spark, sf_dir)
+        corpus = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") >= 16)
+            .select("vec_id", "embedding")
+        )
+        sl = F.pmod(F.col("vec_id"), 3)
+        ivfpq_codes_batch(corpus.filter(sl == 0), 0, path, idx)
+        ivfpq_codes_batch(corpus.filter(sl == 1), 1, path, idx)
+        ivfpq_codes_batch(corpus.filter(sl == 1), 1, path, idx)  # no-op fence
+        compact_ivfpq_codes(spark, path)  # absorbs epochs 0-1 into base=v*
+        ivfpq_codes_batch(corpus.filter(sl == 2), 2, path, idx)
+
+    return stores.ensure(spark, sf_dir, "ivfpq_live_store", build)
 
 
 @register(

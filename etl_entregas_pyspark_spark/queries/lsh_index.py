@@ -47,12 +47,11 @@ surface for a standing 100-TB corpus with daily arrivals.
 from __future__ import annotations
 
 import os
-import re
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
@@ -72,22 +71,7 @@ from etl_entregas_pyspark_spark.queries.similarity import (
     word_shingles,
 )
 
-# test hook: how many times each index path was (re)built this session —
-# the probe must hit this exactly once per (session, sf_dir)
-INDEX_BUILDS: dict[str, int] = {}
-
 _INDEX_FILES = 8  # band-table files per index (test-scale; a config at prod)
-
-
-def _index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Stable per-(session, sf_dir) location for the standing band index.
-
-    Keyed by application id (concurrent sessions don't clobber each
-    other) and the sf dir (one standing corpus per scale), same lifecycle
-    discipline as q150's ``_bucket_table``."""
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lsh_band_index_{app_id}_{tag}")
 
 
 def _minhash_aggs() -> list:
@@ -153,23 +137,22 @@ def ensure_band_index(
     q203's incoming batch). The table holds ONLY (doc_id, band_id,
     band_hash) — signatures reduce to their band hashes at ingest, so the
     index is a skinny integer/string table a 100-TB corpus can afford to
-    keep hot. Idempotent per (session, sf_dir): the parquet _SUCCESS
-    marker gates the rebuild, so every probe after the first is O(batch).
+    keep hot. Built once per (session, sf_dir) through ``stores.ensure``,
+    so every probe after the first is O(batch).
     """
-    path = _index_path(spark, sf_dir)
-    if not force and os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    corpus = T(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % _BATCH_MOD != 0
-    )
-    (
-        band_signatures(corpus)
-        .repartition(_INDEX_FILES, "band_hash")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    INDEX_BUILDS[path] = INDEX_BUILDS.get(path, 0) + 1
-    return path
+
+    def build(path: str) -> None:
+        corpus = T(spark, sf_dir, "documents").filter(
+            F.col("doc_id") % _BATCH_MOD != 0
+        )
+        (
+            band_signatures(corpus)
+            .repartition(_INDEX_FILES, "band_hash")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+
+    return stores.ensure(spark, sf_dir, "lsh_band_index", build, force)
 
 
 def _batch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,17 +480,6 @@ def q217_band_index_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _commit_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Per-(session, sf_dir) location for the ingest-committed index store
-    (epoch-fenced layout from streaming/upsert_sink.py, NOT the flat
-    batch table of ``ensure_band_index`` — the commit is an epoch)."""
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_commit_store_{app_id}_{tag}"
-    )
-
-
 def seed_index_store(
     spark: SparkSession, standing_index_path: str, index_dir: str
 ) -> None:
@@ -584,7 +556,7 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     route = q211_ingest_apply(spark, sf_dir).localCheckpoint()
-    store = _commit_store_path(spark, sf_dir)
+    store = stores.path(spark, sf_dir, "lsh_commit_store")
     seed_index_store(spark, ensure_band_index(spark, sf_dir), store)
     keepers = route.filter(F.col("action") == "keep").select("doc_id")
     keeper_docs = (
@@ -636,16 +608,6 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #         next-round #4, the q201→q212/q213/q216 promotion pattern).
 # ---------------------------------------------------------------------------
 
-_LIVE_EPOCHS = 3
-
-
-def _live_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_live_store_{app_id}_{tag}"
-    )
-
 
 def ensure_live_band_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the standing index the LIVE way, once per (session, sf_dir):
@@ -658,30 +620,28 @@ def ensure_live_band_index(spark: SparkSession, sf_dir: str) -> str:
     ``ensure_band_index``'s batch-built table — q222 proves it at the
     driver gate by running the probe against this store under q203's
     oracle."""
-    from etl_entregas_pyspark_spark.streaming.upsert_sink import (
-        _read_pointer,
-        band_index_batch,
-        compact_band_index,
-    )
 
-    path = _live_store_path(spark, sf_dir)
-    os.makedirs(path, exist_ok=True)
-    if _read_pointer(path)["epoch"] >= _LIVE_EPOCHS - 1:
-        return path
-    corpus = (
-        T(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % _BATCH_MOD != 0)
-        .select("doc_id", "text")
-    )
-    # corpus ids carry residue 1 or 2 mod 3, so pmod(id, 9) lands in
-    # {1,2,4,5,7,8} and floor(/3) splits them into epochs {0,1,2}
-    sl = F.floor(F.pmod(F.col("doc_id"), 9) / 3)
-    band_index_batch(corpus.filter(sl == 0), 0, path)
-    band_index_batch(corpus.filter(sl == 1), 1, path)
-    band_index_batch(corpus.filter(sl == 1), 1, path)  # re-delivery: no-op
-    compact_band_index(spark, path)  # absorbs epochs 0-1 into base=v*
-    band_index_batch(corpus.filter(sl == 2), 2, path)
-    return path
+    def build(path: str) -> None:
+        from etl_entregas_pyspark_spark.streaming.upsert_sink import (
+            band_index_batch,
+            compact_band_index,
+        )
+
+        corpus = (
+            T(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % _BATCH_MOD != 0)
+            .select("doc_id", "text")
+        )
+        # corpus ids carry residue 1 or 2 mod 3, so pmod(id, 9) lands in
+        # {1,2,4,5,7,8} and floor(/3) splits them into epochs {0,1,2}
+        sl = F.floor(F.pmod(F.col("doc_id"), 9) / 3)
+        band_index_batch(corpus.filter(sl == 0), 0, path)
+        band_index_batch(corpus.filter(sl == 1), 1, path)
+        band_index_batch(corpus.filter(sl == 1), 1, path)  # re-delivery: no-op
+        compact_band_index(spark, path)  # absorbs epochs 0-1 into base=v*
+        band_index_batch(corpus.filter(sl == 2), 2, path)
+
+    return stores.ensure(spark, sf_dir, "lsh_live_store", build)
 
 
 @register(
@@ -756,35 +716,22 @@ def scrub_band_index(
     )
 
 
-def _scrub_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(
-        tempfile.gettempdir(), f"lsh_scrub_store_{app_id}_{tag}"
-    )
-
-
 def ensure_scrubbed_store(spark: SparkSession, sf_dir: str) -> str:
     """Seed a dedicated store from the batch-built index and execute the
     deletion compaction on it, once per (session, sf_dir). The shared
     session index stays untouched (q210/q217 keep their contract); at
     production the scrub runs in place as scheduled maintenance."""
-    from etl_entregas_pyspark_spark.streaming.upsert_sink import (
-        _read_pointer,
-    )
 
-    path = _scrub_store_path(spark, sf_dir)
-    os.makedirs(path, exist_ok=True)
-    if _read_pointer(path).get("base_version") is not None:
-        return path
-    seed_index_store(spark, ensure_band_index(spark, sf_dir), path)
-    deny = (
-        T(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % _DENY_MOD == 1)
-        .select("doc_id")
-    )
-    scrub_band_index(spark, path, deny)
-    return path
+    def build(path: str) -> None:
+        seed_index_store(spark, ensure_band_index(spark, sf_dir), path)
+        deny = (
+            T(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % _DENY_MOD == 1)
+            .select("doc_id")
+        )
+        scrub_band_index(spark, path, deny)
+
+    return stores.ensure(spark, sf_dir, "lsh_scrub_store", build)
 
 
 @register(
@@ -909,16 +856,6 @@ from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
 _REPLAN_ROWS = 2  # the recall-heavy plan picked off q233's sweep
 _REPLAN_BANDS = N_HASHES // _REPLAN_ROWS
 
-# test hook: signature-store builds per path — re-plans must never re-shingle
-SIG_STORE_BUILDS: dict[str, int] = {}
-
-
-def _sig_store_path(spark: SparkSession, sf_dir: str) -> str:
-    app_id = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"lsh_sig_store_{app_id}_{tag}")
-
-
 def ensure_signature_store(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> str:
@@ -928,29 +865,28 @@ def ensure_signature_store(
     factorization can be derived from it with integer concat+md5 — no
     re-shingle, no re-hash of the text. Docs with no shingles carry no
     signature (matching every banded oracle's len(sh) > 0 gate).
-    Idempotent per (session, sf_dir) on the parquet _SUCCESS marker."""
-    path = _sig_store_path(spark, sf_dir)
-    if not force and os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    # the corpus parquet is a single input split at bench scale (one row
-    # group), so without the spread the whole shingle+md5 stage — the
-    # store build's entire CPU cost — runs in ONE task (guide §2.5 input
-    # skew; the q192/q203 idiom). Measured r15: build 8.5 s -> ~1.7 s.
-    # Split-aware: an already-wide production scan skips the exchange.
-    ex = (
-        spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
-        .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("item"))
-        .withColumn("h", md5_int(F.col("item")) % _P)
-    )
-    (
-        ex.groupBy("doc_id")
-        .agg(*_minhash_aggs())
-        .repartition(_INDEX_FILES, "doc_id")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    SIG_STORE_BUILDS[path] = SIG_STORE_BUILDS.get(path, 0) + 1
-    return path
+    Built once per (session, sf_dir) through ``stores.ensure``."""
+
+    def build(path: str) -> None:
+        # the corpus parquet is a single input split at bench scale (one row
+        # group), so without the spread the whole shingle+md5 stage — the
+        # store build's entire CPU cost — runs in ONE task (guide §2.5 input
+        # skew; the q192/q203 idiom). Measured r15: build 8.5 s -> ~1.7 s.
+        # Split-aware: an already-wide production scan skips the exchange.
+        ex = (
+            spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
+            .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("item"))
+            .withColumn("h", md5_int(F.col("item")) % _P)
+        )
+        (
+            ex.groupBy("doc_id")
+            .agg(*_minhash_aggs())
+            .repartition(_INDEX_FILES, "doc_id")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+
+    return stores.ensure(spark, sf_dir, "lsh_sig_store", build, force)
 
 
 def _q235_oracle() -> str:

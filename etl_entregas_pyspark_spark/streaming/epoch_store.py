@@ -17,6 +17,11 @@ Layout on disk (all parquet):
 - ``_COMMITTED.json`` — the pointer: ``{epoch, version[, base_version,
   base_through_epoch, ...]}``, swung by atomic rename, ALWAYS last.
 
+The pointer fences epochs INSIDE a build; it does not decide whether a
+standing store is built. The ``ensure_*`` builders gate on
+``stores.ensure``'s marker, written after the whole build returns, and a
+re-run of an interrupted build converges through the fencing below.
+
 Invariants (each pinned by ``tests/test_epoch_store.py``):
 
 1. **Fencing** — an epoch ``<= pointer.epoch`` is already committed;

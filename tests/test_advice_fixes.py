@@ -165,7 +165,7 @@ class TestRound6AdviceFixes:
             assert versions == ["v3", "v4"], versions
             assert _read_pointer(d)["epoch"] == 3
 
-    def test_q150_bucket_path_is_stable_per_session(self, spark):
+    def test_q150_bucket_path_is_stable_per_session(self, spark, sf_dir):
         """Repeated q150 invocations must reuse ONE per-session scratch
         directory (cleaned before each rewrite), not leak a fresh mkdtemp
         per run, and the table name must be session-suffixed."""
@@ -173,8 +173,8 @@ class TestRound6AdviceFixes:
 
         from etl_entregas_pyspark_spark.queries.bucketed import _bucket_table
 
-        t1, p1 = _bucket_table(spark)
-        t2, p2 = _bucket_table(spark)
+        t1, p1 = _bucket_table(spark, sf_dir)
+        t2, p2 = _bucket_table(spark, sf_dir)
         assert (t1, p1) == (t2, p2)
         app_id = spark.sparkContext.applicationId
         assert app_id.replace("-", "_") in t1

@@ -50,16 +50,17 @@ def test_band_index_built_once_and_reused(spark, sf_dir):
     """Back-to-back probes must not rebuild the standing index: the
     _SUCCESS marker's mtime is untouched and the build counter stays at
     its first-run value — per-run ingest cost is O(batch)."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries import lsh_index
 
     lsh_index.q210_incremental_lsh_probe_persisted(spark, sf_dir).count()
-    path = lsh_index._index_path(spark, sf_dir)
-    marker = os.path.join(path, "_SUCCESS")
+    path = stores.path(spark, sf_dir, "lsh_band_index")
+    marker = os.path.join(path, stores.MARKER)
     assert os.path.exists(marker)
-    builds_before = lsh_index.INDEX_BUILDS.get(path)
+    builds_before = stores.BUILDS[path]
     mtime_before = os.path.getmtime(marker)
     lsh_index.q210_incremental_lsh_probe_persisted(spark, sf_dir).count()
-    assert lsh_index.INDEX_BUILDS.get(path) == builds_before
+    assert stores.BUILDS[path] == builds_before
     assert os.path.getmtime(marker) == mtime_before
 
 
@@ -325,6 +326,7 @@ def test_disordered_join_drops_late_and_joins_late_twins(spark, sf_dir):
 def test_reconcile_flags_orphans_and_missing(spark, sf_dir, tmp_path):
     """Healthy index -> exactly one 'ok' row; then corrupt the saved table
     (append an orphan doc's bands) and the audit must surface it."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries import lsh_index
     from etl_entregas_pyspark_spark.queries.similarity import _BATCH_MOD
 
@@ -334,7 +336,7 @@ def test_reconcile_flags_orphans_and_missing(spark, sf_dir, tmp_path):
     }
     assert set(healthy) == {"ok"} and healthy["ok"] > 0
     # corrupt: append a batch doc's bands (never part of the standing set)
-    path = lsh_index._index_path(spark, sf_dir)
+    path = stores.path(spark, sf_dir, "lsh_band_index")
     orphan = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % _BATCH_MOD == 0)

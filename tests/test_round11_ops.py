@@ -34,15 +34,13 @@ def _rows(df, cols):
 def test_ingest_commit_idempotent(spark, sf_dir):
     """Two runs in one session: the second must neither re-seed nor
     re-append (epoch fencing) and must emit the identical summary."""
-    from etl_entregas_pyspark_spark.queries.lsh_index import (
-        _commit_store_path,
-        q221_ingest_commit,
-    )
+    from etl_entregas_pyspark_spark import stores
+    from etl_entregas_pyspark_spark.queries.lsh_index import q221_ingest_commit
     from etl_entregas_pyspark_spark.streaming.upsert_sink import _read_pointer
 
     cols = ["metric", "n_docs"]
     first = _rows(q221_ingest_commit(spark, sf_dir), cols)
-    store = _commit_store_path(spark, sf_dir)
+    store = stores.path(spark, sf_dir, "lsh_commit_store")
     ptr_before = _read_pointer(store)
     epoch_dir = os.path.join(store, "epoch=1")
     mtime_before = max(
@@ -63,8 +61,8 @@ def test_ingest_commit_epoch_holds_exactly_the_keepers(spark, sf_dir):
     """The committed epoch 1 must contain band signatures for exactly the
     shingle-able keepers of q211's routing — nothing dropped, nothing
     extra — and the summary's after-count must equal the store's."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries.lsh_index import (
-        _commit_store_path,
         band_signatures,
         q211_ingest_apply,
         q221_ingest_commit,
@@ -75,7 +73,7 @@ def test_ingest_commit_epoch_holds_exactly_the_keepers(spark, sf_dir):
         r["metric"]: r["n_docs"]
         for r in q221_ingest_commit(spark, sf_dir).collect()
     }
-    store = _commit_store_path(spark, sf_dir)
+    store = stores.path(spark, sf_dir, "lsh_commit_store")
     committed = spark.read.parquet(os.path.join(store, "epoch=1"))
 
     keepers = (
@@ -287,11 +285,9 @@ def test_bucketed_merge_equals_full_rewrite(spark, sf_dir, tmp_path):
         assert after == files  # same files, same mtimes, same sizes
 
 
-def test_bucketed_merge_counts_match_q104(spark, sf_dir):
+def test_bucketed_merge_counts_match_q104(spark, sf_dir, tmp_path):
     """End state of the bucketed fold must equal q104's single-pass CDC
     snapshot (the same oracle the full-rewrite sink is held to)."""
-    import tempfile
-
     from etl_entregas_pyspark_spark.queries.events import q104_cdc_apply
     from etl_entregas_pyspark_spark.streaming.upsert_sink import (
         read_bucketed_snapshot,
@@ -300,7 +296,7 @@ def test_bucketed_merge_counts_match_q104(spark, sf_dir):
     )
 
     log = _change_log(spark, sf_dir).localCheckpoint()
-    store = tempfile.mkdtemp(prefix="buck_snap_")
+    store = str(tmp_path / "buck_snap")
     for i in range(3):
         upsert_batch_bucketed(
             log.filter(F.pmod(F.col("event_id"), 3) == i), i, store
@@ -337,13 +333,14 @@ def test_ivf_index_built_once_with_bucket_layout(spark, sf_dir):
     """Back-to-back probes must not rebuild the inverted file, and the
     candidate table must be physically partitioned one directory per
     centroid bucket."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries import ivf_index
 
     ivf_index.q223_ivf_probe_persisted(spark, sf_dir).count()
-    path = ivf_index._ivf_index_path(spark, sf_dir)
-    builds_before = ivf_index.IVF_INDEX_BUILDS.get(path)
+    path = stores.path(spark, sf_dir, "ivf_index")
+    builds_before = stores.BUILDS[path]
     ivf_index.q223_ivf_probe_persisted(spark, sf_dir).count()
-    assert ivf_index.IVF_INDEX_BUILDS.get(path) == builds_before == 1
+    assert stores.BUILDS[path] == builds_before == 1
     cand_dir = os.path.join(path, "cand")
     buckets = [
         e for e in os.listdir(cand_dir) if e.startswith("centroid_id=")
@@ -384,9 +381,9 @@ def test_ivf_commit_idempotent_and_matches_recompute(spark, sf_dir):
     """Re-running the commit must not touch the store (pointer + epoch
     dirs unchanged), and the committed memberships must equal a fresh
     assignment of each slice against the same centroids."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries.ivf_index import (
         _VEC_BATCH_MOD,
-        _ivf_store_path,
         ensure_ivf_commit,
         ensure_ivf_index,
         q224_ivf_ingest_commit,
@@ -396,7 +393,7 @@ def test_ivf_commit_idempotent_and_matches_recompute(spark, sf_dir):
     from etl_entregas_pyspark_spark.streaming.upsert_sink import _read_pointer
 
     first = _rows(q224_ivf_ingest_commit(spark, sf_dir), ["centroid_id", "n_standing", "n_added", "n_after"])
-    store = _ivf_store_path(spark, sf_dir)
+    store = stores.path(spark, sf_dir, "ivf_store")
     ptr_before = _read_pointer(store)
     second = _rows(q224_ivf_ingest_commit(spark, sf_dir), ["centroid_id", "n_standing", "n_added", "n_after"])
     assert first == second

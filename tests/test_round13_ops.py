@@ -158,20 +158,19 @@ class TestQ232Sq8Rescore:
             assert r.q8_dot == want
 
     def test_probe_does_not_rebuild_index_and_is_deterministic(self, spark):
+        from etl_entregas_pyspark_spark import stores
         from etl_entregas_pyspark_spark.queries.ivf_index import (
-            IVF_INDEX_BUILDS,
-            _ivf_index_path,
             ensure_ivf_index,
             q232_ivf_sq8_rescore,
         )
 
         ensure_ivf_index(spark, SF_DIR)
-        path = _ivf_index_path(spark, SF_DIR)
-        builds = IVF_INDEX_BUILDS.get(path, 0)
+        path = stores.path(spark, SF_DIR, "ivf_index")
+        builds = stores.BUILDS[path]
         a = sorted(map(tuple, q232_ivf_sq8_rescore(spark, SF_DIR).collect()))
         b = sorted(map(tuple, q232_ivf_sq8_rescore(spark, SF_DIR).collect()))
         assert a == b
-        assert IVF_INDEX_BUILDS.get(path, 0) == builds  # probes never rebuild
+        assert stores.BUILDS[path] == builds  # probes never rebuild
 
     def test_neighbors_come_from_probed_buckets_only(self, spark):
         from etl_entregas_pyspark_spark.queries.ivf_index import (
@@ -292,8 +291,8 @@ class TestQ234RefreshApply:
     def test_layout_and_idempotence(self, spark):
         import glob
 
+        from etl_entregas_pyspark_spark import stores
         from etl_entregas_pyspark_spark.queries.ivf_index import (
-            IVF_INDEX_BUILDS,
             ensure_refreshed_ivf_index,
             q234_ivf_refresh_apply,
         )
@@ -301,12 +300,12 @@ class TestQ234RefreshApply:
         idx = ensure_refreshed_ivf_index(spark, SF_DIR)
         assert os.path.exists(os.path.join(idx, "cand", "_SUCCESS"))
         assert glob.glob(os.path.join(idx, "cand", "centroid_id=*"))
-        builds = IVF_INDEX_BUILDS.get(idx, 0)
+        builds = stores.BUILDS[idx]
         assert ensure_refreshed_ivf_index(spark, SF_DIR) == idx
         a = sorted(map(tuple, q234_ivf_refresh_apply(spark, SF_DIR).collect()))
         b = sorted(map(tuple, q234_ivf_refresh_apply(spark, SF_DIR).collect()))
         assert a == b
-        assert IVF_INDEX_BUILDS.get(idx, 0) == builds  # probes never rebuild
+        assert stores.BUILDS[idx] == builds  # probes never rebuild
 
     def test_persisted_probe_equals_recompute(self, spark):
         """Persisted-vs-recompute equivalence for the REBUILT index: the
@@ -368,8 +367,8 @@ class TestQ234RefreshApply:
 
 class TestQ235ReplanFromSignatures:
     def test_signature_store_schema_and_idempotence(self, spark):
+        from etl_entregas_pyspark_spark import stores
         from etl_entregas_pyspark_spark.queries.lsh_index import (
-            SIG_STORE_BUILDS,
             ensure_signature_store,
         )
         from etl_entregas_pyspark_spark.queries.similarity import N_HASHES
@@ -379,28 +378,27 @@ class TestQ235ReplanFromSignatures:
         assert set(sig.columns) == {"doc_id"} | {
             f"mh{j}" for j in range(N_HASHES)
         }
-        builds = SIG_STORE_BUILDS.get(path, 0)
+        builds = stores.BUILDS[path]
         assert ensure_signature_store(spark, SF_DIR) == path
-        assert SIG_STORE_BUILDS.get(path, 0) == builds
+        assert stores.BUILDS[path] == builds
 
     def test_replan_never_reshingles(self, spark):
         """The whole point of the signature store: a banding change must
         not re-hash the corpus. Re-running the re-plan leaves the store's
         build counter untouched."""
+        from etl_entregas_pyspark_spark import stores
         from etl_entregas_pyspark_spark.queries.lsh_index import (
-            SIG_STORE_BUILDS,
-            _sig_store_path,
             ensure_signature_store,
             q235_lsh_replan_from_signatures,
         )
 
         ensure_signature_store(spark, SF_DIR)
-        path = _sig_store_path(spark, SF_DIR)
-        builds = SIG_STORE_BUILDS.get(path, 0)
+        path = stores.path(spark, SF_DIR, "lsh_sig_store")
+        builds = stores.BUILDS[path]
         a = sorted(map(tuple, q235_lsh_replan_from_signatures(spark, SF_DIR).collect()))
         b = sorted(map(tuple, q235_lsh_replan_from_signatures(spark, SF_DIR).collect()))
         assert a == b
-        assert SIG_STORE_BUILDS.get(path, 0) == builds
+        assert stores.BUILDS[path] == builds
 
     def test_recall_heavy_plan_is_superset_of_q53(self, spark):
         """Width-2 bands nest inside q53's aligned width-3 bands, so every

@@ -346,8 +346,8 @@ class TestPqAdc:
 
 # -- Part 5: q242 IVF-PQ — the q223 x q240 composition ------------------------
 
+from etl_entregas_pyspark_spark import stores  # noqa: E402
 from etl_entregas_pyspark_spark.queries.ivf_index import (  # noqa: E402
-    IVFPQ_INDEX_BUILDS,
     _ivfpq_admission,
     ensure_ivfpq_index,
     q242_ivfpq_search,
@@ -375,10 +375,10 @@ class TestIvfPq:
 
     def test_index_built_once_across_probes(self, spark):
         idx = ensure_ivfpq_index(spark, SF_DIR)
-        before = IVFPQ_INDEX_BUILDS[idx]
+        before = stores.BUILDS[idx]
         q242_ivfpq_search(spark, SF_DIR).collect()
         q242_ivfpq_search(spark, SF_DIR).collect()
-        assert IVFPQ_INDEX_BUILDS[idx] == before
+        assert stores.BUILDS[idx] == before
 
     def test_codes_are_4bit_and_complete(self, spark):
         from etl_entregas_pyspark_spark.queries.similarity import _PQ_K, _PQ_M

@@ -42,17 +42,16 @@ class TestIvfpqLifecycle:
             assert 0.2 < r.drift_ratio < 5.0, rows
 
     def test_q249_refresh_never_rebuilds_on_reprobe(self, spark):
+        from etl_entregas_pyspark_spark import stores
         from etl_entregas_pyspark_spark.queries.ivf_index import (
-            IVFPQ_REFRESH_BUILDS,
-            _ivfpq_refresh_path,
             q249_ivfpq_refresh_apply,
         )
 
         q249_ivfpq_refresh_apply(spark, SF_DIR).collect()
-        path = _ivfpq_refresh_path(spark, SF_DIR)
-        builds = IVFPQ_REFRESH_BUILDS.get(path, 0)
+        path = stores.path(spark, SF_DIR, "ivfpq_refresh")
+        builds = stores.BUILDS[path]
         rows = q249_ivfpq_refresh_apply(spark, SF_DIR).collect()
-        assert IVFPQ_REFRESH_BUILDS.get(path, 0) == builds
+        assert stores.BUILDS[path] == builds
         assert len(rows) > 0 and all(r.rank <= 3 for r in rows)
 
     def test_q249_refresh_does_not_increase_quantization_error(self, spark):
