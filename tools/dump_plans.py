@@ -3,16 +3,42 @@ so plan-quality properties (pushdown, pruning, broadcast choice, top-k,
 bucketing) are reviewable without running Spark.
 
 Usage: python tools/dump_plans.py [sf_dir]
+
+Spark numbers expression ids, lambda variables, exchange plan ids and RDDs
+from session-wide counters, and store paths carry the application id, so
+the raw text of an unchanged plan depends on everything the session built
+before it. Each plan's numbers are renumbered from 1 in order of first
+appearance, so two runs of unchanged code write the same file.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_entregas_pyspark_spark.session import build_session  # noqa: E402
+
+# (prefix)(session-wide number): expression and subquery ids, lambda
+# variables, exchange plan ids, RDD ids, the application id in store paths.
+_SESSION_COUNTERS = [
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(lambda [a-z]+_)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+    re.compile(r"(local[-_])(\d{10,})"),
+]
+
+
+def renumber(plan: str) -> str:
+    """``plan`` with each session-wide counter renumbered from 1 in order
+    of first appearance."""
+    for pattern in _SESSION_COUNTERS:
+        ids: dict[str, int] = {}
+        plan = pattern.sub(lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1)), plan)
+    return plan
 
 
 def main() -> None:
@@ -88,10 +114,10 @@ def main() -> None:
             ._jdf.queryExecution()
             .explainString(mode)
         )
-        out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
+        out.append(f"## {name}\n\n```\n{renumber(plan.strip())}\n```\n")
         for title, fn in extras.get(name, []):
             sub = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
-            out.append(f"### {name} — {title}\n\n```\n{sub.strip()}\n```\n")
+            out.append(f"### {name} — {title}\n\n```\n{renumber(sub.strip())}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(names)} plans)")
