@@ -43,11 +43,14 @@ from etl_entregas_pyspark_spark.streaming.epoch_store import EpochStore
 from etl_entregas_pyspark_spark.queries.similarity import (
     _IVF_TOPK,
     _NPROBE,
+    _cosine_sql,
+    cosine,
     dot,
     ivf_assign,
     ivf_centroids,
+    probe_queries,
     q8_codes,
-    sq_norm,
+    topk,
 )
 
 def ensure_ivf_index(
@@ -86,6 +89,58 @@ def ensure_ivf_index(
     return stores.ensure(spark, sf_dir, "ivf_index", build, force)
 
 
+def _ivf_probe(
+    spark: SparkSession,
+    sf_dir: str,
+    idx: str,
+    lists: DataFrame,
+    prune: bool = True,
+    k: int = _IVF_TOPK,
+    score: str = "cosine",
+    rank: str = "rank",
+    keep: tuple = (),
+) -> DataFrame:
+    """q73's probe over a standing inverted file: each query of the probe
+    batch is assigned fresh against the centroids saved under ``idx``, its
+    ``_NPROBE`` nearest lists are scored by cosine (column ``score``,
+    next to ``query_id``, ``neighbor_id`` and the extra columns ``keep``)
+    and its top ``k`` kept, numbered in ``rank``.
+
+    ``lists`` is the inverted file: ``(vec_id, centroid_id)`` rows with or
+    without ``embedding``; a membership table without vectors has them
+    joined back from ``embeddings`` by id. With ``prune`` the probe rows
+    are checkpointed and their <= C distinct list ids pulled to the driver
+    as model state, so only the lists they name are read (static partition
+    pruning on a ``partitionBy(centroid_id)`` layout)."""
+    e = T(spark, sf_dir, "embeddings")
+    cent = read_parquet(spark, os.path.join(idx, "centroids"))
+    probes = (
+        ivf_assign(probe_queries(e), cent, _NPROBE)
+        .drop("d2")
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            "centroid_id",
+        )
+    )
+    if prune:
+        probes = probes.localCheckpoint()
+        buckets = [
+            r["centroid_id"]
+            for r in probes.select("centroid_id").distinct().collect()
+        ]
+        lists = lists.filter(F.col("centroid_id").isin(buckets))
+    if "embedding" not in lists.columns:
+        lists = lists.join(e.select("vec_id", "embedding"), "vec_id")
+    scored = lists.join(F.broadcast(probes), "centroid_id").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine("q_emb", "embedding").alias(score),
+        *keep,
+    )
+    return topk(scored, k, F.col(score).desc(), F.col("neighbor_id"), rank=rank)
+
+
 @register(
     "q223_ivf_probe_persisted",
     REGISTRY["q73_ivf_search"].oracle,
@@ -111,44 +166,7 @@ def ensure_ivf_index(
 )
 def q223_ivf_probe_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
-    cent = read_parquet(spark, os.path.join(idx, "centroids"))
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    cand = read_parquet(spark, os.path.join(idx, "cand")).filter(
-        F.col("centroid_id").isin(buckets)
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-    )
+    return _ivf_probe(spark, sf_dir, idx, read_parquet(spark, os.path.join(idx, "cand")))
 
 
 # ---------------------------------------------------------------------------
@@ -592,48 +610,11 @@ def ensure_live_ivf_membership(spark: SparkSession, sf_dir: str) -> str:
 )
 def q228_live_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_dir = ensure_live_ivf_membership(spark, sf_dir)
-    cent = read_parquet(
-        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    )
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    members = (
-        EpochStore(store_dir, IVF_MEMBER_COLS)
-        .read(spark)
-        .filter(F.col("centroid_id").isin(buckets))
-    )
-    cand = members.join(e.select("vec_id", "embedding"), "vec_id")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
+    return _ivf_probe(
+        spark,
+        sf_dir,
+        ensure_ivf_index(spark, sf_dir),
+        EpochStore(store_dir, IVF_MEMBER_COLS).read(spark),
     )
 
 
@@ -714,10 +695,7 @@ _PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
         ) WHERE rn <= {_NPROBE}
     ), scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(p.q_emb, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("p.q_emb", "c.embedding")} AS cosine
         FROM probes p JOIN cand c ON p.centroid_id = c.centroid_id
     )
     SELECT query_id, neighbor_id, cosine, rank FROM (
@@ -746,48 +724,11 @@ _PROBE_ASSIGN_Q229_SQL = _IVF_ASSIGN_SQL.replace(
 )
 def q229_ivf_scrub_under_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store_dir = ensure_govlive_ivf_membership(spark, sf_dir)
-    cent = read_parquet(
-        spark, os.path.join(ensure_ivf_index(spark, sf_dir), "centroids")
-    )
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            _NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-        .localCheckpoint()
-    )
-    # <= C-row model-state pull: which inverted lists to open
-    buckets = [
-        r["centroid_id"]
-        for r in probes.select("centroid_id").distinct().collect()
-    ]
-    members = (
-        EpochStore(store_dir, IVF_MEMBER_COLS)
-        .read(spark)
-        .filter(F.col("centroid_id").isin(buckets))
-    )
-    cand = members.join(e.select("vec_id", "embedding"), "vec_id")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
+    return _ivf_probe(
+        spark,
+        sf_dir,
+        ensure_ivf_index(spark, sf_dir),
+        EpochStore(store_dir, IVF_MEMBER_COLS).read(spark),
     )
 
 
@@ -815,10 +756,7 @@ _SWEEP_NPROBES = [1, 2, 4, 8]  # C = 8 centroids: up to the exhaustive probe
         SELECT * FROM (VALUES (1), (2), (4), (8)) AS t(nprobe)
     ), scored AS (
         SELECT l.nprobe, p.query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(p.q_emb, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("p.q_emb", "c.embedding")} AS cosine
         FROM levels l
         JOIN probes p ON p.pr <= l.nprobe
         JOIN cand c ON p.centroid_id = c.centroid_id
@@ -831,10 +769,7 @@ _SWEEP_NPROBES = [1, 2, 4, 8]  # C = 8 centroids: up to the exhaustive probe
         ) WHERE rank <= {_IVF_TOPK}
     ), bscored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("q.embedding", "c.embedding")} AS cosine
         FROM (SELECT vec_id, embedding FROM embeddings
               WHERE vec_id >= 8 AND vec_id < 16) q
         CROSS JOIN (SELECT vec_id, embedding FROM embeddings
@@ -884,7 +819,7 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_ivf_index(spark, sf_dir)
     cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
-    queries = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    queries = probe_queries(e)
     # probe ranks 1..8 per query (keep d2 ordering as pr via re-rank)
     wq = Window.partitionBy("vec_id").orderBy(F.col("d2"), F.col("centroid_id"))
     probes = (
@@ -898,9 +833,7 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     cand = read_parquet(spark, os.path.join(idx, "cand"))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
+    cos = cosine("q_emb", "embedding")
     # ONE candidate scan fans out to every level: the level fan-out is an
     # explode of a 4-literal array (a narrow op — no join, no shuffle),
     # and the resulting |queries| × C × 4-row frame broadcasts
@@ -931,18 +864,14 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     bq = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    wb = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    brute = (
-        corpus.crossJoin(F.broadcast(bq))
-        .select(
+    brute = topk(
+        corpus.crossJoin(F.broadcast(bq)).select(
             "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(wb).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
     costs = scored.groupBy("nprobe").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
         F.countDistinct("query_id").cast("bigint").alias("n_queries"),
@@ -1201,11 +1130,7 @@ def _sq8_admission(
     cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
     probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            keep=_NPROBE,
-        )
+        ivf_assign(probe_queries(e), cent, keep=_NPROBE)
         .drop("d2")
         .select(
             F.col("vec_id").alias("query_id"),
@@ -1225,21 +1150,19 @@ def _sq8_admission(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("q8_dot").desc(), F.col("neighbor_id")
-    )
-    shortpool = (
+    shortpool = topk(
         cand_codes.join(
             F.broadcast(probes.select("query_id", "q8_q", "centroid_id")),
             "centroid_id",
-        )
-        .select(
+        ).select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             q8_dot.alias("q8_dot"),
-        )
-        .select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= depth)
+        ),
+        depth,
+        F.col("q8_dot").desc(),
+        F.col("neighbor_id"),
+        rank="srn",
     )
     return probes, shortpool
 
@@ -1273,15 +1196,9 @@ def _sq8_admission(
     )
     SELECT query_id, neighbor_id, q8_dot, cosine, rank FROM (
         SELECT query_id, neighbor_id, q8_dot,
-               list_sum(list_transform(list_zip(q_emb, embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine,
+               {_cosine_sql("q_emb", "embedding")} AS cosine,
                ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY list_sum(list_transform(list_zip(q_emb, embedding),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                            / (sqrt(list_sum(list_transform(q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) DESC,
+                   ORDER BY {_cosine_sql("q_emb", "embedding")} DESC,
                             neighbor_id) AS rank
         FROM short
     ) WHERE rank <= {_IVF_TOPK}
@@ -1334,18 +1251,14 @@ def q232_ivf_sq8_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     resc = e.select(F.col("vec_id").alias("neighbor_id"), "embedding").join(
         F.broadcast(short_q), "neighbor_id"
     )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "q8_dot", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return topk(
+        resc.select(
+            "query_id", "neighbor_id", "q8_dot", cosine("q_emb", "embedding").alias("cosine")
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+    ).orderBy("query_id", "rank")
 
 
 # -- q234: centroid refresh APPLY — rebuild the inverted file and probe it ----
@@ -1420,10 +1333,7 @@ def ensure_refreshed_ivf_index(
         ) WHERE rn <= {_NPROBE}
     ), scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(p.q_emb, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("p.q_emb", "c.embedding")} AS cosine
         FROM probes2 p JOIN cand2 c ON p.centroid_id = c.centroid_id
     )
     SELECT query_id, neighbor_id, cosine, rank FROM (
@@ -1454,37 +1364,8 @@ def ensure_refreshed_ivf_index(
 )
 def q234_ivf_refresh_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_refreshed_ivf_index(spark, sf_dir)
-    cent = read_parquet(spark, os.path.join(idx, "centroids"))
-    e = T(spark, sf_dir, "embeddings")
-    probes = (
-        ivf_assign(
-            e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-            cent,
-            keep=_NPROBE,
-        )
-        .drop("d2")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-    )
     cand = read_parquet(spark, os.path.join(idx, "cand"))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_probe(spark, sf_dir, idx, cand, prune=False).orderBy("query_id", "rank")
 
 
 # -- q236: SQ8 shortlist-depth sweep — recall/cost per rescore budget ---------
@@ -1511,10 +1392,7 @@ _SQ8_SWEEP_DEPTHS = (3, 4, 6, 8)
                CAST(list_sum(list_transform(
                    list_zip({_q8_sql('p.q_emb')}, {_q8_sql('c.embedding')}),
                    x -> x[1] * x[2])) AS BIGINT) AS q8_dot,
-               list_sum(list_transform(list_zip(p.q_emb, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("p.q_emb", "c.embedding")} AS cosine
         FROM probes p JOIN cand c ON p.centroid_id = c.centroid_id
     ), ranked AS (
         SELECT query_id, neighbor_id, cosine,
@@ -1576,9 +1454,7 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     # ADMISSION arm — q232's shared codes-only stage at the max budget
     probes, shortpool = _sq8_admission(spark, sf_dir, max(_SQ8_SWEEP_DEPTHS))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
+    cos = cosine("q_emb", "embedding")
     # rescore the max-depth pool once: floats broadcast-joined in for
     # <= max(R) x |queries| rows; every smaller budget is a filter
     short_q = shortpool.join(
@@ -1594,10 +1470,7 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TRUTH arm — the full-precision probed ranking (the audit's
     # necessary float scan, exactly q230's brute-leg contract): the
     # exact top-k set membership stands in for exact_rank <= k
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
+    truth = topk(
         read_parquet(spark, os.path.join(idx, "cand"))
         .select("vec_id", "centroid_id", "embedding")
         .join(
@@ -1606,11 +1479,12 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(we).alias("exact_rank"))
-        .filter(F.col("exact_rank") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+        rank="exact_rank",
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
     # one rescored frame fans out to every budget: a literal explode, no
     # re-probe per level
     fan = resc.withColumn(
@@ -1872,7 +1746,7 @@ def _ivfpq_admission(
     cent = read_parquet(spark, os.path.join(idx, "centroids"))
     cb = read_parquet(spark, os.path.join(idx, "codebook"))
     e = T(spark, sf_dir, "embeddings")
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    qset = probe_queries(e)
     probes = (
         ivf_assign(qset, cent, _NPROBE)
         .drop("d2")
@@ -1958,12 +1832,7 @@ def _ivfpq_oracle(scan_pred: str = "") -> str:
         "list_sum(list_transform(list_zip(p.q_emb, c.c_emb), "
         "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
     )
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
     return f"""
     WITH cent AS (
         SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
@@ -2023,9 +1892,9 @@ def _ivfpq_oracle(scan_pred: str = "") -> str:
         ) WHERE srn <= {_PQ_SHORTLIST}
     )
     SELECT query_id, neighbor_id, adc, cosine, rank FROM (
-        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cosine} AS cosine,
+        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cos} AS cosine,
                ROW_NUMBER() OVER (PARTITION BY sh.query_id
-                   ORDER BY {cosine} DESC, sh.neighbor_id) AS rank
+                   ORDER BY {cos} DESC, sh.neighbor_id) AS rank
         FROM short sh
         JOIN (SELECT vec_id, embedding FROM embeddings
               WHERE vec_id >= 8 AND vec_id < 16) q ON sh.query_id = q.vec_id
@@ -2085,14 +1954,9 @@ def _ivfpq_finish(
     (live store): ADC top-``_PQ_SHORTLIST`` per query, floats joined
     back for <= shortlist x |queries| rescore rows, cosine
     top-``_IVF_TOPK``."""
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    short = (
-        scored.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
+    short = topk(
+        scored, _PQ_SHORTLIST, F.col("adc").desc(), F.col("neighbor_id"), rank="srn"
+    ).drop("srn")
     # exact rescore over the shortlist only — floats page in for
     # <= shortlist x |queries| rows
     resc = (
@@ -2108,18 +1972,14 @@ def _ivfpq_finish(
             "query_id",
         )
     )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "adc", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return topk(
+        resc.select(
+            "query_id", "neighbor_id", "adc", cosine("q_emb", "embedding").alias("cosine")
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+    ).orderBy("query_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -2229,12 +2089,7 @@ _ANN_BYTES = {
 
 
 def _q244_oracle() -> str:
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
     engines = {
         "ivf_flat": REGISTRY["q223_ivf_probe_persisted"].oracle,
         "ivf_sq8": REGISTRY["q232_ivf_sq8_rescore"].oracle,
@@ -2253,7 +2108,7 @@ def _q244_oracle() -> str:
         SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY {cosine} DESC, c.vec_id) AS xr
+                       ORDER BY {cos} DESC, c.vec_id) AS xr
             FROM (SELECT * FROM embeddings WHERE vec_id >= 8 AND vec_id < 16) q
             CROSS JOIN (SELECT * FROM embeddings WHERE vec_id >= 16) c
         ) WHERE xr <= {_IVF_TOPK}
@@ -2331,15 +2186,9 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = T(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    qset = probe_queries(e)
     # truth arm: brute-force exact top-k
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
+    truth = topk(
         corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
         .crossJoin(
             F.broadcast(
@@ -2349,11 +2198,12 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+        .select("query_id", "neighbor_id", cosine("q_emb", "embedding").alias("cosine")),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+        rank="xr",
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
     engines = {
         "ivf_flat": q223_ivf_probe_persisted,
         "ivf_sq8": q232_ivf_sq8_rescore,
@@ -2889,12 +2739,7 @@ def _q249_oracle() -> str:
         "list_sum(list_transform(list_zip(p.q_emb, c.c_emb), "
         "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
     )
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
     return f"""
     WITH cent AS (
         SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
@@ -2975,9 +2820,9 @@ def _q249_oracle() -> str:
         ) WHERE srn <= {_PQ_SHORTLIST}
     )
     SELECT query_id, neighbor_id, adc, cosine, rank FROM (
-        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cosine} AS cosine,
+        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cos} AS cosine,
                ROW_NUMBER() OVER (PARTITION BY sh.query_id
-                   ORDER BY {cosine} DESC, sh.neighbor_id) AS rank
+                   ORDER BY {cos} DESC, sh.neighbor_id) AS rank
         FROM short sh
         JOIN (SELECT vec_id, embedding FROM embeddings
               WHERE vec_id >= 8 AND vec_id < 16) q ON sh.query_id = q.vec_id
@@ -3321,18 +3166,8 @@ def _q253_oracle() -> str:
     # q236's contract: the sweep isolates residual-quantization loss
     # from coarse-probe loss, which q230 prices separately
     head = REGISTRY["q242_ivfpq_search"].oracle.split("), short AS (")[0]
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
-    tcos = (
-        "list_sum(list_transform(list_zip(p.q_emb, c.embedding), "
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
+    tcos = _cosine_sql("p.q_emb", "c.embedding")
     plan_values = ", ".join(f"({d})" for d in _SQ8_SWEEP_DEPTHS)
     return f"""{head}), ranked AS (
         SELECT query_id, neighbor_id, adc,
@@ -3340,7 +3175,7 @@ def _q253_oracle() -> str:
                    ORDER BY adc DESC, neighbor_id) AS srn
         FROM scores
     ), rescored AS (
-        SELECT r.query_id, r.neighbor_id, r.srn, {cosine} AS cosine
+        SELECT r.query_id, r.neighbor_id, r.srn, {cos} AS cosine
         FROM ranked r
         JOIN (SELECT vec_id, embedding FROM embeddings
               WHERE vec_id >= 8 AND vec_id < 16) q ON r.query_id = q.vec_id
@@ -3410,16 +3245,10 @@ def _q253_oracle() -> str:
 def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     probes, scored = _ivfpq_admission(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
+    pool = topk(
+        scored, max(_SQ8_SWEEP_DEPTHS), F.col("adc").desc(), F.col("neighbor_id"), rank="srn"
     )
-    pool = (
-        scored.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= max(_SQ8_SWEEP_DEPTHS))
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
+    cos = cosine("q_emb", "embedding")
     # rescore the max-depth pool once; every smaller budget is a filter
     resc = (
         e.filter(F.col("vec_id") >= 16)
@@ -3440,10 +3269,7 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     member = read_parquet(spark, os.path.join(idx, "cand")).select(
         "vec_id", F.col("centroid_id").cast("long").alias("centroid_id")
     )
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
+    truth = topk(
         member.join(e.select("vec_id", "embedding"), "vec_id")
         .join(
             F.broadcast(probes.select("query_id", "q_emb", "centroid_id")),
@@ -3451,11 +3277,12 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
-        )
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+        rank="xr",
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
     fan = resc.withColumn(
         "shortlist",
         F.explode(F.array(*[F.lit(d) for d in _SQ8_SWEEP_DEPTHS])),
@@ -3629,7 +3456,6 @@ def q254_sq8_clip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q264_oracle() -> str:
     from etl_entregas_pyspark_spark.queries.retrieval import (
-        _MMR_COS,
         _MMR_FINAL_SQL,
         _MMR_POOL,
         _mmr_chain_ctes,
@@ -3638,7 +3464,7 @@ def _q264_oracle() -> str:
         _PROBE_ASSIGN_SQL,
     )
 
-    cos_pc = _MMR_COS.format(a="p.q_emb", b="c.embedding")
+    cos_pc = _cosine_sql("p.q_emb", "c.embedding")
     ctes = [
         """cent AS MATERIALIZED (
         SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
@@ -3696,50 +3522,17 @@ def _register_q264() -> None:
     )
     def q264_ivf_mmr_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = ensure_ivf_index(spark, sf_dir)
-        cent = read_parquet(spark, os.path.join(idx, "centroids"))
-        e = T(spark, sf_dir, "embeddings")
-        probes = (
-            ivf_assign(
-                e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
-                cent,
-                _NPROBE,
-            )
-            .drop("d2")
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb"),
-                "centroid_id",
-            )
-            .localCheckpoint()
+        pool = _ivf_probe(
+            spark,
+            sf_dir,
+            idx,
+            read_parquet(spark, os.path.join(idx, "cand")),
+            k=_MMR_POOL,
+            score="rel",
+            rank="rn",
+            keep=(F.col("embedding").alias("c_emb"),),
         )
-        # <= C-row model-state pull: which inverted lists to open
-        buckets = [
-            r["centroid_id"]
-            for r in probes.select("centroid_id").distinct().collect()
-        ]
-        cand = read_parquet(spark, os.path.join(idx, "cand")).filter(
-            F.col("centroid_id").isin(buckets)
-        )
-        rel = dot(F.col("q_emb"), F.col("embedding")) / (
-            F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("rel").desc(), F.col("neighbor_id")
-        )
-        pool = (
-            cand.join(F.broadcast(probes), "centroid_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                rel.alias("rel"),
-                F.col("embedding").alias("c_emb"),
-            )
-            .select("*", F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= _MMR_POOL)
-            .drop("rn")
-            .localCheckpoint()
-        )
-        return mmr_greedy(pool)
+        return mmr_greedy(pool.drop("rn").localCheckpoint())
 
 
 _register_q264()

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T
-from etl_entregas_pyspark_spark.queries.similarity import dot, sq_norm
+from etl_entregas_pyspark_spark.queries.similarity import _cosine_sql, cosine, query_rank, topk
 
 
 # ---------------------------------------------------------------------------
@@ -31,13 +31,6 @@ def _q148_oracle() -> str:
     from etl_entregas_pyspark_spark.queries.relational import _rnd_sql
 
     bm25 = REGISTRY["q128_bm25_scoring"].oracle
-    dotp = (
-        "list_sum(list_transform(generate_series(1, len(e.embedding)), "
-        "i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)))"
-    )
-    nrm = (
-        "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
     rrf = (
         f"COALESCE(1.0 / ({_RRF_K} + l.r_lex), 0.0)"
         f" + COALESCE(1.0 / ({_RRF_K} + s.r_sem), 0.0)"
@@ -51,7 +44,7 @@ def _q148_oracle() -> str:
         SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0
     ), sem0 AS (
         SELECT e.vec_id AS doc_id,
-               {dotp} / ({nrm.format(v='e.embedding')} * {nrm.format(v='q.q_emb')}) AS cosine
+               {_cosine_sql("e.embedding", "q.q_emb")} AS cosine
         FROM embeddings e CROSS JOIN qv q WHERE e.vec_id <> 0
     ), sem30 AS (
         SELECT doc_id, cosine FROM sem0 ORDER BY cosine DESC, doc_id LIMIT {_RRF_PER_LIST}
@@ -100,12 +93,9 @@ def q148_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") != 0).select(
         F.col("vec_id").alias("doc_id"), F.col("embedding").alias("c_emb")
     )
-    cos = dot(F.col("c_emb"), F.col("q_emb")) / (
-        F.sqrt(sq_norm(F.col("c_emb"))) * F.sqrt(sq_norm(F.col("q_emb")))
-    )
     sem30 = (
         c.crossJoin(F.broadcast(qv))
-        .select("doc_id", cos.alias("cosine"))
+        .select("doc_id", cosine("c_emb", "q_emb").alias("cosine"))
         .orderBy(F.col("cosine").desc(), "doc_id")
         .limit(_RRF_PER_LIST)
     )
@@ -135,20 +125,13 @@ _MMR_POOL = 12     # relevance pool per query (stage 1)
 _MMR_K = 5         # diversified picks (stage 2)
 _MMR_LAM = 0.7     # relevance weight; 1-lam penalizes similarity to picks
 
-_MMR_COS = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-    "/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-    "* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-)
-
 
 def _mmr_chain_ctes() -> list[str]:
     """The greedy-selection CTE chain, pool-agnostic: assumes an existing
     MATERIALIZED ``pool`` CTE with (query_id, neighbor_id, rel, c_emb).
     Reused verbatim by q262 (brute pool) and q264 (persisted-IVF pool),
     so there is ONE definition of the MMR trajectory in the registry."""
-    cos_ps = _MMR_COS.format(a="p.c_emb", b="s.c_emb")
+    cos_ps = _cosine_sql("p.c_emb", "s.c_emb")
     lam, mu = _MMR_LAM, round(1 - _MMR_LAM, 10)
     ctes = [
         f"""acc1 AS MATERIALIZED (
@@ -190,7 +173,7 @@ _MMR_FINAL_SQL = f"""
 
 
 def _q262_oracle() -> str:
-    cos_qc = _MMR_COS.format(a="q.embedding", b="c.embedding")
+    cos_qc = _cosine_sql("q.embedding", "c.embedding")
     ctes = [
         f"""pairs AS MATERIALIZED (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -212,12 +195,9 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
     pool) and q264 (persisted-IVF pool) run. Pool-sized state per round:
     broadcast join against the picked set, (query, candidate) max-sim
     partial agg, query-partitioned argmax, localCheckpoint'd."""
-    from pyspark.sql.window import Window
-
-    w_rel = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("neighbor_id"))
     lam, mu = _MMR_LAM, round(1 - _MMR_LAM, 10)
     selected = (
-        pool.select("*", F.row_number().over(w_rel).alias("rn"))
+        pool.select("*", query_rank(F.desc("rel"), F.asc("neighbor_id")).alias("rn"))
         .filter(F.col("rn") == 1)
         .select(
             "query_id",
@@ -230,9 +210,7 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
         )
         .localCheckpoint()
     )
-    sim = dot(F.col("c_emb"), F.col("s_emb")) / (
-        F.sqrt(sq_norm(F.col("c_emb"))) * F.sqrt(sq_norm(F.col("s_emb")))
-    )
+    sim = cosine("c_emb", "s_emb")
     for r in range(2, _MMR_K + 1):
         cand = pool.join(
             selected.select("query_id", "neighbor_id"),
@@ -251,13 +229,10 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
             .agg(F.max("sim").alias("maxsim"))
         )
         mmr = F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("maxsim")
-        w_mmr = Window.partitionBy("query_id").orderBy(
-            F.desc("mmr"), F.asc("neighbor_id")
-        )
         pick = (
             maxsim.join(pool, ["query_id", "neighbor_id"])
             .select("query_id", "neighbor_id", "rel", "maxsim", mmr.alias("mmr"), "c_emb")
-            .select("*", F.row_number().over(w_mmr).alias("rn"))
+            .select("*", query_rank(F.desc("mmr"), F.asc("neighbor_id")).alias("rn"))
             .filter(F.col("rn") == 1)
             .select(
                 "query_id",
@@ -301,8 +276,6 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
     "defined 0.0 for the first pick so one formula covers all rounds.",
 )
 def q262_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     e = T(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _MMR_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -310,16 +283,13 @@ def q262_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") >= 8).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
-    rel = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("c_emb")))
+    pool = topk(
+        c.crossJoin(F.broadcast(q)).select(
+            "query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("rel"), "c_emb"
+        ),
+        _MMR_POOL,
+        F.desc("rel"),
+        F.asc("neighbor_id"),
+        rank="rn",
     )
-    w_rel = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("neighbor_id"))
-    pool = (
-        c.crossJoin(F.broadcast(q))
-        .select("query_id", "neighbor_id", rel.alias("rel"), "c_emb")
-        .select("*", F.row_number().over(w_rel).alias("rn"))
-        .filter(F.col("rn") <= _MMR_POOL)
-        .drop("rn")
-        .localCheckpoint()
-    )
-    return mmr_greedy(pool)
+    return mmr_greedy(pool.drop("rn").localCheckpoint())

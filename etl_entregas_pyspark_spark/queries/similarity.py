@@ -64,6 +64,46 @@ def sq_norm(a: Column) -> Column:
     )
 
 
+# The vector-scoring kernel: the ANN family's cosine, probe-query set and
+# per-query top-k are written here once, so no scoring site can drift.
+
+
+def norm(a: Column | str) -> Column:
+    """Exact double L2 norm of a float32 array."""
+    return F.sqrt(sq_norm(a))
+
+
+def cosine(a: Column | str, b: Column | str) -> Column:
+    """Exact double cosine ``dot(a, b) / (norm(a) * norm(b))``, bitwise
+    equal to the oracle's ``_cosine_sql``. The operand order is part of
+    the expression (``dot`` zips ``a`` with ``b``), so each caller keeps
+    its own: q148 and q262 score the candidate first."""
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def probe_queries(e: DataFrame) -> DataFrame:
+    """The IVF probe-query batch: ``vec_id`` in [8, 16) of ``embeddings``
+    (below it the 8 centroids, from 16 on the indexed corpus)."""
+    return e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+
+
+def query_rank(*order: Column) -> Column:
+    """``row_number()`` within one query's rows (partition ``query_id``)."""
+    return F.row_number().over(Window.partitionBy("query_id").orderBy(*order))
+
+
+def topk(df: DataFrame, k: int, *order: Column, rank: str = "rank") -> DataFrame:
+    """Each query's first ``k`` rows of ``df`` under ``order``, numbered
+    1..k in the column ``rank``; a query with fewer rows keeps them all.
+
+    The ``row_number() <= k`` shape is deliberate: Spark plans it as a
+    partial ``WindowGroupLimit`` before the ``query_id`` shuffle and a
+    final one after it (local prune, global merge, REPOSE's top-k), which
+    ``tests/test_plan_lint.py`` pins for every battery plan. ``order``
+    must end in a unique tie-break so the ranks are deterministic."""
+    return df.select("*", query_rank(*order).alias(rank)).filter(F.col(rank) <= k)
+
+
 def md5_int(col: Column) -> Column:
     """First 60 bits of md5 as a non-negative bigint (engine-portable)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
@@ -101,6 +141,18 @@ def _sh_sql(n: int = SHINGLE_W) -> str:
 
 def _md5_int_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}),1,15)) AS BIGINT)"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """DuckDB text of the exact double cosine of list columns ``a`` and
+    ``b``. It shares no code with the Spark ``cosine``, so every hash gate
+    compares two independent spellings of the score."""
+    nrm = "sqrt(list_sum(list_transform({}, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
+        f"/ ({nrm.format(a)} * {nrm.format(b)})"
+    )
 
 
 def ipow(x, n: int):
@@ -143,7 +195,7 @@ def q50_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.size("embedding").alias("dim"),
-        F.sqrt(sq_norm(F.col("embedding"))).alias("l2_norm"),
+        norm("embedding").alias("l2_norm"),
     )
 
 
@@ -151,12 +203,9 @@ def q50_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q51 — brute-force cosine top-k
 # ---------------------------------------------------------------------------
 
-_COSINE_PAIR_SQL = """
+_COSINE_PAIR_SQL = f"""
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+           {_cosine_sql("q.embedding", "c.embedding")} AS cosine
     FROM embeddings q JOIN embeddings c ON c.vec_id >= 8
     WHERE q.vec_id < 8
 """
@@ -181,17 +230,15 @@ def q51_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") >= 8).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
-    cos = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("c_emb")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     # broadcast the 8-ROW QUERY SIDE against the candidate scan: the
     # candidate set is the 100-TB side, it must stream, never broadcast
-    return (
-        c.crossJoin(F.broadcast(q))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= 10)
+    return topk(
+        c.crossJoin(F.broadcast(q)).select(
+            "query_id", "neighbor_id", cosine("q_emb", "c_emb").alias("cosine")
+        ),
+        10,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
 
 
@@ -232,9 +279,8 @@ def q52_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "label")
         .agg(F.count("*").alias("n_votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("n_votes").desc(), F.col("label"))
     return (
-        votes.select("*", F.row_number().over(w).alias("rn"))
+        votes.select("*", query_rank(F.col("n_votes").desc(), F.col("label")).alias("rn"))
         .filter(F.col("rn") == 1)
         .select("query_id", F.col("label").alias("predicted_label"), "n_votes")
     )
@@ -929,10 +975,7 @@ _PROBE_ASSIGN_SQL = _IVF_ASSIGN_SQL.replace(
         ) WHERE rn <= {_NPROBE}
     ), scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(list_zip(p.q_emb, c.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+               {_cosine_sql("p.q_emb", "c.embedding")} AS cosine
         FROM probes p JOIN cand c ON p.centroid_id = c.centroid_id
     )
     SELECT query_id, neighbor_id, cosine, rank FROM (
@@ -957,21 +1000,21 @@ def q73_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ivf_assign(src, cent, keep).drop("d2")
 
     cand = assign(e.filter(F.col("vec_id") >= 16), 1)
-    probes = assign(e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)), _NPROBE).select(
+    probes = assign(probe_queries(e), _NPROBE).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         "centroid_id",
     )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     # 16 probe rows broadcast into the bucketed candidate scan
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
+    return topk(
+        cand.join(F.broadcast(probes), "centroid_id").select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine("q_emb", "embedding").alias("cosine"),
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
 
 
@@ -1441,12 +1484,6 @@ def _q177_oracle() -> str:
             f"p -> CAST(p[1] AS DOUBLE) * p[2])) AS p{k}"
         )
     pdot = " + ".join(f"q.p{k} * c.p{k}" for k in range(_JL_DIMS))
-    cos = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        " / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
-        " * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
     return f"""
     WITH proj AS (
         SELECT vec_id, embedding, {', '.join(proj_cols)}
@@ -1468,7 +1505,7 @@ def _q177_oracle() -> str:
                                   ORDER BY cosine DESC, neighbor_id) AS rank
         FROM (
             SELECT q.query_id, q.neighbor_id,
-                   {cos.replace('q.embedding', 'q.q_embedding').replace('c.embedding', 'q.c_embedding')} AS cosine
+                   {_cosine_sql("q.q_embedding", "q.c_embedding")} AS cosine
             FROM cand q
         )
     ) WHERE rank <= 10
@@ -1529,27 +1566,25 @@ def q177_jl_projection_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col(f"qp{k}") * F.col(f"cp{k}") for k in range(1, _JL_DIMS)),
         F.col("qp0") * F.col("cp0"),
     )
-    w_p = Window.partitionBy("query_id").orderBy(
-        F.col("pscore").desc(), F.col("neighbor_id")
-    )
     # query side broadcasts (8 rows); the corpus side streams
-    cand = (
-        c.crossJoin(F.broadcast(q))
-        .select("query_id", "neighbor_id", "q_embedding", "c_embedding",
-                pdot.alias("pscore"))
-        .select("*", F.row_number().over(w_p).alias("prank"))
-        .filter(F.col("prank") <= _JL_CAND)
+    cand = topk(
+        c.crossJoin(F.broadcast(q)).select(
+            "query_id", "neighbor_id", "q_embedding", "c_embedding", pdot.alias("pscore")
+        ),
+        _JL_CAND,
+        F.col("pscore").desc(),
+        F.col("neighbor_id"),
+        rank="prank",
     )
-    cos = dot(F.col("q_embedding"), F.col("c_embedding")) / (
-        F.sqrt(sq_norm(F.col("q_embedding"))) * F.sqrt(sq_norm(F.col("c_embedding")))
-    )
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(w_r).alias("rank"))
-        .filter(F.col("rank") <= 10)
+    return topk(
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            cosine("q_embedding", "c_embedding").alias("cosine"),
+        ),
+        10,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
 
 
@@ -1617,17 +1652,17 @@ def q179_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("c_emb"),
         F.col("label").alias("c_label"),
     )
-    cos = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("c_emb")))
-    )
-    w_pool = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    pool = (
-        c.crossJoin(F.broadcast(q))
-        .select("query_id", "neighbor_id", "q_label", "c_label", cos.alias("cosine"))
-        .select("*", F.row_number().over(w_pool).alias("rank"))
-        .filter(F.col("rank") <= _HN_POOL)
+    pool = topk(
+        c.crossJoin(F.broadcast(q)).select(
+            "query_id",
+            "neighbor_id",
+            "q_label",
+            "c_label",
+            cosine("q_emb", "c_emb").alias("cosine"),
+        ),
+        _HN_POOL,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
     )
     same = F.col("q_label") == F.col("c_label")
     w_role = Window.partitionBy("query_id", same).orderBy(
@@ -1652,10 +1687,7 @@ def q179_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEMDEDUP_TAU = 0.4  # q56's cosine threshold: non-trivial on N(0,1)-ish vectors
 
-_SEMDEDUP_COS_SQL = """list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"""
+_SEMDEDUP_COS_SQL = _cosine_sql("a.embedding", "b.embedding")
 
 
 @register(
@@ -1720,7 +1752,7 @@ def semdedup_prune(
             F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
         )
     # norms precomputed ONCE per vector (scalar column) instead of per
-    # pair: sqrt(sq_norm(a)) * sqrt(sq_norm(b)) is arithmetic-identical
+    # pair: norm(a) * norm(b) is arithmetic-identical
     # whether the factors are computed inline or joined, but inline costs
     # two 64-element folds per PAIR — 2/3 of the pair-stage work.
     # localCheckpoint: THREE consumers (both pair-join sides + the final
@@ -1730,7 +1762,7 @@ def semdedup_prune(
         "vec_id",
         "embedding",
         "centroid_id",
-        F.sqrt(sq_norm(F.col("embedding"))).alias("nrm"),
+        norm("embedding").alias("nrm"),
     ).localCheckpoint()
     # SALT the centroid-keyed pair join (guide §2.5 skew): with K
     # centroids the join would run in at most K tasks — K=8 leaves 3/4 of
@@ -1921,10 +1953,7 @@ def _label_noise_oracle(n_centroids: int | str, derived_k: bool = False) -> str:
         SELECT vec_id, label, neighbor_label FROM (
             SELECT a.vec_id, a.label, b.label AS neighbor_label,
                    ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-                       list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                       / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-                          * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) DESC,
+                       {_SEMDEDUP_COS_SQL} DESC,
                        b.vec_id) AS rnk
             FROM labeled a JOIN labeled b
               ON a.centroid_id = b.centroid_id AND a.vec_id != b.vec_id
@@ -1995,7 +2024,7 @@ def label_noise_flags(
         "embedding",
         "centroid_id",
         "label",
-        F.sqrt(sq_norm(F.col("embedding"))).alias("nrm"),
+        norm("embedding").alias("nrm"),
     ).localCheckpoint()
     # salt the centroid-keyed kNN join exactly like semdedup_prune's pair
     # stage (guide §2.5): K buckets cap the stage at K tasks and leave a
@@ -2687,12 +2716,7 @@ def q207_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECALL_K = 10
 _RECALL_NPROBES = [1, 2, 4]
 
-_COS_SQL = (
-    "list_sum(list_transform(list_zip(q.q_emb, c.embedding),"
-    " x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform(q.q_emb, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
-    "    * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-)
+_COS_SQL = _cosine_sql("q.q_emb", "c.embedding")
 
 
 def _q215_oracle() -> str:
@@ -2770,7 +2794,7 @@ def _q215_parts(
     cent = ivf_centroids(e)
     cand = ivf_assign(e.filter(F.col("vec_id") >= 16), cent, keep=1).drop("d2")
     probes_all = ivf_assign(
-        e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)),
+        probe_queries(e),
         cent,
         keep=max(_RECALL_NPROBES),
     ).select(
@@ -2786,20 +2810,15 @@ def _q215_parts(
         .alias("rn"),
     )
     queries = probes_all.filter(F.col("rn") == 1).select("query_id", "q_emb")
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    exact = (
+    cos = cosine("q_emb", "embedding")
+    exact = topk(
         e.filter(F.col("vec_id") >= 16)
         .crossJoin(F.broadcast(queries))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine"))
-        .select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= _RECALL_K)
-        .select("query_id", "neighbor_id")
-    )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")),
+        _RECALL_K,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+    ).select("query_id", "neighbor_id")
     scored = (
         cand.join(
             F.broadcast(
@@ -2851,19 +2870,17 @@ def q215_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored, exact, queries = _q215_parts(spark, sf_dir)
     scored = scored.localCheckpoint()
     exact = exact.localCheckpoint()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
     ivf_parts = []
     for np_ in _RECALL_NPROBES:
         ivf_parts.append(
-            scored.filter(F.col("probe_rank") <= np_)
-            .select("query_id", "neighbor_id", "cosine")
-            .select("*", F.row_number().over(w).alias("rank"))
-            .filter(F.col("rank") <= _RECALL_K)
-            .select(
-                F.lit(np_).alias("nprobe"), "query_id", "neighbor_id"
-            )
+            topk(
+                scored.filter(F.col("probe_rank") <= np_).select(
+                    "query_id", "neighbor_id", "cosine"
+                ),
+                _RECALL_K,
+                F.col("cosine").desc(),
+                F.col("neighbor_id"),
+            ).select(F.lit(np_).alias("nprobe"), "query_id", "neighbor_id")
         )
     ivf = ivf_parts[0]
     for part in ivf_parts[1:]:
@@ -3525,12 +3542,7 @@ def _pq_oracle() -> str:
         "list_sum(list_transform(list_zip(s.qsv, b.cw), "
         "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
     )
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
     return f"""
     WITH corpus AS (
         SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 16
@@ -3575,9 +3587,9 @@ def _pq_oracle() -> str:
         ) WHERE srn <= {_PQ_SHORTLIST}
     )
     SELECT query_id, neighbor_id, adc, cosine, rank FROM (
-        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cosine} AS cosine,
+        SELECT sh.query_id, sh.neighbor_id, sh.adc, {cos} AS cosine,
                ROW_NUMBER() OVER (PARTITION BY sh.query_id
-                   ORDER BY {cosine} DESC, sh.neighbor_id) AS rank
+                   ORDER BY {cos} DESC, sh.neighbor_id) AS rank
         FROM short sh
         JOIN qset q ON sh.query_id = q.vec_id
         JOIN corpus c ON sh.neighbor_id = c.vec_id
@@ -3607,7 +3619,7 @@ def _pq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC scan. Returns (query_id, neighbor_id, adc)."""
     e = T(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    qset = probe_queries(e)
     # codebook: a deterministic corpus sample's subvectors (16 codewords
     # per subspace), broadcast everywhere — K x M x 8 doubles of model state
     cb = (
@@ -3702,16 +3714,11 @@ def _pq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q240_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    qset = probe_queries(e)
     scores = _pq_scores(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    short = (
-        scores.select("*", F.row_number().over(ws).alias("srn"))
-        .filter(F.col("srn") <= _PQ_SHORTLIST)
-        .drop("srn")
-    )
+    short = topk(
+        scores, _PQ_SHORTLIST, F.col("adc").desc(), F.col("neighbor_id"), rank="srn"
+    ).drop("srn")
     # exact rescore over the shortlist only (q232's refine contract)
     resc = (
         corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
@@ -3726,18 +3733,14 @@ def q240_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
         )
     )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        resc.select("query_id", "neighbor_id", "adc", cos.alias("cosine"))
-        .select("*", F.row_number().over(wr).alias("rank"))
-        .filter(F.col("rank") <= _IVF_TOPK)
-        .orderBy("query_id", "rank")
-    )
+    return topk(
+        resc.select(
+            "query_id", "neighbor_id", "adc", cosine("q_emb", "embedding").alias("cosine")
+        ),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+    ).orderBy("query_id", "rank")
 
 
 # -- q241: PQ shortlist-depth sweep — recall/cost per rescore budget ----------
@@ -3749,12 +3752,7 @@ def _pq_sweep_oracle() -> str:
     base = _pq_oracle()
     # reuse q240's CTE chain up to `scores`, then sweep budgets like q236
     head = base.split("), short AS (")[0]
-    cosine = (
-        "list_sum(list_transform(list_zip(q.embedding, c.embedding), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-        "/ (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) "
-        "* sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
-    )
+    cos = _cosine_sql("q.embedding", "c.embedding")
     plan_values = ", ".join(f"({d})" for d in _PQ_SWEEP_DEPTHS)
     return f"""{head}), ranked AS (
         SELECT query_id, neighbor_id, adc,
@@ -3762,7 +3760,7 @@ def _pq_sweep_oracle() -> str:
                    ORDER BY adc DESC, neighbor_id) AS srn
         FROM scores
     ), rescored AS (
-        SELECT r.query_id, r.neighbor_id, r.srn, {cosine} AS cosine
+        SELECT r.query_id, r.neighbor_id, r.srn, {cos} AS cosine
         FROM ranked r
         JOIN qset q ON r.query_id = q.vec_id
         JOIN corpus c ON r.neighbor_id = c.vec_id
@@ -3771,7 +3769,7 @@ def _pq_sweep_oracle() -> str:
         SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY {cosine} DESC, c.vec_id) AS xr
+                       ORDER BY {cos} DESC, c.vec_id) AS xr
             FROM qset q CROSS JOIN corpus c
         ) WHERE xr <= {_IVF_TOPK}
     ), levels AS (
@@ -3830,18 +3828,15 @@ def _pq_sweep_oracle() -> str:
 def q241_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = T(spark, sf_dir, "embeddings")
     corpus = e.filter(F.col("vec_id") >= 16)
-    qset = e.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
+    qset = probe_queries(e)
     # ADC scores via q240's stages (codebook/encode/LUT/scan)
     scores = _pq_scores(spark, sf_dir)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
     ranked = scores.select(
-        "query_id", "neighbor_id", F.row_number().over(ws).alias("srn")
+        "query_id",
+        "neighbor_id",
+        query_rank(F.col("adc").desc(), F.col("neighbor_id")).alias("srn"),
     ).filter(F.col("srn") <= max(_PQ_SWEEP_DEPTHS))
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(sq_norm(F.col("q_emb"))) * F.sqrt(sq_norm(F.col("embedding")))
-    )
+    cos = cosine("q_emb", "embedding")
     q_emb = F.broadcast(
         qset.select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -3855,17 +3850,15 @@ def q241_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # truth arm: brute-force exact top-k (queries broadcast into the scan)
-    wt = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
+    truth = topk(
         corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
         .crossJoin(q_emb)
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .select("*", F.row_number().over(wt).alias("xr"))
-        .filter(F.col("xr") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    )
+        .select("query_id", "neighbor_id", cos.alias("cosine")),
+        _IVF_TOPK,
+        F.col("cosine").desc(),
+        F.col("neighbor_id"),
+        rank="xr",
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
     fan = rescored.withColumn(
         "shortlist",
         F.explode(F.array(*[F.lit(d) for d in _PQ_SWEEP_DEPTHS])),

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
+from etl_entregas_pyspark_spark.queries.similarity import _cosine_sql, cosine, dot
 
 
 @register(
@@ -216,15 +217,9 @@ _SIG_SQL = f"""
         FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id
     )
     SELECT vec_a, vec_b,
-           list_sum(list_transform(list_zip(emb_a, emb_b),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(emb_a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(emb_b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) AS cosine
+           {_cosine_sql("emb_a", "emb_b")} AS cosine
     FROM cand
-    WHERE list_sum(list_transform(list_zip(emb_a, emb_b),
-                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(emb_a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(emb_b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))) >= {_COS_THRESHOLD}
+    WHERE {_cosine_sql("emb_a", "emb_b")} >= {_COS_THRESHOLD}
     """,
     doc=f"embedding near-dup pairs: {_N_PLANES}-bit hyperplane-LSH signature "
     "(sign of dot with fixed reference vectors) blocks candidates, exact "
@@ -232,8 +227,6 @@ _SIG_SQL = f"""
     "pairwise scan",
 )
 def q56_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_entregas_pyspark_spark.queries.similarity import dot, sq_norm
-
     e = T(spark, sf_dir, "embeddings")
     planes = [
         r.embedding
@@ -249,9 +242,7 @@ def q56_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig = sig + bit(j)
     signed = e.select("vec_id", "embedding", sig.alias("sig"))
     a, b = signed.alias("a"), signed.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.sqrt(sq_norm(F.col("a.embedding"))) * F.sqrt(sq_norm(F.col("b.embedding")))
-    )
+    cos = cosine("a.embedding", "b.embedding")
     return (
         a.join(b, (F.col("a.sig") == F.col("b.sig")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .filter(cos >= _COS_THRESHOLD)

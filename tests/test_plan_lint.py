@@ -86,3 +86,29 @@ def test_no_undocumented_global_window(plans):
         if has_global_window(p) and n not in _GLOBAL_WINDOW_OK
     ]
     assert not bad, f"undocumented single-partition windows in: {bad}"
+
+
+_QUERY_ROW_NUMBER = re.compile(
+    r"Window \[row_number\(\) windowspecdefinition\(query_id#\d+L?, .*? AS (\w+#\d+)\], \[query_id#\d+L?\]"
+)
+
+
+def test_query_topk_keeps_its_group_limit(plans):
+    """A per-query top-k (``similarity.topk``: ``row_number()`` over
+    ``query_id`` under a rank filter) must sit on a ``WindowGroupLimit``,
+    the partial pre-shuffle prune that keeps the shuffle at k rows per
+    query and task. A helper that loses the shape fails here."""
+    checked, bad = 0, []
+    for name, plan in plans.items():
+        lines = plan.splitlines()
+        for i, line in enumerate(lines[1:-1], 1):
+            m = _QUERY_ROW_NUMBER.search(line)
+            rank_filter = m and re.search(
+                rf"Filter .*\b{re.escape(m.group(1))} (<=|<|=) \d+\)", lines[i - 1]
+            )
+            if rank_filter:
+                checked += 1
+                if "WindowGroupLimit [query_id#" not in lines[i + 1]:
+                    bad.append(name)
+    assert checked >= 20, checked
+    assert not bad, f"per-query top-k without a WindowGroupLimit in: {bad}"
