@@ -99,7 +99,7 @@ def topk(df: DataFrame, k: int, *order: Column, rank: str = "rank") -> DataFrame
     The ``row_number() <= k`` shape is deliberate: Spark plans it as a
     partial ``WindowGroupLimit`` before the ``query_id`` shuffle and a
     final one after it (local prune, global merge, REPOSE's top-k), which
-    ``tests/test_plan_lint.py`` pins for every battery plan. ``order``
+    ``tests/test_plan_lint.py`` pins for every registered query. ``order``
     must end in a unique tie-break so the ranks are deterministic."""
     return df.select("*", query_rank(*order).alias(rank)).filter(F.col(rank) <= k)
 
