@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.events import E
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd
@@ -150,10 +151,10 @@ def propagate_components(pairs: DataFrame) -> DataFrame:
     loop_parts = max(4, min(int(prev_parts), 1 + n_edges // 10_000))
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        labels = (
+        labels = stores.materialize(
             edges.select(F.col("doc_a").alias("doc"), F.col("doc_a").alias("component"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "propagate_components: seed labels",
         )
 
         # min-label propagation with POINTER JUMPING: each round takes the
@@ -182,7 +183,7 @@ def propagate_components(pairs: DataFrame) -> DataFrame:
             jump = labels.select(
                 F.col("doc").alias("component"), F.col("component").alias("jumped")
             )
-            stepped = (
+            stepped = stores.materialize(
                 propagated.join(jump, "component", "left")
                 .select(
                     "doc",
@@ -190,8 +191,8 @@ def propagate_components(pairs: DataFrame) -> DataFrame:
                     F.least(
                         F.col("component"), F.coalesce("jumped", "component")
                     ).alias("component"),
-                )
-                .localCheckpoint()
+                ),
+                "propagate_components: round labels",
             )
             changed = (
                 stepped.filter(F.col("component") != F.col("old_component"))
@@ -436,11 +437,13 @@ def q115_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint()
+    edges_deg = stores.materialize(edges.join(deg, "src"), "q115: edges with out-degree")
     # derive nodes FROM the materialized edge list: checkpointing it from
     # `deg` would rebuild the scan→distinct→union→groupBy lineage a second
     # time just to materialize the same key set
-    nodes = edges_deg.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    nodes = stores.materialize(
+        edges_deg.select(F.col("src").alias("node")).distinct(), "q115: node set"
+    )
     score = nodes.select("node", F.lit(_PR_SCALE).cast("bigint").alias("score"))
     # NO per-iteration materialization, deliberately: the iteration count
     # is FIXED and there is no per-round driver action, so the unrolled
@@ -693,9 +696,10 @@ _TRI_SUPPORT_MULT = 2  # support = max(2, MULT × median pair count)
     contrast_of="q126_copurchase_triangles",
 )
 def q198_triangles_adaptive_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pc = basket_pair_counts(
-        T(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
-    ).localCheckpoint()
+    pc = stores.materialize(
+        basket_pair_counts(T(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"),
+        "q198: basket pair counts",
+    )
     hist = pc.groupBy(F.col("n_baskets").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -1046,7 +1050,9 @@ def q162_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = T(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), F.col("l_partkey").alias("p")
     )
-    inter = o.join(l, "o_orderkey").select("c", "p").distinct().localCheckpoint()
+    inter = stores.materialize(
+        o.join(l, "o_orderkey").select("c", "p").distinct(), "q162: customer-part edges"
+    )
     l0 = inter.filter(F.col("c") % 50 == 0).select("c").distinct()
     l1 = inter.join(l0, "c").select("p").distinct()
     l2 = (
@@ -1201,16 +1207,19 @@ def link_prediction_pairs(
     l = T(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), F.col("l_partkey").alias("p")
     )
-    inter = o.join(l, "o_orderkey").select("c", "p").distinct().localCheckpoint()
+    inter = stores.materialize(
+        o.join(l, "o_orderkey").select("c", "p").distinct(),
+        "link_prediction_pairs: customer-part edges",
+    )
     if part_degree_cap is not None:
         pdeg = inter.groupBy("p").agg(F.count(F.lit(1)).alias("pd"))
         # checkpoint the capped set for the same reason as q194's: it
         # feeds deg + both self-join sides, and the cap join otherwise
         # recomputes per consumer
-        inter = (
+        inter = stores.materialize(
             inter.join(pdeg.filter(F.col("pd") <= part_degree_cap), "p")
-            .select("c", "p")
-            .localCheckpoint()
+            .select("c", "p"),
+            "link_prediction_pairs: capped edges",
         )
     deg = inter.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     a = inter.select(F.col("c").alias("c1"), "p")
@@ -1368,7 +1377,9 @@ def q194_link_prediction_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame
     l = T(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), F.col("l_partkey").alias("p")
     )
-    inter = o.join(l, "o_orderkey").select("c", "p").distinct().localCheckpoint()
+    inter = stores.materialize(
+        o.join(l, "o_orderkey").select("c", "p").distinct(), "q194: customer-part edges"
+    )
     pdeg = inter.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("pd"))
     hist = pdeg.groupBy(F.col("pd").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
@@ -1390,12 +1401,12 @@ def q194_link_prediction_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame
     # capped feeds three consumers (deg + both self-join sides); without a
     # checkpoint the inter⋈pdeg join recomputes per consumer — measured
     # min-of-2 at sf0.1: 5.58 s → 4.99 s, cold pass 9.98 s → 5.65 s
-    capped = (
+    capped = stores.materialize(
         inter.join(pdeg, "p")
         .crossJoin(F.broadcast(cap))
         .filter(F.col("pd") <= F.col("derived_cap"))
-        .select("c", "p")
-        .localCheckpoint()
+        .select("c", "p"),
+        "q194: capped edges",
     )
     deg = capped.groupBy("c").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     a = capped.select(F.col("c").alias("c1"), "p")

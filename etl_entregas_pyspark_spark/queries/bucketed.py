@@ -148,10 +148,10 @@ def q150_bucketed_dedup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one row per distinct content; checkpointed — reused by the reps
     # join and the doc→rep mapping without re-executing the collapse
-    grp = (
+    grp = stores.materialize(
         fpdf.groupBy("fp")
-        .agg(F.min("doc_id").alias("rep_id"))
-        .localCheckpoint()
+        .agg(F.min("doc_id").alias("rep_id")),
+        "q150: fingerprint groups",
     )
     # bucketed side needs no exchange: grp's rep ids shuffle INTO the
     # corpus bucketing, corpus bytes stay put
@@ -178,19 +178,19 @@ def q150_bucketed_dedup_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = propagate_components(pairs).select(
         F.col("doc").alias("rep_id"), "component"
     )
-    clusters = (
+    clusters = stores.materialize(
         fpdf.join(grp, "fp")
         .join(labels, "rep_id", "left")
         .select(
             "doc_id",
             F.coalesce("component", "rep_id").alias("cluster_id"),
             "n_chars",
-        )
+        ),
         # TWO consumers (the canon window + the final cluster join):
         # un-materialized, the whole fingerprint→rep→label chain above —
         # including a second scan+md5 pass over the corpus — executed
         # twice (q158's multi-consumer rule, r16). Three skinny columns.
-        .localCheckpoint()
+        "q150: doc to representative",
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id")

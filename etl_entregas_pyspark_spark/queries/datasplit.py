@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
 from etl_entregas_pyspark_spark.queries.similarity import _md5_int_sql, md5_int
@@ -1451,12 +1452,12 @@ _LB_FRACS = "[" + ", ".join(
     "total, no window, linear in corpus tokens at any scale.",
 )
 def q247_length_bucket_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lens = (
+    lens = stores.materialize(
         T(spark, sf_dir, "documents")
         .select(
             F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens")
-        )
-        .localCheckpoint()  # two consumers: thresholds + assignment
+        ),
+        "q247: token lengths for thresholds + assignment",
     )
     fracs = F.array(
         *[F.lit(i / _LB_BUCKETS) for i in range(1, _LB_BUCKETS)]
@@ -1580,13 +1581,13 @@ _BATCH_SHARDS = 8    # parallel packing shards per bucket (batches never
 def q251_packed_batch_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    lens = (
+    lens = stores.materialize(
         T(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-        )
-        .localCheckpoint()  # two consumers: thresholds + assignment
+        ),
+        "q251: token lengths for thresholds + assignment",
     )
     fracs = F.array(
         *[F.lit(i / _LB_BUCKETS) for i in range(1, _LB_BUCKETS)]

@@ -81,7 +81,7 @@ def q151_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk = log.filter(
             (F.dayofmonth("ts") > lo) & (F.dayofmonth("ts") <= hi)
         )
-        store = merge_snapshot(store, chunk).localCheckpoint()
+        store = stores.materialize(merge_snapshot(store, chunk), "q151: merged store per chunk")
         lo = hi
     return snapshot_view(store)
 
@@ -250,7 +250,9 @@ def _disordered_cut(spark: SparkSession, sf_dir: str):
     sentinel 2 stays open forever)."""
     from pyspark.sql.window import Window as W
 
-    e = E(spark, sf_dir).select(*_DISORDER_COLS).localCheckpoint()
+    e = stores.materialize(
+        E(spark, sf_dir).select(*_DISORDER_COLS), "_disordered_cut: event slice source"
+    )
     a = e.filter(F.dayofmonth("ts") <= 10)
     b1 = e.filter((F.dayofmonth("ts") > 20) & (F.dayofmonth("ts") <= 25))
     b2 = e.filter(F.dayofmonth("ts") > 25)
@@ -418,7 +420,7 @@ def _run_replay(spark: SparkSession, src: str, make_query, sink: str) -> DataFra
         q.stop()
         # materialize off the transient memory sink so the returned frame
         # survives the next invocation's queryName reuse
-        return spark.table(sink).localCheckpoint()
+        return stores.materialize(spark.table(sink), "_run_replay: memory sink snapshot")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if ckpt is not None:

@@ -50,6 +50,7 @@ from etl_entregas_pyspark_spark.queries.similarity import (
     ivf_centroids,
     probe_queries,
     q8_codes,
+    shortlist_recall,
     topk,
 )
 
@@ -124,7 +125,7 @@ def _ivf_probe(
         )
     )
     if prune:
-        probes = probes.localCheckpoint()
+        probes = stores.materialize(probes, "_ivf_probe: probes for bucket prune")
         buckets = [
             r["centroid_id"]
             for r in probes.select("centroid_id").distinct().collect()
@@ -365,9 +366,10 @@ def ivf_membership_batch(
         return False  # fence EARLY: skip the assignment work entirely
     spark = batch_df.sparkSession
     cent = read_parquet(spark, centroids_path)
-    assigned = ivf_assign(
-        batch_df.select("vec_id", "embedding"), cent, keep=1
-    ).localCheckpoint()  # decide BEFORE touching the store
+    assigned = stores.materialize(
+        ivf_assign(batch_df.select("vec_id", "embedding"), cent, keep=1),
+        "ivf_membership_batch: assigned batch",
+    )  # decide BEFORE touching the store
     return store.append(assigned, int(epoch_id))
 
 
@@ -822,15 +824,15 @@ def q230_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = probe_queries(e)
     # probe ranks 1..8 per query (keep d2 ordering as pr via re-rank)
     wq = Window.partitionBy("vec_id").orderBy(F.col("d2"), F.col("centroid_id"))
-    probes = (
+    probes = stores.materialize(
         ivf_assign(queries, cent, keep=8)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             "centroid_id",
             F.row_number().over(wq).alias("pr"),
-        )
-        .localCheckpoint()
+        ),
+        "q230: ranked probes",
     )
     cand = read_parquet(spark, os.path.join(idx, "cand"))
     cos = cosine("q_emb", "embedding")
@@ -1129,7 +1131,7 @@ def _sq8_admission(
     idx = ensure_ivf_index(spark, sf_dir)
     cent = read_parquet(spark, os.path.join(idx, "centroids"))
     e = T(spark, sf_dir, "embeddings")
-    probes = (
+    probes = stores.materialize(
         ivf_assign(probe_queries(e), cent, keep=_NPROBE)
         .drop("d2")
         .select(
@@ -1137,8 +1139,8 @@ def _sq8_admission(
             F.col("embedding").alias("q_emb"),
             q8_codes(F.col("embedding")).alias("q8_q"),
             "centroid_id",
-        )
-        .localCheckpoint()
+        ),
+        "_sq8_admission: probes for scan + rescore",
     )
     cand_codes = read_parquet(spark, os.path.join(idx, "cand")).select(
         "vec_id",
@@ -1465,7 +1467,6 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
         .join(F.broadcast(short_q), "neighbor_id")
         .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
-        .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # TRUTH arm — the full-precision probed ranking (the audit's
     # necessary float scan, exactly q230's brute-leg contract): the
@@ -1484,46 +1485,8 @@ def q236_sq8_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(),
         F.col("neighbor_id"),
         rank="exact_rank",
-    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    # one rescored frame fans out to every budget: a literal explode, no
-    # re-probe per level
-    fan = resc.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _SQ8_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    # the cost axis: ACTUAL rescored rows per budget (r13 ADVICE #3)
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
     )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+    return shortlist_recall(resc, truth, _SQ8_SWEEP_DEPTHS)
 
 
 # -- q238: the derived centroid-count plan — C = f(corpus) as model state ----
@@ -1532,7 +1495,6 @@ from etl_entregas_pyspark_spark.queries.relational import _rnd_sql, rnd  # noqa:
 from etl_entregas_pyspark_spark.queries.similarity import (  # noqa: E402
     _IVF_C_DIVISOR,
     _IVF_C_FLOOR,
-    ivf_centroid_count,
 )
 
 _Q238_C_SQL = (
@@ -1655,10 +1617,10 @@ def ensure_ivfpq_index(
         e = T(spark, sf_dir, "embeddings")
         cent = ivf_centroids(e)
         cent.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-        # residuals feed BOTH the codebook and the encode pass
-        resid = _ivfpq_residuals(
-            e.filter(F.col("vec_id") >= 16), cent
-        ).localCheckpoint()
+        resid = stores.materialize(
+            _ivfpq_residuals(e.filter(F.col("vec_id") >= 16), cent),
+            "ensure_ivfpq_index: residuals for codebook + encode",
+        )
         (
             _pq_subspaces(
                 resid.filter(F.col("vec_id") < 16 + _PQ_K), "cb_vec", "cw"
@@ -1747,7 +1709,7 @@ def _ivfpq_admission(
     cb = read_parquet(spark, os.path.join(idx, "codebook"))
     e = T(spark, sf_dir, "embeddings")
     qset = probe_queries(e)
-    probes = (
+    probes = stores.materialize(
         ivf_assign(qset, cent, _NPROBE)
         .drop("d2")
         .join(F.broadcast(cent), "centroid_id")
@@ -1758,8 +1720,8 @@ def _ivfpq_admission(
             F.floor(dot(F.col("embedding"), F.col("c_emb")) * _PQ_SCALE)
             .cast("long")
             .alias("cdot"),
-        )
-        .localCheckpoint()  # consumers: bucket pull, scan join, rescore
+        ),
+        "_ivfpq_admission: probes for bucket pull + scan + rescore",
     )
     # <= C-row model-state pull: which inverted lists to open
     buckets = [
@@ -2232,7 +2194,7 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted centroids.
     idx = ensure_ivf_index(spark, sf_dir)
     cent = read_parquet(spark, os.path.join(idx, "centroids"))
-    probed_n = (
+    probed_n = stores.materialize(
         read_parquet(spark, os.path.join(idx, "cand"))
         .select("vec_id", "centroid_id")
         .join(
@@ -2243,11 +2205,11 @@ def q244_ann_engine_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "centroid_id",
         )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("probed_n"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("probed_n")),
         # one row, THREE consumers (the ivf_flat/ivf_sq8/ivfpq cost rows
         # below): materialize once or the cand scan + probe join runs
         # per union branch (q158's multi-consumer rule, r16)
-        .localCheckpoint()
+        "q244: probed candidate count",
     )
     full_n = (
         corpus.agg(F.count(F.lit(1)).alias("c_n"))
@@ -2647,7 +2609,7 @@ def ensure_refreshed_ivfpq_index(
             F.col("centroid_id").cast("long").alias("centroid_id"),
             "codes",
         )
-        resid = (
+        resid = stores.materialize(
             stored.join(e, "vec_id")
             .join(F.broadcast(cent), "centroid_id")
             .select(
@@ -2659,8 +2621,8 @@ def ensure_refreshed_ivfpq_index(
                     "c_emb",
                     lambda x, y: x.cast("double") - y.cast("double"),
                 ).alias("rv"),
-            )
-            .localCheckpoint()  # two consumers: the Lloyd step + the re-encode
+            ),
+            "ensure_ivfpq_refresh: residuals for Lloyd step + re-encode",
         )
         # one Lloyd step: refreshed codeword = scaled-int element-wise mean
         # of the member residual subvectors under the COMMITTED codes
@@ -2893,9 +2855,10 @@ def ivfpq_codes_batch(
     spark = batch_df.sparkSession
     cent = read_parquet(spark, os.path.join(idx_root, "centroids"))
     cb = read_parquet(spark, os.path.join(idx_root, "codebook"))
-    live = _ivfpq_encode(
-        _ivfpq_residuals(batch_df.select("vec_id", "embedding"), cent), cb
-    ).localCheckpoint()  # decide BEFORE touching the store
+    live = stores.materialize(
+        _ivfpq_encode(_ivfpq_residuals(batch_df.select("vec_id", "embedding"), cent), cb),
+        "ivfpq_codes_batch: encoded batch",
+    )  # decide BEFORE touching the store
     return store.append(live.select(*IVFPQ_CODE_COLS), int(epoch_id))
 
 
@@ -3104,7 +3067,8 @@ def q250_ann_engine_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("est_scan_bytes"),
         "recall_at_k",
-    ).localCheckpoint()
+    )
+    priced = stores.materialize(priced, "q250: priced engines")
     # ^ four rows, TWO consumers (the any_fits aggregate and the ranked
     # select below). Un-materialized, the ENTIRE q244 matrix — the
     # brute-force truth arm plus all four engine subtrees — executed
@@ -3261,7 +3225,6 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
         )
         .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
-        .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # truth arm: full-precision PROBED ranking — membership from the
     # persisted index, id-keyed float pull, probed partitions only
@@ -3282,43 +3245,8 @@ def q253_ivfpq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(),
         F.col("neighbor_id"),
         rank="xr",
-    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    fan = resc.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _SQ8_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
     )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+    return shortlist_recall(resc, truth, _SQ8_SWEEP_DEPTHS)
 
 
 # -- q254: SQ8 scalar-quantizer drift audit — the range/clip instrument -----
@@ -3532,7 +3460,7 @@ def _register_q264() -> None:
             rank="rn",
             keep=(F.col("embedding").alias("c_emb"),),
         )
-        return mmr_greedy(pool.drop("rn").localCheckpoint())
+        return mmr_greedy(stores.materialize(pool.drop("rn"), "q264: MMR candidate pool"))
 
 
 _register_q264()

@@ -174,10 +174,10 @@ def _batch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("h", md5_int(F.col("item")) % _P)
     )
-    return (
+    return stores.materialize(
         ex.groupBy("doc_id")
-        .agg(*_minhash_aggs(), F.collect_list("item").alias("items"))
-        .localCheckpoint()
+        .agg(*_minhash_aggs(), F.collect_list("item").alias("items")),
+        "_batch_signatures: band probe + verify payload",
     )
 
 
@@ -231,17 +231,17 @@ def _verify_and_emit(
     batch shingles ride along in ``per_batch``; corpus shingles are
     recomputed for MATCHED docs only through a broadcast semi-join, so
     ``documents.text`` is touched for O(matches) corpus rows."""
-    cand = cand.localCheckpoint()
+    cand = stores.materialize(cand, "_verify_and_emit: candidate pairs")
     corpus_ids = (
         cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
         .filter(F.col("doc_id") % _BATCH_MOD != 0)
         .distinct()
     )
-    corpus_payload = (
+    corpus_payload = stores.materialize(
         T(spark, sf_dir, "documents")
         .join(F.broadcast(corpus_ids), "doc_id")
-        .select("doc_id", word_shingles(F.col("text")).alias("items"))
-        .localCheckpoint()
+        .select("doc_id", word_shingles(F.col("text")).alias("items")),
+        "_verify_and_emit: corpus shingles",
     )
     payload = per_batch.select("doc_id", "items").unionByName(corpus_payload)
 
@@ -347,7 +347,9 @@ def _q211_oracle() -> str:
     "the batch — nothing corpus-sized moves.",
 )
 def q211_ingest_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = q210_incremental_lsh_probe_persisted(spark, sf_dir).localCheckpoint()
+    pairs = stores.materialize(
+        q210_incremental_lsh_probe_persisted(spark, sf_dir), "q211: probe pairs"
+    )
     batch = (
         T(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _BATCH_MOD == 0)
@@ -555,7 +557,9 @@ def q221_ingest_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_band_index,
     )
 
-    route = q211_ingest_apply(spark, sf_dir).localCheckpoint()
+    route = stores.materialize(
+        q211_ingest_apply(spark, sf_dir), "q221: routed batch"
+    )  # decide BEFORE touching the store
     store = stores.path(spark, sf_dir, "lsh_commit_store")
     seed_index_store(spark, ensure_band_index(spark, sf_dir), store)
     keepers = route.filter(F.col("action") == "keep").select("doc_id")
@@ -980,7 +984,7 @@ def q235_lsh_replan_from_signatures(
     cand, _ = banded_pairs(
         band_long, ("band_id", "band_hash"), sig_from_minhash(sigs)
     )
-    cand = cand.localCheckpoint()
+    cand = stores.materialize(cand, "q235: candidate pairs for id pull + pair join")
     # verify arm: re-shingle ONLY the colliding docs (candidates << corpus)
     ids = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")

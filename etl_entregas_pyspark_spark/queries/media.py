@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.multimodal import decode_media
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
@@ -208,10 +209,10 @@ def q183_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             media, target=min(8, spark.sparkContext.defaultParallelism)
         )
     )
-    grp = (
+    grp = stores.materialize(
         hashed.groupBy("phash")
-        .agg(F.min("media_id").alias("rep_id"), F.count(F.lit(1)).alias("sz"))
-        .localCheckpoint()
+        .agg(F.min("media_id").alias("rep_id"), F.count(F.lit(1)).alias("sz")),
+        "q183: phash groups",
     )
     bands = grp.select(
         "phash",
@@ -224,7 +225,7 @@ def q183_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band_val"),
     )
     a, b = bands.alias("a"), bands.alias("b")
-    cand = (
+    cand = stores.materialize(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -232,8 +233,8 @@ def q183_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.phash") < F.col("b.phash")),
         )
         .select(F.col("a.phash").alias("pa"), F.col("b.phash").alias("pb"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "q183: band candidate pairs",
     )
     near = cand.filter(
         F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))) <= _PH_MAXDIST

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T
 from etl_entregas_pyspark_spark.queries.similarity import _cosine_sql, cosine, query_rank, topk
@@ -196,7 +197,7 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
     broadcast join against the picked set, (query, candidate) max-sim
     partial agg, query-partitioned argmax, localCheckpoint'd."""
     lam, mu = _MMR_LAM, round(1 - _MMR_LAM, 10)
-    selected = (
+    selected = stores.materialize(
         pool.select("*", query_rank(F.desc("rel"), F.asc("neighbor_id")).alias("rn"))
         .filter(F.col("rn") == 1)
         .select(
@@ -207,8 +208,8 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
             F.lit(0.0).alias("maxsim"),
             (F.lit(lam) * F.col("rel") - F.lit(mu) * F.lit(0.0)).alias("mmr"),
             "c_emb",
-        )
-        .localCheckpoint()
+        ),
+        "mmr_greedy: first pick",
     )
     sim = cosine("c_emb", "s_emb")
     for r in range(2, _MMR_K + 1):
@@ -244,7 +245,7 @@ def mmr_greedy(pool: DataFrame) -> DataFrame:
                 "c_emb",
             )
         )
-        selected = selected.unionByName(pick).localCheckpoint()
+        selected = stores.materialize(selected.unionByName(pick), "mmr_greedy: selected per round")
     return selected.select(
         "query_id",
         "sel_rank",
@@ -292,4 +293,4 @@ def q262_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.asc("neighbor_id"),
         rank="rn",
     )
-    return mmr_greedy(pool.drop("rn").localCheckpoint())
+    return mmr_greedy(stores.materialize(pool.drop("rn"), "q262: MMR candidate pool"))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _rnd_sql, rnd, spread_if_narrow
 from etl_entregas_pyspark_spark.queries.similarity import _sh_sql, word_shingles
@@ -107,7 +108,10 @@ def setjoin_pairs(docs: DataFrame, tau: float = _TAU) -> DataFrame:
     # exact collapse on the raw text (NOT lowered: tokens are case-
     # sensitive, so only byte-identical texts may share a representative)
     fpdf = docs.select("doc_id", F.md5(F.col("text")).alias("fp"))
-    grp = fpdf.groupBy("fp").agg(F.min("doc_id").alias("rep_id")).localCheckpoint()
+    grp = stores.materialize(
+        fpdf.groupBy("fp").agg(F.min("doc_id").alias("rep_id")),
+        "setjoin_pairs: fingerprint groups",
+    )
     doc2rep = fpdf.join(grp, "fp").select("doc_id", "rep_id")
     reps = docs.join(
         grp.select(F.col("rep_id").alias("doc_id")), "doc_id"
@@ -130,7 +134,8 @@ def setjoin_pairs(docs: DataFrame, tau: float = _TAU) -> DataFrame:
         "tok",
         F.row_number().over(w_pos).alias("pos"),
         F.count(F.lit(1)).over(w_sz).alias("sz"),
-    ).localCheckpoint()
+    )
+    ordered = stores.materialize(ordered, "setjoin_pairs: ordered tokens")
     prefix = ordered.filter(
         F.col("pos") <= F.col("sz") - F.ceil(F.lit(tau) * F.col("sz")) + 1
     )
@@ -248,17 +253,17 @@ def q158_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured growth exponent alpha = 0.79 over 1x/2x/4x replica layouts
     # (tools/growth_exponent.py, SCALE.md round-9 table) — the prefix
     # filter holds candidate growth linear-ish, nothing pairwise hides here
-    toks = (
+    toks = stores.materialize(
         # single-split testdata: spread tokenization (SCALE.md note);
         # split-aware — skipped on an already-wide scan (r15 VERDICT #1)
         spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
-        .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("tok"))
+        .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("tok")),
         # FOUR consumers (freq, ranked, index side, verify payload):
         # materialize the tokenize stage once — q152's `ordered` rule.
         # Un-checkpointed this re-executed per consumer and the plan's
         # duplicated exchanges made the row bimodal (4.6 s vs 8–22 s
         # across r15 batteries/isolations; stable after)
-        .localCheckpoint()
+        "q158: tokens for freq + ranked + index + verify",
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ranked = toks.join(freq, "tok")

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _dsum_sql, _rnd_sql, rnd, spread_if_narrow
@@ -102,6 +103,57 @@ def topk(df: DataFrame, k: int, *order: Column, rank: str = "rank") -> DataFrame
     ``tests/test_plan_lint.py`` pins for every registered query. ``order``
     must end in a unique tie-break so the ranks are deterministic."""
     return df.select("*", query_rank(*order).alias(rank)).filter(F.col(rank) <= k)
+
+
+def shortlist_recall(rescored: DataFrame, truth: DataFrame, depths) -> DataFrame:
+    """The rescore-budget sweep's table: for each shortlist depth R in
+    ``depths``, the ACTUAL rescored rows (a query whose probed buckets hold
+    fewer than R candidates counts what it rescored) and the recall of the
+    exact-cosine top-``_IVF_TOPK`` among the first R against ``truth``.
+
+    ``rescored`` is the max-depth pool (query_id, neighbor_id, srn,
+    cosine), materialized once for its two consumers, the cost aggregate
+    and the arank window; every smaller depth is a filter on it, fanned
+    out by a literal explode. ``truth`` holds each query's true top-k
+    (query_id, neighbor_id)."""
+    rescored = stores.materialize(rescored, "shortlist_recall: cost aggregate + arank window")
+    truth = truth.select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
+    fan = rescored.withColumn(
+        "shortlist",
+        F.explode(F.array(*[F.lit(d) for d in depths])),
+    ).filter(F.col("srn") <= F.col("shortlist"))
+    cost = fan.groupBy("shortlist").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
+        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
+    )
+    wa = Window.partitionBy("shortlist", "query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    approx = fan.select(
+        "shortlist",
+        "query_id",
+        "neighbor_id",
+        F.row_number().over(wa).alias("arank"),
+    ).filter(F.col("arank") <= _IVF_TOPK)
+    hits = (
+        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
+        .groupBy("shortlist")
+        .agg(F.count("is_true").cast("bigint").alias("hits"))
+    )
+    return (
+        cost.join(hits, "shortlist")
+        .select(
+            "shortlist",
+            "n_queries",
+            "n_rescored",
+            "hits",
+            (
+                F.col("hits").cast("double")
+                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
+            ).alias("recall_at_k"),
+        )
+        .orderBy("shortlist")
+    )
 
 
 def md5_int(col: Column) -> Column:
@@ -424,7 +476,7 @@ def banded_pairs(
         # cap histogram, the size-tag join, the rep-grid check): without
         # this the corpus-scale band_long aggregation re-executes per
         # consumer (measured 2.5x on q233's 24-band stage).
-        sizes = sizes.localCheckpoint()
+        sizes = stores.materialize(sizes, "banded_pairs: bucket sizes")
     if not valve:
         buckets = (
             band_long.join(sizes.select(*key), key)
@@ -535,7 +587,7 @@ def lsh_candidates(ex: DataFrame, block_cols: tuple[str, ...] = ()) -> tuple[Dat
     whole-stage-codegen'd with map-side partial aggregation.
     """
     block = list(block_cols)
-    per_doc = (
+    per_doc = stores.materialize(
         ex.groupBy("doc_id", *block)
         .agg(
             *[
@@ -543,8 +595,8 @@ def lsh_candidates(ex: DataFrame, block_cols: tuple[str, ...] = ()) -> tuple[Dat
                 for j in range(N_HASHES)
             ],
             F.collect_list("item").alias("items"),
-        )
-        .localCheckpoint()
+        ),
+        "lsh_candidates: per-doc signatures",
     )
     band_long = (
         per_doc.select("doc_id", *block, *_band_hashes())
@@ -656,7 +708,7 @@ def q53_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand, _ = banded_pairs(
         _band_long(sigs), ("band_id", "band_hash"), sig_from_minhash(sigs)
     )
-    cand = cand.localCheckpoint()  # two consumers: id pull + pair join
+    cand = stores.materialize(cand, "q53: candidate pairs for id pull + pair join")
     # verify arm: re-shingle ONLY the colliding docs (candidates << corpus)
     ids = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
@@ -1128,10 +1180,10 @@ def q93_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = F.md5(F.lower(F.col("text")))
     # one row per distinct content; materialized once, reused by the reps
     # join, the identical-pair count, and both expansion joins
-    grp = (
+    grp = stores.materialize(
         docs.groupBy(fp.alias("fp"))
-        .agg(F.min("doc_id").alias("rep_id"), F.count("*").alias("sz"))
-        .localCheckpoint()
+        .agg(F.min("doc_id").alias("rep_id"), F.count("*").alias("sz")),
+        "q93: fingerprint groups",
     )
     reps = docs.join(grp.select(F.col("rep_id").alias("doc_id")), "doc_id")
     ex = (
@@ -1342,7 +1394,7 @@ def q106_kmeans_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min(F.struct(F.col("d"), F.col("centroid_id"))).alias("s"))
             .select("vec_id", F.col("s.centroid_id").alias("centroid_id"))
         )
-        cent = (
+        cent = stores.materialize(
             qe.join(assign, "vec_id")
             .groupBy("centroid_id", "pos")
             .agg(F.sum("qx").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -1351,8 +1403,8 @@ def q106_kmeans_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pos",
                 F.expr("(2 * s + n) div (2 * n)").alias("c"),
                 F.col("n"),
-            )
-            .localCheckpoint()
+            ),
+            "q106: centroids per round",
         )
     return cent.select(
         "centroid_id", "pos", F.col("c").alias("coord_q"), F.col("n").alias("n_members")
@@ -1763,7 +1815,8 @@ def semdedup_prune(
         "embedding",
         "centroid_id",
         norm("embedding").alias("nrm"),
-    ).localCheckpoint()
+    )
+    assigned = stores.materialize(assigned, "semdedup_prune: assignment grid")
     # SALT the centroid-keyed pair join (guide §2.5 skew): with K
     # centroids the join would run in at most K tasks — K=8 leaves 3/4 of
     # a 32-core stage idle and a hot cluster becomes one straggler task.
@@ -2025,7 +2078,8 @@ def label_noise_flags(
         "centroid_id",
         "label",
         norm("embedding").alias("nrm"),
-    ).localCheckpoint()
+    )
+    labeled = stores.materialize(labeled, "label_noise_flags: assignment grid")
     # salt the centroid-keyed kNN join exactly like semdedup_prune's pair
     # stage (guide §2.5): K buckets cap the stage at K tasks and leave a
     # hot cluster as one straggler; the deterministic per-row salt splits
@@ -2180,12 +2234,12 @@ def q192_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-collecting from the exploded stream (r14 session, SCALE.md
     # local-mode caveats) — and docs with no shingles drop out of the
     # groupBy exactly like the oracle's len(sh) > 0 gate
-    per_doc = (
+    per_doc = stores.materialize(
         spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
         .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("item"))
         .groupBy("doc_id")
-        .agg(F.collect_list("item").alias("items"))
-        .localCheckpoint()
+        .agg(F.collect_list("item").alias("items")),
+        "q192: per-doc shingles",
     )
 
     # LSH arm — q53's exact verify over band candidates
@@ -2196,12 +2250,12 @@ def q192_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.size("sh_b")
         - F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     )
-    lsh = (
+    lsh = stores.materialize(
         pairs.filter(l_inter / l_union >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.lit(1).alias("hit"))
+        .select("doc_a", "doc_b", F.lit(1).alias("hit")),
         # two consumers (the recall join and the n_lsh_pairs count):
         # materialize the banded+verified arm once
-        .localCheckpoint()
+        "q192: verified LSH pairs for recall join + count",
     )
 
     # truth arm — exhaustive shingle-blocked: shingles are distinct per
@@ -2536,7 +2590,7 @@ def q203_incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-doc signatures: in production the corpus rows of this frame are
     # the standing index table (written once at ingest), not recomputed
-    per_doc = (
+    per_doc = stores.materialize(
         ex.groupBy("doc_id")
         .agg(
             *[
@@ -2544,8 +2598,8 @@ def q203_incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for j in range(N_HASHES)
             ],
             F.collect_list("item").alias("items"),
-        )
-        .localCheckpoint()
+        ),
+        "q203: per-doc signatures",
     )
     band_long = (
         per_doc.select("doc_id", *_band_hashes())
@@ -2868,8 +2922,8 @@ def _q215_parts(
 )
 def q215_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored, exact, queries = _q215_parts(spark, sf_dir)
-    scored = scored.localCheckpoint()
-    exact = exact.localCheckpoint()
+    scored = stores.materialize(scored, "q215: scored probes")
+    exact = stores.materialize(exact, "q215: exact top-k")
     ivf_parts = []
     for np_ in _RECALL_NPROBES:
         ivf_parts.append(
@@ -3068,20 +3122,18 @@ def q233_lsh_band_plan_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_from_minhash(sigs),
         out_cols=("rpb",),
     )
-    # two consumers (the hit join and the per-plan cost aggregate): the
-    # valved stage is worth materializing once, not re-running
-    cand = cand.localCheckpoint()
+    cand = stores.materialize(cand, "q233: valved candidates for hit join + cost aggregate")
 
     # truth arm — q192's exhaustive shingle-blocked exact-Jaccard pairs:
     # the audit arm owns the single text pass (explode-then-collect
     # checkpoint — q192's shape; the exact same shingle sets the store
     # was built from)
-    per_doc = (
+    per_doc = stores.materialize(
         spread_if_narrow(T(spark, sf_dir, "documents"), "doc_id")
         .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("item"))
         .groupBy("doc_id")
-        .agg(F.collect_list("item").alias("items"))
-        .localCheckpoint()
+        .agg(F.collect_list("item").alias("items")),
+        "q233: per-doc shingles",
     )
     ex2 = per_doc.select("doc_id", F.explode("items").alias("s"))
     a, b = ex2.alias("a"), ex2.alias("b")
@@ -3331,7 +3383,10 @@ def q237_lsh_bucket_valve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min((F.col("h") * _A[j] + _B[j]) % _P).alias(f"mh{j}")
             for j in range(N_HASHES)
         ]
-    ).localCheckpoint()  # three consumers: seed pick, band explode, sigs
+    )
+    base_sigs = stores.materialize(
+        base_sigs, "q237: signatures for seed pick + band explode + sigs"
+    )
     # MinHash is a pure function of the text, and every replica carries
     # the seed's text verbatim — so replicate the seed's computed
     # SIGNATURE, not the text: the pre-r15 form re-shingled and
@@ -3477,7 +3532,10 @@ def q239_lsh_valve_off_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min((F.col("h") * _A[j] + _B[j]) % _P).alias(f"mh{j}")
             for j in range(N_HASHES)
         ]
-    ).localCheckpoint()
+    )
+    base_sigs = stores.materialize(
+        base_sigs, "q239: signatures for seed pick + band explode + sigs"
+    )
     seed_sig = base_sigs.orderBy("doc_id").limit(1).select(
         *[F.col(f"mh{j}") for j in range(N_HASHES)]
     )
@@ -3622,14 +3680,14 @@ def _pq_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     qset = probe_queries(e)
     # codebook: a deterministic corpus sample's subvectors (16 codewords
     # per subspace), broadcast everywhere — K x M x 8 doubles of model state
-    cb = (
+    cb = stores.materialize(
         _pq_subspaces(
             e.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 16 + _PQ_K)),
             "cb_vec",
             "cw",
         )
-        .select("m", (F.col("cb_vec") - 16).alias("k"), "cw")
-        .localCheckpoint()  # two consumers: encode + LUT
+        .select("m", (F.col("cb_vec") - 16).alias("k"), "cw"),
+        "_pq_scores: codebook for encode + LUT",
     )
     d2 = F.aggregate(
         F.zip_with(
@@ -3847,7 +3905,6 @@ def q241_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ranked), "neighbor_id")
         .join(q_emb, "query_id")
         .select("query_id", "neighbor_id", "srn", cos.alias("cosine"))
-        .localCheckpoint()  # two consumers: cost aggregate + arank window
     )
     # truth arm: brute-force exact top-k (queries broadcast into the scan)
     truth = topk(
@@ -3858,40 +3915,5 @@ def q241_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cosine").desc(),
         F.col("neighbor_id"),
         rank="xr",
-    ).select("query_id", "neighbor_id", F.lit(True).alias("is_true"))
-    fan = rescored.withColumn(
-        "shortlist",
-        F.explode(F.array(*[F.lit(d) for d in _PQ_SWEEP_DEPTHS])),
-    ).filter(F.col("srn") <= F.col("shortlist"))
-    cost = fan.groupBy("shortlist").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rescored"),
-        F.countDistinct("query_id").cast("bigint").alias("n_queries"),
     )
-    wa = Window.partitionBy("shortlist", "query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    approx = fan.select(
-        "shortlist",
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(wa).alias("arank"),
-    ).filter(F.col("arank") <= _IVF_TOPK)
-    hits = (
-        approx.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
-        .groupBy("shortlist")
-        .agg(F.count("is_true").cast("bigint").alias("hits"))
-    )
-    return (
-        cost.join(hits, "shortlist")
-        .select(
-            "shortlist",
-            "n_queries",
-            "n_rescored",
-            "hits",
-            (
-                F.col("hits").cast("double")
-                / (F.col("n_queries").cast("double") * F.lit(_IVF_TOPK))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("shortlist")
-    )
+    return shortlist_recall(rescored, truth, _PQ_SWEEP_DEPTHS)

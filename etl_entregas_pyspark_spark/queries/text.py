@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _dsum_sql, _rnd_sql, dsum, rnd, spread_if_narrow
 
@@ -2231,7 +2232,7 @@ def _q257_oracle() -> str:
 def _bpe_vocab0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(seq, freq) wrapped-symbol vocabulary — the ONE corpus-scale
     shuffle; everything downstream is vocabulary-bounded."""
-    return (
+    return stores.materialize(
         T(spark, sf_dir, "documents")
         .select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
         .filter(F.col("word").rlike(_BPE_WORD_RE))
@@ -2240,8 +2241,8 @@ def _bpe_vocab0(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.rtrim(F.regexp_replace("word", "(.)", "_$1_ ")).alias("seq"),
             "freq",
-        )
-        .localCheckpoint()
+        ),
+        "_bpe_vocab0: initial vocabulary",
     )
 
 
@@ -2257,21 +2258,21 @@ def _bpe_best(vocab: DataFrame, t: int) -> DataFrame:
             lambda a, b: F.concat(a, F.lit(" "), b),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return (
+    return stores.materialize(
         vocab.select(F.explode(pairs).alias("pair"), "freq")
         .groupBy("pair")
         .agg(F.sum("freq").alias("weight"))
         .orderBy(F.desc("weight"), F.asc("pair"))
         .limit(1)
-        .select(F.lit(t).alias("merge_round"), "pair", "weight")
-        .localCheckpoint()
+        .select(F.lit(t).alias("merge_round"), "pair", "weight"),
+        "_bpe_best: best pair per round",
     )
 
 
 def _bpe_apply(vocab: DataFrame, best: DataFrame) -> DataFrame:
     """Apply the mined rule via a BROADCAST 1-row crossJoin + replace()
     (no driver round-trip), checkpointed so plan depth stays constant."""
-    return (
+    return stores.materialize(
         vocab.crossJoin(F.broadcast(best.select("pair")))
         .select(
             F.replace(
@@ -2280,8 +2281,8 @@ def _bpe_apply(vocab: DataFrame, best: DataFrame) -> DataFrame:
                 F.replace(F.col("pair"), F.lit("_ _"), F.lit("")),
             ).alias("seq"),
             "freq",
-        )
-        .localCheckpoint()
+        ),
+        "_bpe_apply: vocabulary per round",
     )
 
 

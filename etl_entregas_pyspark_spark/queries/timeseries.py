@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.queries.events import E
 from etl_entregas_pyspark_spark.queries.registry import register
 from etl_entregas_pyspark_spark.queries.relational import T, _dsum_sql, _rnd_sql, dsum, rnd
@@ -582,8 +583,7 @@ _SLIDE_BUCKETS = 64
 )
 def q174_sliding_distinct_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, deltas = _sliding_deltas(E(spark, sf_dir))
-    # checkpointed: bounds, partials, and the in-bucket window all reuse it
-    deltas = deltas.localCheckpoint()
+    deltas = stores.materialize(deltas, "q174: deltas for bounds + partials + window")
     bounds = deltas.groupBy("event_type").agg(
         F.min("tm").alias("_lo"), F.max("tm").alias("_hi")
     )

@@ -2,7 +2,8 @@
 as built. The persisted IVF, IVF-PQ and LSH indexes, the epoch-fenced
 stores, the q150 bucketed table and the replays' slice directories all get
 their location from ``path`` and are built through ``ensure``
-(SCALE.md "Standing stores").
+(SCALE.md "Standing stores"). Every in-query intermediate is cut through
+``materialize`` (SCALE.md "Materialization").
 
 - Path: ``<gettempdir()>/<name>_<application id>_<sf_dir tag>``, both ids
   reduced to ``[A-Za-z0-9_]``, so two sessions never share a store and one
@@ -70,6 +71,20 @@ def ensure(
     with _LOCK:
         BUILDS[root] += 1
     return root
+
+
+def materialize(df, reason: str):
+    """``df.localCheckpoint()``, with the checkpoint's eager job tagged
+    ``materialize:<reason>`` (``reason`` has no commas: Spark joins a
+    job's tags with them). The thread's job tags are restored afterwards,
+    also when the checkpoint raises."""
+    sc = df.sparkSession.sparkContext
+    tag = f"materialize:{reason}"
+    sc.addJobTag(tag)
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.removeJobTag(tag)
 
 
 @atexit.register

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_entregas_pyspark_spark import stores
 from etl_entregas_pyspark_spark.io.readers import read_parquet
 from etl_entregas_pyspark_spark.streaming.epoch_store import (
     POINTER as _POINTER,
@@ -289,7 +290,9 @@ def band_index_batch(
         )
         drops = hit_old.union(hit_batch) if hit_old is not None else hit_batch
         sigs = sigs.join(drops.distinct(), "doc_id", "left_anti")
-    sigs = sigs.localCheckpoint()  # decide BEFORE touching the store
+    sigs = stores.materialize(
+        sigs, "band_index_batch: surviving signatures"
+    )  # decide BEFORE touching the store
     return store.append(sigs, int(epoch_id))
 
 
@@ -391,7 +394,9 @@ def upsert_batch_bucketed(
         return False
     manifest: dict[str, int] = dict(ptr.get("buckets", {}))
     spark = batch_df.sparkSession
-    batch = batch_df.withColumn("_bucket", _bucket_expr()).localCheckpoint()
+    batch = stores.materialize(
+        batch_df.withColumn("_bucket", _bucket_expr()), "upsert_batch_bucketed: bucketed batch"
+    )  # decide BEFORE touching the store
     # ≤ _N_SNAPSHOT_BUCKETS-row driver pull: the prune plan, not data
     touched = sorted(
         r["_bucket"] for r in batch.select("_bucket").distinct().collect()

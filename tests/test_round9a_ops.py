@@ -74,19 +74,13 @@ def test_derived_k_is_model_state_not_driver_state(spark, sf_dir, monkeypatch):
     still a distributed job, never a driver collect, but the final plan
     shows a checkpoint scan instead of the derivation. Neutralize the
     checkpoint (identity) so the full lineage is visible again and the
-    original in-plan assertions can check the same invariant. The patch
-    must hit the CONCRETE class (pyspark.sql.classic.dataframe.DataFrame)
-    — pyspark.sql.DataFrame is the abstract base in Spark 4 and its
-    subclass override would win the method lookup."""
-    import pyspark.sql.classic.dataframe as _cdf
-
+    original in-plan assertions can check the same invariant."""
+    from etl_entregas_pyspark_spark import stores
     from etl_entregas_pyspark_spark.queries.similarity import q199_semdedup_auto
 
     import re
 
-    monkeypatch.setattr(
-        _cdf.DataFrame, "localCheckpoint", lambda self, *a, **k: self
-    )
+    monkeypatch.setattr(stores, "materialize", lambda df, reason: df)
     plan = q199_semdedup_auto(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     # the centroid cutoff compares against the broadcast k_auto COLUMN,
     # not a folded literal — proof the K never touched the driver

@@ -1,7 +1,7 @@
 """The standing-store seam (``stores.py``): the only module that says where
-a persisted intermediate lives and when it counts as built. A
-``SimpleNamespace`` stands in for the session, so no test here starts
-Spark."""
+a persisted intermediate lives, when it counts as built, and how an
+in-query intermediate is materialized. A ``SimpleNamespace`` stands in for
+the session, so only the ``materialize`` test starts Spark."""
 
 import os
 import re
@@ -14,7 +14,7 @@ import pytest
 from etl_entregas_pyspark_spark import stores
 
 PACKAGE = Path(__file__).resolve().parent.parent / "etl_entregas_pyspark_spark"
-SEAM_ONLY = ("gettempdir(", ".applicationId", '"_SUCCESS"')
+SEAM_ONLY = ("gettempdir(", ".applicationId", '"_SUCCESS"', "localCheckpoint(")
 
 
 @pytest.fixture
@@ -114,3 +114,24 @@ def test_only_the_seam_places_and_gates_stores():
         or re.match(r"\s*\w*_BUILDS\b\s*[:=]", line)
     ]
     assert offenders == []
+
+
+def test_materialize_tags_its_job_and_restores_the_threads_tags(spark):
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    sc.addJobTag("caller")
+    try:
+        out = stores.materialize(df, "test: two consumers")
+        assert set(sc.getJobTags()) == {"caller"}
+        with pytest.raises(Exception, match="boom"):
+            stores.materialize(
+                spark.range(1).selectExpr("raise_error('boom') AS x"), "test: raises"
+            )
+        assert set(sc.getJobTags()) == {"caller"}
+    finally:
+        sc.removeJobTag("caller")
+    assert sorted(out.collect()) == sorted(df.collect())
+    assert "Scan ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
+    assert len(tracker.getJobIdsForTag("materialize:test: two consumers")) == 1
+    assert len(tracker.getJobIdsForTag("materialize:test: raises")) == 1
